@@ -53,9 +53,8 @@ def _index(spark: SparkSession, sf_dir: str):
         docs = spark.read.parquet(f"{key}/documents.parquet")
         # title = first 5 regex tokens of text (deterministic, SQL-replicable)
         docs = docs.withColumn("title", F.expr(TITLE_EXPR))
-        builder = IndexBuilder(ENGLISH_ANALYZER, grid=2048, head_df=512,
-                               salt_target=512, with_positions=True,
-                               fields=("text", "title"))
+        builder = IndexBuilder(ENGLISH_ANALYZER, grid=2048,
+                               with_positions=True, fields=("text", "title"))
         idx = builder.build(spark, docs).cache()
         _CACHE[key] = (docs, idx, Searcher(spark, idx, k1=K1, b=B))
     return _CACHE[key]
@@ -148,8 +147,8 @@ def _stem_searcher(spark, sf_dir, which: str) -> Searcher:
         derived = docs.select("doc_id", F.expr(_STEM_DERIVE_SQL).alias("text"))
         ana = (ENGLISH_STEM_ANALYZER if which == "porter"
                else ENGLISH_MINIMAL_ANALYZER)
-        idx = (IndexBuilder(ana, grid=2048, head_df=512, salt_target=512,
-                            with_positions=True).build(spark, derived)
+        idx = (IndexBuilder(ana, grid=2048, with_positions=True)
+               .build(spark, derived)
                .cache())
         _CACHE[key] = Searcher(spark, idx, k1=K1, b=B)
     return _CACHE[key]
@@ -172,8 +171,8 @@ def q_stem_override_topk(spark, sf_dir):
         ana = _dc_replace(ENGLISH_STEM_ANALYZER,
                           stem_overrides=(("merging", "mrg"),),
                           keyword_terms=frozenset({"tables"}))
-        idx = (IndexBuilder(ana, grid=2048, head_df=512, salt_target=512,
-                            with_positions=True).build(spark, derived)
+        idx = (IndexBuilder(ana, grid=2048, with_positions=True)
+               .build(spark, derived)
                .cache())
         _CACHE[key] = Searcher(spark, idx, k1=K1, b=B)
     return _topk(_CACHE[key], _should("mrg", "tables"))
@@ -317,8 +316,7 @@ def _payload_searcher(spark, sf_dir) -> Searcher:
     key = ("payload", sf_dir.rstrip("/"))
     if key not in _RAW_CACHE:
         docs = _raw_docs(spark, sf_dir)
-        idx = IndexBuilder(ENGLISH_ANALYZER, grid=2048, head_df=512,
-                           salt_target=512, with_positions=True,
+        idx = IndexBuilder(ENGLISH_ANALYZER, grid=2048, with_positions=True,
                            payload="position").build(spark, docs).cache()
         _RAW_CACHE[key] = Searcher(spark, idx, k1=K1, b=B)
     return _RAW_CACHE[key]
@@ -374,8 +372,7 @@ def _offsets_searcher(spark, sf_dir) -> Searcher:
     key = ("offsets", sf_dir.rstrip("/"))
     if key not in _RAW_CACHE:
         docs = _raw_docs(spark, sf_dir)
-        idx = IndexBuilder(ENGLISH_ANALYZER, grid=2048, head_df=512,
-                           salt_target=512,
+        idx = IndexBuilder(ENGLISH_ANALYZER, grid=2048,
                            with_offsets=True).build(spark, docs).cache()
         _RAW_CACHE[key] = Searcher(spark, idx, k1=K1, b=B)
     return _RAW_CACHE[key]
@@ -440,8 +437,7 @@ def _shingle_searcher(spark, sf_dir) -> Searcher:
         from lucene_solr_spark.analysis.shingles import with_shingles
         docs = spark.read.parquet(f"{key[0]}/documents.parquet")
         docs = with_shingles(docs.select("doc_id", "text"))
-        idx = (IndexBuilder(ENGLISH_ANALYZER, grid=2048, head_df=512,
-                            salt_target=512, with_positions=True,
+        idx = (IndexBuilder(ENGLISH_ANALYZER, grid=2048, with_positions=True,
                             fields=("text", "shingles"))
                .build(spark, docs).cache())
         _CACHE[key] = Searcher(spark, idx, k1=K1, b=B)
@@ -1546,8 +1542,7 @@ def q_perfield_topk(spark, sf_dir):
     if key not in _CACHE:
         docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
                 .withColumn("title", F.expr(TITLE_EXPR)))
-        idx = IndexBuilder(wrapped, grid=2048, head_df=512, salt_target=512,
-                           with_positions=True,
+        idx = IndexBuilder(wrapped, grid=2048, with_positions=True,
                            fields=("text", "title")).build(spark, docs).cache()
         _CACHE[key] = Searcher(spark, idx, k1=K1, b=B)
     s = _CACHE[key]
@@ -1590,7 +1585,7 @@ def q_custom_analyzer_topk(spark, sf_dir):
         an = CustomAnalyzer(token_filters=(
             lowercase_filter(), stop_filter(ENGLISH_STOP_WORDS)))
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        idx = IndexBuilder(an, grid=2048, head_df=512, salt_target=512,
+        idx = IndexBuilder(an, grid=2048,
                            with_positions=True).build(spark, docs).cache()
         _CACHE[key] = Searcher(spark, idx, k1=K1, b=B)
     s = _CACHE[key]
@@ -1958,8 +1953,7 @@ def q_update_search_topk(spark, sf_dir):
         F.concat(F.lit("refreshed merge content "),
                  F.col("text")).alias("text"))
         .withColumn("title", F.expr(TITLE_EXPR)))
-    builder = IndexBuilder(ENGLISH_ANALYZER, grid=2048, head_df=512,
-                           salt_target=512, with_positions=True,
+    builder = IndexBuilder(ENGLISH_ANALYZER, grid=2048, with_positions=True,
                            fields=("text", "title"))
     idx2 = update_documents(spark, idx, repl, old.select("doc_id"), builder)
     return _topk(Searcher(spark, idx2, k1=K1, b=B), TermQuery("merge"))
@@ -1999,9 +1993,8 @@ def q_field_exists(spark, sf_dir):
                 .withColumn("tag", F.when(F.col("doc_id") % 3 == 0,
                                           F.lit("alpha"))
                             .otherwise(F.lit(None).cast("string"))))
-        builder = IndexBuilder(ENGLISH_ANALYZER, grid=2048, head_df=512,
-                               salt_target=512, with_positions=True,
-                               fields=("text", "tag"))
+        builder = IndexBuilder(ENGLISH_ANALYZER, grid=2048,
+                               with_positions=True, fields=("text", "tag"))
         _FE_CACHE[key] = Searcher(spark, builder.build(spark, docs).cache(),
                                   k1=K1, b=B)
     q = parse_query("merge AND tag:*", ENGLISH_ANALYZER)

@@ -75,8 +75,7 @@ def main() -> None:
     # grid sized so bucket-parallelism ~= 4-20x cores at this corpus size
     # (production default 1<<17 assumes ~10^9+ docs per index generation)
     grid = max(128, n_docs // (CPUS * 4))
-    builder = IndexBuilder(ENGLISH_ANALYZER, grid=grid, head_df=512,
-                           salt_target=512, with_positions=True)
+    builder = IndexBuilder(ENGLISH_ANALYZER, grid=grid, with_positions=True)
     # serving partitions = 1x cores: one task wave per query job. The
     # round-2 guidance (2x cores) measured ~0.50 s/query on this host;
     # a straggler in wave 2 adds a full scheduling round-trip, and 1x

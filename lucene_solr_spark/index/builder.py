@@ -493,22 +493,18 @@ def _shuffle_n(spark: SparkSession) -> int:
 
 class IndexBuilder:
     def __init__(self, analyzer: StandardAnalyzer = ENGLISH_ANALYZER,
-                 grid: int = 1 << 17, head_df: int = 4096,
-                 salt_target: int = 4096, with_positions: bool = False,
+                 grid: int = 1 << 17, with_positions: bool = False,
                  fields: tuple = (DEFAULT_FIELD,),
                  with_offsets: bool = False, payload=None):
         """grid: doc-range cell size blocks never cross — the query shard
         unit AND the skew bound (no term contributes more than `grid`
-        postings to any pack task). head_df / salt_target are retained
-        for manifest compatibility; the grid-cell shuffle subsumes them.
+        postings to any pack task).
         fields: text columns to index; each column is a field and every
         Term is a (field, text) pair (`index/Term.java:69`).
         Sandbox default sizes; at cluster scale use grid=1<<17+ (same
         code path)."""
         self.analyzer = analyzer
         self.grid = grid
-        self.head_df = head_df
-        self.salt_target = salt_target
         # offsets (IndexOptions DOCS_AND_FREQS_AND_POSITIONS_AND_OFFSETS,
         # index/IndexOptions.java:25-53) imply positions; so do payloads —
         # in the reference the payload stream rides the positions stream

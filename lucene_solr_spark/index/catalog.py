@@ -143,8 +143,7 @@ def _input_fingerprint(docs: DataFrame) -> dict:
 
 
 def _params(builder: IndexBuilder) -> dict:
-    return {"grid": builder.grid, "head_df": builder.head_df,
-            "salt_target": builder.salt_target,
+    return {"grid": builder.grid,
             "with_positions": builder.with_positions,
             "with_offsets": getattr(builder, "with_offsets", False),
             # only recorded when set — adding an always-present key would

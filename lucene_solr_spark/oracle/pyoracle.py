@@ -9,11 +9,11 @@ score desc, then docID asc (`search/HitQueue.java:76-81`,
 (docIDs AND float32 scores) to this oracle; the oracle itself is pinned
 by golden tests.
 
-``search_ast`` interprets the SAME flattened clause plan the Spark
-kernel executes (search/executor.py:flatten_plan), so clause ordering —
-and therefore float32 accumulation order — agrees by construction; a
-term appearing in both MUST and SHOULD scores twice, exactly as
-BooleanWeight builds one scorer per clause.
+``search_ast`` interprets the SAME tree plan the Spark kernel executes
+(search/executor.py:flatten_plan → build_tree), so node ordering — and
+therefore float32 accumulation order, one partial sum per bool node —
+agrees by construction; a term appearing in both MUST and SHOULD scores
+twice, exactly as BooleanWeight builds one scorer per clause.
 """
 
 from __future__ import annotations
@@ -512,7 +512,7 @@ class OracleIndex:
                    for d, sp in inner.items()}
         return {d: sp for d, sp in out.items() if sp}
 
-    def _interval_scores(self, c, boost_mult: float = 1.0):
+    def _interval_scores(self, c):
         """IntervalQuery leaf (executor._eval_interval spec): freq = Σ
         1/max(length − minExtent + 1, 1) accumulated in f64, saturation
         applied in f32 — w32 × (1 − pivot/(pivot + freq))."""
@@ -522,7 +522,7 @@ class OracleIndex:
             return {}
         iv = self._interval_op_intervals(c["root"], field)
         me = c["root"]["min_extent"]
-        w = np.float32(c["boost"] * boost_mult)
+        w = np.float32(c["boost"])
         p = np.float32(c["pivot"])
         out = {}
         for d, sp in iv.items():
@@ -537,7 +537,7 @@ class OracleIndex:
         from ..search.executor import _interval_required_keys
         return _interval_required_keys(op)
 
-    def _spantree_scores(self, c, boost_mult: float = 1.0):
+    def _spantree_scores(self, c):
         """Composite span query — freq = Σ 1/(1+width), BM25 weight over
         the distinct scoring keys (the executor's spantree leaf)."""
         from ..search.executor import _annotate_span_op, _span_op_keys
@@ -550,7 +550,7 @@ class OracleIndex:
         idf_sum = np.float32(sum(
             np.float32(bm25.idf(self.df(t, f), self.field_doc_count[f]))
             for f, t in keys))
-        w = np.float32(np.float32(c["boost"] * boost_mult) * idf_sum)
+        w = np.float32(np.float32(c["boost"]) * idf_sum)
         avgdl = bm25.avg_field_length(self.field_sum_ttf[field],
                                       self.field_doc_count[field])
         cache = bm25.norm_inverse_cache(avgdl)
@@ -563,57 +563,25 @@ class OracleIndex:
                     w - w / (np.float32(1.0) + np.float32(pf) * ni))
         return out
 
-    def _dismax_scores(self, children, tie: float,
-                       boost: float = 1.0) -> dict[int, np.float32]:
-        """DisjunctionMaxQuery.java:51 — max + tie × (sum − max), f32.
-        (Legacy term-children surface; _leaf_scores generalizes.)"""
-        per = [self._term_scores(t, boost=boost * ch_boost, field=f)
-               for (f, t), ch_boost in children]
-        return self._dismax_combine(per, tie)
-
-    @staticmethod
-    def _dismax_combine(per: list[dict], tie: float) -> dict[int, np.float32]:
-        out: dict[int, np.float32] = {}
-        docs = set()
-        for p in per:
-            docs |= set(p)
-        for d in docs:
-            mx = np.float32(0.0)
-            sm = np.float32(0.0)
-            for p in per:
-                if d in p:
-                    s = p[d]
-                    sm = np.float32(sm + s)
-                    mx = max(mx, s)
-            out[d] = np.float32(mx + np.float32(tie) * np.float32(sm - mx))
-        return out
-
-    def _leaf_scores(self, c, boost_mult: float = 1.0) -> dict[int, np.float32]:
-        """Score a term/phrase/dismax clause dict (kernel plan leaves);
-        dismax disjuncts may be any leaf kind — same semantics as
-        executor._eval_leaf."""
+    def _leaf_scores(self, c) -> dict[int, np.float32]:
+        """Score a tree-plan leaf dict — the executor's _LEAF_EVAL
+        semantics, one kind at a time."""
         if c["kind"] == "term":
             f, t = c["key"]
-            return self._term_scores(t, boost=c["boost"] * boost_mult, field=f)
+            return self._term_scores(t, boost=c["boost"], field=f)
         if c["kind"] == "phrase":
             if c.get("matcher") == "lucene":
-                return self._phrase_scores_lucene(
-                    c["keys"], c["slop"], c["boost"] * boost_mult)
-            return self._phrase_scores(c["keys"], c["slop"],
-                                       c["boost"] * boost_mult)
+                return self._phrase_scores_lucene(c["keys"], c["slop"],
+                                                  c["boost"])
+            return self._phrase_scores(c["keys"], c["slop"], c["boost"])
         if c["kind"] == "multiphrase":
             return self._multiphrase_scores(c["slots"], c["slop"],
-                                            c["boost"] * boost_mult)
+                                            c["boost"])
         if c["kind"] == "span":
-            return self._span_scores(c["keys"], c["slop"],
-                                     c["boost"] * boost_mult)
+            return self._span_scores(c["keys"], c["slop"], c["boost"])
         if c["kind"] == "spantree":
-            return self._spantree_scores(c, boost_mult)
-        if c["kind"] == "interval":
-            return self._interval_scores(c, boost_mult)
-        per = [self._leaf_scores(ch, boost_mult * c.get("boost", 1.0))
-               for ch in c["children"]]
-        return self._dismax_combine(per, c["tie"])
+            return self._spantree_scores(c)
+        return self._interval_scores(c)
 
     # ------------------------------------------------------------------
     # recursive tree-plan interpreter (executor._eval_tree mirror)
@@ -702,7 +670,7 @@ class OracleIndex:
                       for d in docs}
 
     # ------------------------------------------------------------------
-    # AST interpreter (same clause plan as the Spark kernel)
+    # AST interpreter (same tree plan as the Spark kernel)
     # ------------------------------------------------------------------
     def search_ast(self, query, k: int = 10):
         from ..search.ast import rewrite
@@ -713,41 +681,8 @@ class OracleIndex:
         if plan == "ALL":
             docs = sorted(self.all_docs)[:k]
             return [(d, np.float32(1.0)) for d in docs]
-        if "tree" in plan:
-            docs, sc = self._eval_tree_node(plan["tree"], scoring=True)
-            return self._topk(
-                {d: sc.get(d, np.float32(0.0)) for d in docs}, k)
-        clauses, must_not = plan["clauses"], plan["must_not"]
-        msm, n_groups = plan["msm"], plan["n_groups"]
-
-        def eval_clause(c) -> dict[int, np.float32]:
-            return self._leaf_scores(c)
-
-        acc: dict[int, np.float32] = {}
-        group_matched: list[set[int]] = [set() for _ in range(n_groups)]
-        should_cnt: dict[int, int] = {}
-        for c in clauses:
-            sc = eval_clause(c)
-            if c["scoring"]:
-                for d, s in sc.items():
-                    acc[d] = np.float32(acc.get(d, np.float32(0.0)) + s)
-            if c["group"] is not None:
-                group_matched[c["group"]] |= set(sc)
-            elif c["should"]:
-                for d in sc:
-                    should_cnt[d] = should_cnt.get(d, 0) + 1
-        if n_groups:
-            docs = set.intersection(*group_matched) if group_matched else set()
-            if msm > 0:
-                docs = {d for d in docs if should_cnt.get(d, 0) >= msm}
-        else:
-            need = max(1, msm)
-            docs = {d for d, n in should_cnt.items() if n >= need}
-        for c in must_not:
-            sc = eval_clause(dict(c, scoring=False))
-            docs -= set(sc)
-        out = {d: acc.get(d, np.float32(0.0)) for d in docs}
-        return self._topk(out, k)
+        docs, sc = self._eval_tree_node(plan["tree"], scoring=True)
+        return self._topk({d: sc.get(d, np.float32(0.0)) for d in docs}, k)
 
     # --- legacy single-field API (kept for existing golden tests) ------
     def search_or(self, terms: list[str], k: int = 10):

@@ -7,8 +7,8 @@ the TIE parameter, plus a pf phrase boost; minimum-match per
 This was the missing parser surface for DisjunctionMaxQuery (VERDICT r2
 #3): users type plain text, the handler builds the classic "one dismax
 per query term over the boosted field list" shape. The produced AST is
-ordinary engine AST — term dismax goes through the flat kernel, the pf
-phrase disjuncts through the generalized dismax/tree path.
+ordinary engine AST — term dismax and the pf phrase disjuncts alike go
+through the tree kernel's dismax nodes.
 """
 
 from __future__ import annotations

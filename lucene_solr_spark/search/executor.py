@@ -42,12 +42,16 @@ Clause kinds the kernel scores:
   dismax   DisjunctionMaxQuery.java:45,51 — max + tie×(sum−max), over
            ARBITRARY disjuncts (term/phrase/span/nested boolean)
 
-Plans come in two shapes: the FLAT clause-keyed plan (one nesting
-level — per-block skipping, the fast common path) and the RECURSIVE
-tree plan for arbitrary boolean composition (`build_tree`, evaluated
-as nested mask/score reduction with bucket-level pruning); both emit
-per-PARTITION top-k heaps flushed once at iterator exhaustion, so the
-driver merge reads at most partitions × k rows.
+Every scanned query runs as ONE plan form: the recursive tree
+(`build_tree`, the Boolean2ScorerSupplier.java:100-127 composition
+restated as nested mask/score reduction), scored by one bucket scorer
+(`_score_bucket`) inside one kernel generator (`_bucket_kernel_multi`,
+a list of specs — a single query is a batch of one). Pruning is
+bucket-level (tree upper bound from the block-max skylines) plus
+per-block skipping on term leaves whose score adds straight into the
+root. The kernel emits per-PARTITION top-k heaps flushed once at
+iterator exhaustion, so the driver merge reads at most
+partitions × k rows per query.
 
 Scoring modes:
   f32 — Lucene-exact float32 (BM25Similarity.java:222-235 order of ops)
@@ -93,9 +97,14 @@ from .ast import (DEFAULT_FIELD, MULTI_TERM_NODES, SPAN_NODES, BooleanQuery,
                   WildcardQuery, rewrite)
 
 KERNEL_SCHEMA = "doc_id long, score double"
+MULTI_SCHEMA = "query_id int, doc_id long, score double"
 
 # relative safety margin on float upper bounds (never over-prune)
 _UB_EPS = 1e-6
+
+# tree-plan leaf kinds (each evaluated by its _LEAF_EVAL entry)
+_LEAF_KINDS = ("term", "phrase", "multiphrase", "span", "spantree",
+               "interval")
 
 
 class Searcher:
@@ -292,16 +301,16 @@ class Searcher:
         return s
 
     # ------------------------------------------------------------------
-    # plan: AST → clause list
+    # plan: AST → tree plan (or a DataFrame composition)
     # ------------------------------------------------------------------
     def _plan(self, query):
+        """→ None, "ALL", {"tree"}, {"unbounded"} or {"exists"}."""
         query = rewrite(self.expand_multiterm(rewrite(query)))
         ex = _split_exists(query)
         if ex is not None:
             return {"exists": ex}
         plan = flatten_plan(query)
-        if isinstance(plan, dict) and "tree" in plan \
-                and not tree_grounded(plan["tree"]):
+        if isinstance(plan, dict) and not tree_grounded(plan["tree"]):
             # the kernel scans only the plan's term blocks; an
             # unanchored match set (pure negation at the root) needs
             # the all-docs composition instead
@@ -317,9 +326,6 @@ class Searcher:
         return plan
 
     # ------------------------------------------------------------------
-    def _clause_keys(self, c) -> list[tuple[str, str]]:
-        return _leaf_keys(c)
-
     def _stat_env(self, all_keys):
         """Shared per-query stat environment: term stats, per-field BM25
         caches and idf weights (IndexSearcher.java:914-933)."""
@@ -373,74 +379,16 @@ class Searcher:
         return st, cache32, avgdl64, weights
 
     def _spec_for_plan(self, plan, mode, k, prune, collect_all=False):
-        """→ (spec, live_keys, dead). Computes per-clause weights from
-        per-field collection stats (IndexSearcher.java:914-933) and drops
-        clauses that cannot match (df == 0), propagating deadness.
-        Dispatches to the recursive-tree spec for nested plans."""
-        if "tree" in plan:
-            return self._spec_for_tree(plan, mode, k, prune, collect_all)
-        clauses, must_not, msm = plan["clauses"], plan["must_not"], plan["msm"]
-        all_keys = []
-        for c in clauses + must_not:
-            all_keys.extend(self._clause_keys(c))
-        all_keys = list(dict.fromkeys(all_keys))
+        """Tree plan → (spec, live_keys, dead): per-leaf weights from the
+        per-field collection stats (IndexSearcher.java:914-933); leaves
+        that cannot match (df == 0) are dropped and deadness propagates
+        up the tree (`_annotate_tree`)."""
+        all_keys = list(dict.fromkeys(_tree_keys(plan["tree"])))
         st, cache32, avgdl64, weights = self._stat_env(all_keys)
-
-        n_groups = plan["n_groups"]
-        group_alive = [False] * n_groups
-        live_clauses = []
-        n_should_alive = 0
-        for c in clauses:
-            ann = _annotate_leaf(c, st, weights, sim=self.sim)
-            if ann is not None:
-                live_clauses.append(ann)
-                if ann["group"] is not None:
-                    group_alive[ann["group"]] = True
-                elif ann["should"]:
-                    n_should_alive += 1
-        dead = (n_groups > 0 and not all(group_alive)) or not live_clauses
-        if n_groups == 0:
-            dead = dead or n_should_alive == 0
-        dead = dead or (msm > 0 and msm > n_should_alive)
-
-        # MUST_NOT leaves are match-only (weights still annotated so the
-        # same eval kernels run); a dismax under MUST_NOT excludes the
-        # UNION of its disjuncts' matches — previously silently dropped
-        live_mn = []
-        for c in must_not:
-            ann = _annotate_leaf(c, st, weights, sim=self.sim)
-            if ann is not None:
-                live_mn.append(ann)
-
-        deleted = getattr(self.index, "deleted_array", None)
+        root = _annotate_tree(plan["tree"], st, weights, sim=self.sim)
         spec = dict(
-            clauses=live_clauses, must_not=live_mn, msm=msm,
-            n_groups=n_groups,
-            deleted=deleted,
-            cache32={f: c for f, c in cache32.items()},
-            avgdl64=avgdl64,
-            k1=self.k1, b=self.b, sim=self.sim, mu=self.mu, lam=self.lam,
-            dfr_c=self.dfr_c, ax_s=self.ax_s,
-            ss=(self.ss_min, self.ss_max, self.ss_steep,
-                self.ss_tf_base, self.ss_tf_min),
-            grid=self.stats["grid"], mode=mode, k=k,
-            collect_all=collect_all, prune=prune and not collect_all,
-            with_positions=self.index.with_positions,
-        )
-        live = [k for k in all_keys if k in st]
-        return spec, live, dead
-
-    def _spec_for_tree(self, plan, mode, k, prune, collect_all=False):
-        """Tree-plan spec: same stat environment, recursive annotation.
-        Pruning on tree plans is bucket-level only (conservative tree
-        upper bound); per-block skipping stays a flat-plan optimization."""
-        root = plan["tree"]
-        all_keys = list(dict.fromkeys(_tree_keys(root)))
-        st, cache32, avgdl64, weights = self._stat_env(all_keys)
-        root = _annotate_tree(root, st, weights, sim=self.sim)
-        deleted = getattr(self.index, "deleted_array", None)
-        spec = dict(
-            tree=root, deleted=deleted, cache32=cache32, avgdl64=avgdl64,
+            tree=root, deleted=getattr(self.index, "deleted_array", None),
+            cache32=cache32, avgdl64=avgdl64,
             k1=self.k1, b=self.b, sim=self.sim, mu=self.mu, lam=self.lam,
             dfr_c=self.dfr_c, ax_s=self.ax_s,
             ss=(self.ss_min, self.ss_max, self.ss_steep,
@@ -452,26 +400,26 @@ class Searcher:
         live = [key for key in all_keys if key in st]
         return spec, live, root is None
 
-    # ------------------------------------------------------------------
-    def _run_kernel(self, plan, mode="f32", collect_all=False, k=10,
-                    prune=True) -> DataFrame:
-        spec, live, dead = self._spec_for_plan(
-            plan, mode, k, prune, collect_all=collect_all)
-        if dead:
-            return self.spark.createDataFrame([], KERNEL_SCHEMA)
-        blocks = self.index.postings.filter(_key_filter(live))
+    def _blocks(self, live) -> DataFrame:
+        """The postings blocks of the live keys (pushed-down predicate),
+        minus the columns the kernel never reads, plus tombstones."""
+        blocks = self.index.postings.filter(
+            _key_filter(list(dict.fromkeys(live))))
         if not self.index.with_positions:
             blocks = blocks.drop("pos_blob")
-        blocks = blocks.drop("off_blob", "pay_blob")   # kernel-unused
-        blocks = self._with_del_col(blocks)
+        return self._with_del_col(blocks.drop("off_blob", "pay_blob"))
 
+    def _kernel(self, specs, live) -> DataFrame:
+        """ONE term-filtered scan over the union of the specs' live keys;
+        every bucket is scored for every spec from the same Arrow
+        batches → (query_id, doc_id, score), query_id = spec index."""
         def kernel(batches):
-            yield from _bucket_kernel(batches, spec)
+            yield from _bucket_kernel_multi(batches, specs)
 
         # No shuffle: the index layout is bucket-major (whole grid cells per
         # partition, sorted by bucket/field/term/block), so the narrow filter
         # keeps every bucket's blocks contiguous within its partition.
-        return blocks.mapInPandas(kernel, schema=KERNEL_SCHEMA)
+        return self._blocks(live).mapInPandas(kernel, schema=MULTI_SCHEMA)
 
     def _with_del_col(self, blocks):
         """Attach the per-cell tombstone column when the index carries a
@@ -487,123 +435,75 @@ class Searcher:
     # ------------------------------------------------------------------
     # public API
     # ------------------------------------------------------------------
-    def top_k_many(self, queries: list, k: int = 10, mode: str = "f32",
-                   prune: bool = True) -> list:
-        """Batch top-k: ALL queries in ONE Spark job — one term-filtered
-        scan over the union of query terms, one pass over each bucket
-        scoring every query from the same Arrow batches, per-query heaps
-        and thresholds. → list of pandas DataFrames (rank, doc_id,
-        score), parallel to `queries`. The throughput mode for query
-        logs (the benchmark harness shape, ReadTask.java:54)."""
-        if self.sim != "bm25":
-            mode = "f64"      # non-BM25 similarities are f64-only
-        empty = pd.DataFrame({"rank": [], "doc_id": [], "score": []})
-        results: dict[int, pd.DataFrame] = {}
-        specs, live_union, qids = [], [], []
-        for qi, query in enumerate(queries):
-            plan = self._plan(query)
-            if plan is None:
-                results[qi] = empty
-                continue
-            if plan == "ALL" or (isinstance(plan, dict)
-                                 and ("unbounded" in plan
-                                      or "exists" in plan)):
-                results[qi] = self.top_k(query, k=k, mode=mode, prune=prune)
-                continue
-            spec, live, dead = self._spec_for_plan(plan, mode, k, prune)
-            if dead:
-                results[qi] = empty
-                continue
-            specs.append(spec)
-            live_union.extend(live)
-            qids.append(qi)
-        if specs:
-            live_union = list(dict.fromkeys(live_union))
-            blocks = self.index.postings.filter(_key_filter(live_union))
-            if not self.index.with_positions:
-                blocks = blocks.drop("pos_blob")
-            blocks = blocks.drop("off_blob", "pay_blob")
-            blocks = self._with_del_col(blocks)
-
-            def kernel(batches):
-                yield from _bucket_kernel_multi(batches, specs)
-
-            pdf = blocks.mapInPandas(
-                kernel, schema="query_id int, doc_id long, score double"
-            ).toPandas()
-            for local_qi, qi in enumerate(qids):
-                sub = pdf[pdf["query_id"] == local_qi]
-                if len(sub) == 0:
-                    results[qi] = empty
-                    continue
-                sub = (sub.sort_values(["score", "doc_id"],
-                                       ascending=[False, True],
-                                       kind="mergesort")
-                       .head(k).reset_index(drop=True))
-                sub["rank"] = np.arange(1, len(sub) + 1)
-                if mode == "f32":
-                    sub["score"] = sub["score"].astype(np.float32)
-                results[qi] = sub[["rank", "doc_id", "score"]]
-        return [results[qi] for qi in range(len(queries))]
-
-    def top_k(self, query, k: int = 10, mode: str = "f32", prune: bool = True):
-        """→ pandas DataFrame (rank, doc_id, score) — TopDocs.merge analog."""
-        if self.sim != "bm25":
-            mode = "f64"      # non-BM25 similarities are f64-only
+    def _dispatch(self, query, mode, k, prune, collect_all):
+        """The one routing step shared by top_k, top_k_many and score_all:
+        → None (matches nothing), a (doc_id, score) DataFrame for the
+        compositions the kernel does not scan (MatchAll, unbounded,
+        exists), or (spec, live_keys) for the kernel."""
         plan = self._plan(query)
         if plan is None:
-            return pd.DataFrame({"rank": [], "doc_id": [], "score": []})
-        if plan == "ALL":
-            pdf = self._all_live_docs().orderBy("doc_id").limit(k).toPandas()
-            pdf["score"] = np.float32(1.0)
-            pdf["rank"] = np.arange(1, len(pdf) + 1)
-            return pdf[["rank", "doc_id", "score"]]
-        if isinstance(plan, dict) and ("unbounded" in plan
-                                       or "exists" in plan):
-            df = (self._score_unbounded(plan["unbounded"])
-                  if "unbounded" in plan
-                  else self._score_exists(plan["exists"]))
-            pdf = (df.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-                   .toPandas())
-            pdf["rank"] = np.arange(1, len(pdf) + 1)
-            if mode == "f32":
-                pdf["score"] = pdf["score"].astype(np.float32)
-            return pdf[["rank", "doc_id", "score"]]
-        df = self._run_kernel(plan, mode=mode, collect_all=False, k=k,
-                              prune=prune)
-        pdf = df.toPandas()
-        if len(pdf) == 0:
-            return pd.DataFrame({"rank": [], "doc_id": [], "score": []})
-        pdf = pdf.sort_values(["score", "doc_id"], ascending=[False, True],
-                              kind="mergesort").head(k).reset_index(drop=True)
-        pdf["rank"] = np.arange(1, len(pdf) + 1)
-        if mode == "f32":
-            pdf["score"] = pdf["score"].astype(np.float32)
-        return pdf[["rank", "doc_id", "score"]]
-
-    def score_all(self, query, mode: str = "f64") -> DataFrame:
-        """All matching docs with scores, as a Spark DataFrame (exhaustive,
-        ScoreMode.COMPLETE analog). Used by the DuckDB-oracle queries."""
-        if self.sim != "bm25":
-            mode = "f64"      # non-BM25 similarities are f64-only
-        plan = self._plan(query)
-        if plan is None:
-            return self.spark.createDataFrame([], KERNEL_SCHEMA)
+            return None
         if plan == "ALL":
             # MatchAllDocsQuery: every doc with at least one indexed term,
             # constant score 1 (ConstantScore semantics); tombstoned docs
             # excluded (liveDocs)
             return (self._all_live_docs()
                     .select("doc_id", F.lit(1.0).alias("score")))
-        if isinstance(plan, dict) and "unbounded" in plan:
+        if "unbounded" in plan:
             return self._score_unbounded(plan["unbounded"])
-        if isinstance(plan, dict) and "exists" in plan:
+        if "exists" in plan:
             return self._score_exists(plan["exists"])
-        return self._run_kernel(plan, mode=mode, collect_all=True)
+        spec, live, dead = self._spec_for_plan(plan, mode, k, prune,
+                                               collect_all)
+        return None if dead else (spec, live)
+
+    def top_k_many(self, queries: list, k: int = 10, mode: str = "f32",
+                   prune: bool = True) -> list:
+        """Batch top-k: every kernel query in ONE Spark job — one
+        term-filtered scan over the union of query terms, one pass over
+        each bucket scoring every query from the same Arrow batches,
+        per-query heaps and thresholds. → list of pandas DataFrames
+        (rank, doc_id, score), parallel to `queries`. The throughput
+        mode for query logs (the benchmark harness shape,
+        ReadTask.java:54)."""
+        if self.sim != "bm25":
+            mode = "f64"      # non-BM25 similarities are f64-only
+        hits = [None] * len(queries)
+        specs, live, qids = [], [], []
+        for qi, query in enumerate(queries):
+            r = self._dispatch(query, mode, k, prune, collect_all=False)
+            if isinstance(r, DataFrame):
+                hits[qi] = (r.orderBy(F.desc("score"), F.asc("doc_id"))
+                            .limit(k).toPandas())
+            elif r is not None:
+                specs.append(r[0])
+                live.extend(r[1])
+                qids.append(qi)
+        if specs:
+            pdf = self._kernel(specs, live).toPandas()
+            for local_qi, qi in enumerate(qids):
+                hits[qi] = pdf[pdf["query_id"] == local_qi]
+        return [_ranked(h, k, mode) for h in hits]
+
+    def top_k(self, query, k: int = 10, mode: str = "f32", prune: bool = True):
+        """→ pandas DataFrame (rank, doc_id, score) — TopDocs.merge analog."""
+        return self.top_k_many([query], k=k, mode=mode, prune=prune)[0]
+
+    def score_all(self, query, mode: str = "f64") -> DataFrame:
+        """All matching docs with scores, as a Spark DataFrame (exhaustive,
+        ScoreMode.COMPLETE analog). Used by the DuckDB-oracle queries."""
+        if self.sim != "bm25":
+            mode = "f64"      # non-BM25 similarities are f64-only
+        r = self._dispatch(query, mode, 0, False, collect_all=True)
+        if r is None:
+            return self.spark.createDataFrame([], KERNEL_SCHEMA)
+        if isinstance(r, DataFrame):
+            return r
+        return self._kernel([r[0]], r[1]).select("doc_id", "score")
 
     def _all_live_docs(self) -> DataFrame:
         """Every doc with at least one indexed term, minus tombstones
-        (liveDocs): the corpus stream the clause-keyed kernel never
+        (liveDocs): the corpus stream the key-filtered kernel never
         scans."""
         alldocs = self.index.norms.select("doc_id").distinct()
         dels = getattr(self.index, "deletes", None)
@@ -758,26 +658,31 @@ class Searcher:
         return self.score_all(query).count()
 
 
+def _ranked(hits, k: int, mode: str) -> pd.DataFrame:
+    """Merged hits → the top-k frame (rank, doc_id, score) under the
+    reference tie-break: score desc, doc_id asc (HitQueue.java:76-81)."""
+    if hits is None or len(hits) == 0:
+        return pd.DataFrame({"rank": [], "doc_id": [], "score": []})
+    pdf = (hits.sort_values(["score", "doc_id"], ascending=[False, True],
+                            kind="mergesort")
+           .head(k).reset_index(drop=True))
+    pdf["rank"] = np.arange(1, len(pdf) + 1)
+    if mode == "f32":
+        pdf["score"] = pdf["score"].astype(np.float32)
+    return pdf[["rank", "doc_id", "score"]]
+
+
 def flatten_plan(query):
-    """Normalize a REWRITTEN AST into a kernel plan.
-
-    Flat plans (the common shapes — one nesting level of MUST/FILTER/
-    MUST_NOT over pure-OR groups, leaf dismax) keep the clause-keyed
-    {"clauses", "must_not", "msm", "n_groups"} form with per-block
-    pruning. Any deeper composition — `(a AND b) OR (c AND d)`, MUST of
-    a mixed phrase/term group, nested minShouldMatch, dismax over
-    booleans — falls through to the recursive tree plan
-    ({"tree": node}), the Boolean2ScorerSupplier.java:100-127 recursive
-    scorer composition restated as nested mask/score reduction.
-
-    → None (MatchNo), "ALL" (MatchAll), a flat plan, or a tree plan.
-    Shared with the pure-Python oracle so clause ordering — and
-    therefore float32 accumulation order — agrees by construction.
-    """
-    try:
-        return _flat_plan(query)
-    except ValueError:
-        return {"tree": build_tree(query)}
+    """Normalize a REWRITTEN AST into a kernel plan → None (MatchNo),
+    "ALL" (MatchAll) or {"tree": build_tree(query)} — the one plan form
+    for every scanned query, from a bare term to arbitrary nesting.
+    Shared with the pure-Python oracle so node ordering — and therefore
+    float32 accumulation order — agrees by construction."""
+    if isinstance(query, MatchNoQuery):
+        return None
+    if isinstance(query, MatchAllQuery):
+        return "ALL"
+    return {"tree": build_tree(query)}
 
 
 def _split_exists(query):
@@ -881,8 +786,7 @@ def unbounded_parts(query):
             sub = flatten_plan(cl.query)
         except ValueError:
             return None
-        if isinstance(sub, dict) and "tree" in sub \
-                and not tree_grounded(sub["tree"]):
+        if isinstance(sub, dict) and not tree_grounded(sub["tree"]):
             return None
         grounded.append(cl.query)
     if not wrappers:
@@ -1071,126 +975,6 @@ def _interval_leaf(q: IntervalQuery, boost: float):
             "boost": boost, "pivot": float(q.pivot), "field": q.field}
 
 
-def _flat_plan(query):
-    """The one-nesting-level clause-keyed plan (raises ValueError on
-    shapes it cannot express; flatten_plan then builds a tree plan).
-
-    Clauses are kept per-CLAUSE (not per-term): Lucene's BooleanWeight
-    builds one scorer per clause, so `+spark spark` scores the term
-    twice (`search/BooleanQuery.java` clause model).
-    """
-    if isinstance(query, MatchNoQuery):
-        return None
-    if isinstance(query, MatchAllQuery):
-        return "ALL"
-    # top-level boost distributes multiplicatively over every scoring
-    # clause (scores are linear in the clause weight)
-    boost_all = 1.0
-    while isinstance(query, BoostQuery):
-        boost_all *= query.boost
-        query = query.query
-
-    groups: list[list[dict]] = []   # group i = list of member clauses
-    shoulds: list[dict] = []
-    must_not: list[dict] = []
-    msm = 0
-
-    def leaf_clause(q, boost=1.0):
-        """term/phrase/dismax leaf → clause dict (no occur fields yet)."""
-        if isinstance(q, BoostQuery):
-            return leaf_clause(q.query, boost * q.boost)
-        if isinstance(q, TermQuery):
-            return {"kind": "term", "key": (q.field, q.term),
-                    "boost": boost}
-        if isinstance(q, PhraseQuery):
-            return {"kind": "phrase",
-                    "keys": [(q.field, t) for t in q.terms],
-                    "slop": int(q.slop), "boost": boost,
-                    "matcher": q.matcher,
-                    "positions": (list(q.positions)
-                                  if q.positions is not None else None)}
-        if isinstance(q, MultiPhraseQuery):
-            return {"kind": "multiphrase",
-                    "slots": [[(q.field, t) for t in slot]
-                              for slot in q.slots],
-                    "slop": int(q.slop), "boost": boost}
-        if isinstance(q, SPAN_NODES):
-            return _span_leaf(q, boost)
-        if isinstance(q, IntervalQuery):
-            return _interval_leaf(q, boost)
-        if isinstance(q, DisjunctionMaxQuery):
-            children = []
-            for d in q.disjuncts:
-                c = leaf_clause(d, 1.0)
-                if c["kind"] not in ("term", "phrase", "multiphrase",
-                                     "span", "spantree", "interval"):
-                    # dismax of nested booleans → recursive tree plan
-                    raise ValueError("flat dismax disjuncts must be leaves")
-                children.append(c)
-            return {"kind": "dismax", "children": children,
-                    "tie": float(q.tie_breaker), "boost": boost}
-        raise ValueError(f"unsupported leaf {q!r}")
-
-    def add_group(q, scoring, boost=1.0):
-        """MUST/FILTER clause → one match-group; pure-OR boolean
-        members each become a scoring member of the same group."""
-        if isinstance(q, BoostQuery):
-            add_group(q.query, scoring, boost * q.boost)
-            return
-        if isinstance(q, BooleanQuery):
-            inner = q.grouped()
-            pure_should = (not inner[Occur.MUST] and not inner[Occur.MUST_NOT]
-                           and not inner[Occur.FILTER]
-                           and q.min_should_match <= 1)
-            if not pure_should:
-                raise ValueError(
-                    "kernel supports one nesting level: MUST/NOT of a "
-                    "pure-OR group")
-            members = [leaf_clause(x, boost) for x in inner[Occur.SHOULD]]
-        else:
-            members = [leaf_clause(q, boost)]
-        gi = len(groups)
-        for m in members:
-            m.update(scoring=scoring, group=gi, should=False)
-        groups.append(members)
-
-    if isinstance(query, (TermQuery, PhraseQuery, MultiPhraseQuery,
-                          BoostQuery, DisjunctionMaxQuery,
-                          IntervalQuery) + SPAN_NODES):
-        c = leaf_clause(query, boost_all)
-        c.update(scoring=True, group=None, should=True)
-        shoulds.append(c)
-    elif isinstance(query, BooleanQuery):
-        msm = query.min_should_match
-        for cl in query.clauses:
-            q = cl.query
-            if cl.occur in (Occur.MUST, Occur.FILTER):
-                add_group(q, scoring=(cl.occur == Occur.MUST),
-                          boost=boost_all)
-            elif cl.occur == Occur.SHOULD:
-                c = leaf_clause(q, boost_all)
-                c.update(scoring=True, group=None, should=True)
-                shoulds.append(c)
-            else:  # MUST_NOT
-                if isinstance(q, BooleanQuery):
-                    inner = q.grouped()
-                    if (inner[Occur.MUST] or inner[Occur.MUST_NOT]
-                            or inner[Occur.FILTER]):
-                        raise ValueError("MUST_NOT of a non-pure-OR group")
-                    for x in inner[Occur.SHOULD]:
-                        must_not.append(leaf_clause(x))
-                else:
-                    must_not.append(leaf_clause(q))
-    else:
-        raise ValueError(f"unsupported query {query!r}")
-
-    # clause order: groups (appearance order) then shoulds — the
-    # float32 accumulation order the pyoracle replicates
-    clauses = [m for g in groups for m in g] + shoulds
-    return {"clauses": clauses, "must_not": must_not, "msm": msm,
-            "n_groups": len(groups)}
-
-
 def build_tree(query, boost: float = 1.0):
     """AST → recursive kernel plan node (arbitrary boolean nesting).
 
@@ -1203,7 +987,7 @@ def build_tree(query, boost: float = 1.0):
     leaf weight and dismax is positively homogeneous, so the fold is
     exact — `search/BoostQuery.java:34`).
 
-    Node kinds: the same term/phrase leaf dicts the flat plan uses,
+    Node kinds: term/phrase/multiphrase/span/spantree/interval leaves,
     dismax nodes whose children may be ANY node, and
     {"kind": "bool", "must": [...], "filter": [...], "should": [...],
      "must_not": [...], "msm": int}.
@@ -1243,7 +1027,7 @@ def build_tree(query, boost: float = 1.0):
         for cl in query.clauses:
             b = boost if cl.occur in (Occur.MUST, Occur.SHOULD) else 1.0
             # MatchAll/MatchNo clauses fold into node constants instead
-            # of leaves (the clause-keyed kernel has no all-docs stream;
+            # of leaves (the key-filtered kernel has no all-docs stream;
             # MatchAllDocsQuery scores its boost — ConstantScore
             # semantics). This is the SimpleQueryParser NOT-wrapper
             # shape: BQ(MUST_NOT x, SHOULD MatchAll).
@@ -1274,7 +1058,7 @@ def build_tree(query, boost: float = 1.0):
 
 def tree_grounded(node) -> bool:
     """True when the node's match set is bounded by scanned postings —
-    the clause-keyed kernel only sees blocks of the plan's keys, so an
+    the key-filtered kernel only sees blocks of the plan's keys, so an
     UNGROUNDED node (one whose mask covers docs carrying none of those
     keys, e.g. a NOT-wrapper at the root) must not be evaluated by the
     kernel alone. Nested ungrounded nodes are fine: the parent
@@ -1298,9 +1082,9 @@ def tree_grounded(node) -> bool:
 
 
 def _leaf_keys(c) -> list:
-    """All (field, term) keys under a leaf clause (dismax recurses;
-    spantree includes exclude-branch keys — their postings are needed
-    for evaluation even though they don't score)."""
+    """All (field, term) keys under a leaf (spantree includes
+    exclude-branch keys — their postings are needed for evaluation even
+    though they don't score)."""
     if c["kind"] == "term":
         return [c["key"]]
     if c["kind"] in ("phrase", "span"):
@@ -1309,12 +1093,7 @@ def _leaf_keys(c) -> list:
         return [k for slot in c["slots"] for k in slot]
     if c["kind"] == "spantree":
         return _span_op_keys(c["root"], scoring_only=False)
-    if c["kind"] == "interval":
-        return _interval_op_keys(c["root"])
-    out = []
-    for ch in c["children"]:
-        out.extend(_leaf_keys(ch))
-    return out
+    return _interval_op_keys(c["root"])
 
 
 def _interval_op_keys(op) -> list:
@@ -1451,32 +1230,30 @@ def _annotate_span_op(op, st):
     return None if ch is None else dict(op, child=ch)
 
 
-def _tree_keys(node) -> list:
-    """All (field, term) keys under a tree node (including MUST_NOT)."""
+def _tree_keys(node, parts=("must", "filter", "should", "must_not")):
+    """The (field, term) keys under a tree node, descending into the
+    given bool slots (default: all of them, MUST_NOT included)."""
+    if node["kind"] == "dismax":
+        return [k for ch in node["children"] for k in _tree_keys(ch, parts)]
     if node["kind"] != "bool":
-        return _leaf_keys(node) if node["kind"] != "dismax" else [
-            k for ch in node["children"] for k in _tree_keys(ch)]
-    out = []
-    for part in ("must", "filter", "should", "must_not"):
-        for ch in node[part]:
-            out.extend(_tree_keys(ch))
-    return out
+        return _leaf_keys(node)
+    return [k for part in parts for ch in node[part]
+            for k in _tree_keys(ch, parts)]
 
 
-def _annotate_leaf(c, st, weights, outer_boost: float = 1.0,
-                   sim: str = "bm25"):
-    """Attach f32/f64 weights to a term/phrase/dismax leaf, or return
-    None if a required key has df == 0 (the clause cannot match). An
-    outer boost folds multiplicatively into the weight — exact, because
-    scores are linear in the weight and dismax is positively
-    homogeneous (BoostQuery.java:34). Non-BM25 similarities carry their
-    own per-key values (classic idf / LM collection probability)."""
+def _annotate_leaf(c, st, weights, sim: str = "bm25"):
+    """Attach f32/f64 weights to a leaf, or return None if a required
+    key has df == 0 (the leaf cannot match). The leaf's boost already
+    carries every enclosing boost (`build_tree` folds them — exact,
+    because scores are linear in the weight, BoostQuery.java:34).
+    Non-BM25 similarities carry their own per-key values (classic idf /
+    LM collection probability)."""
     kind = c["kind"]
     if kind == "term":
         key = c["key"]
         if key not in st:
             return None
-        b = c["boost"] * outer_boost
+        b = c["boost"]
         w = weights[key]
         if sim in ("classic", "sweetspot"):
             return dict(c, w32=None, w64=b * w["cidf64"])
@@ -1507,7 +1284,7 @@ def _annotate_leaf(c, st, weights, outer_boost: float = 1.0,
         keys = c["keys"]
         if not all(k in st for k in keys):
             return None
-        b = c["boost"] * outer_boost
+        b = c["boost"]
         w32 = float(np.float32(np.float32(b) * np.float32(
             sum(np.float32(weights[k]["idf32"]) for k in keys))))
         w64 = b * sum(weights[k]["idf64"] for k in keys)
@@ -1520,7 +1297,7 @@ def _annotate_leaf(c, st, weights, outer_boost: float = 1.0,
         keys = _interval_required_keys(c["root"])
         if not all(k in st for k in keys):
             return None    # a required interval key is dead
-        b = c["boost"] * outer_boost
+        b = c["boost"]
         return dict(c, w32=float(np.float32(b)), w64=b)
     if kind == "multiphrase":
         if sim != "bm25":
@@ -1535,7 +1312,7 @@ def _annotate_leaf(c, st, weights, outer_boost: float = 1.0,
         if any(not slot for slot in slots):
             return None
         keys = [k for slot in slots for k in slot]
-        b = c["boost"] * outer_boost
+        b = c["boost"]
         w32 = float(np.float32(np.float32(b) * np.float32(
             sum(np.float32(weights[k]["idf32"]) for k in keys))))
         w64 = b * sum(weights[k]["idf64"] for k in keys)
@@ -1554,22 +1331,13 @@ def _annotate_leaf(c, st, weights, outer_boost: float = 1.0,
         keys = [k for k in keys if k in st]
         if not keys:
             return None
-        b = c["boost"] * outer_boost
+        b = c["boost"]
         w32 = float(np.float32(np.float32(b) * np.float32(
             sum(np.float32(weights[k]["idf32"]) for k in keys))))
         w64 = b * sum(weights[k]["idf64"] for k in keys)
         return dict(c, root=root, w32=w32, w64=w64,
                     required=_span_required_keys(root))
-    # dismax — the outer boost folds into each disjunct's weight
-    children = []
-    for ch in c["children"]:
-        ann = _annotate_leaf(ch, st, weights,
-                             c.get("boost", 1.0) * outer_boost, sim)
-        if ann is not None:
-            children.append(ann)
-    if not children:
-        return None
-    return dict(c, children=children)
+    raise ValueError(f"not a leaf: {kind!r}")
 
 
 def _annotate_tree(node, st, weights, sim: str = "bm25"):
@@ -1577,8 +1345,7 @@ def _annotate_tree(node, st, weights, sim: str = "bm25"):
     cannot match: a required child is dead, or msm exceeds the live
     SHOULD count — the stats-level analog of the rewrite rules)."""
     kind = node["kind"]
-    if kind in ("term", "phrase", "multiphrase", "span", "spantree",
-                "interval"):
+    if kind in _LEAF_KINDS:
         return _annotate_leaf(node, st, weights, sim=sim)
     if kind == "dismax":
         kids = [_annotate_tree(ch, st, weights, sim)
@@ -1633,46 +1400,14 @@ def _key_filter(keys: list[tuple[str, str]]):
 # the per-partition kernel
 # ---------------------------------------------------------------------------
 
-def _bucket_kernel(batches, spec):
-    """Iterate bucket-sorted block rows; score one bucket at a time.
-
-    Carries the pruning threshold across buckets within the partition
-    (the per-slice MaxScoreAccumulator analog — thresholds don't cross
-    partitions, which only costs pruning efficiency, never correctness).
-    """
-    buf = None
-    threshold = -np.inf
-    heap: list = []  # (score, -doc_id) min-heap of partition-local top-k
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        if buf is not None:
-            pdf = pd.concat([buf, pdf], ignore_index=True)
-            buf = None
-        bucket_vals = pdf["bucket"].to_numpy()
-        tail_mask = bucket_vals == bucket_vals[-1]
-        buf = pdf[tail_mask]
-        head = pdf[~tail_mask]
-        if len(head):
-            for _, grp in head.groupby("bucket", sort=True):
-                out, threshold = _score_bucket(grp, spec, threshold, heap)
-                if out is not None:
-                    yield out
-    if buf is not None and len(buf):
-        out, threshold = _score_bucket(buf, spec, threshold, heap)
-        if out is not None:
-            yield out
-    # top-k mode: ONE flush of the partition heap — the driver receives
-    # at most partitions × k rows, never buckets × k (scale posture)
-    if not spec["collect_all"]:
-        out = _flush_heap(heap)
-        if out is not None:
-            yield out
-
-
 def _bucket_kernel_multi(batches, specs):
-    """Multi-query variant of _bucket_kernel: one pass over the bucket-
-    sorted rows scores every spec, with independent heaps/thresholds."""
+    """Iterate bucket-sorted block rows; score each bucket once per spec,
+    every spec with its own heap and pruning threshold.
+
+    Thresholds are carried across buckets within the partition (the
+    per-slice MaxScoreAccumulator analog — they don't cross partitions,
+    which only costs pruning efficiency, never correctness).
+    """
     buf = None
     states = [{"threshold": -np.inf, "heap": []} for _ in specs]
 
@@ -1703,7 +1438,8 @@ def _bucket_kernel_multi(batches, specs):
                 yield from run_bucket(grp)
     if buf is not None and len(buf):
         yield from run_bucket(buf)
-    # one heap flush per query: driver receives ≤ partitions × k × queries
+    # top-k mode: ONE heap flush per query — the driver receives at most
+    # partitions × k rows per query, never buckets × k (scale posture)
     for qi, spec in enumerate(specs):
         if spec["collect_all"]:
             continue
@@ -1727,29 +1463,31 @@ def _push_heap(heap, k, scores, docs, threshold):
 
 class _BucketData:
     """Lazy per-bucket decode cache: each (field, term) key decodes at
-    most once per bucket regardless of how many clauses reference it."""
+    most once per bucket regardless of how many leaves reference it.
+    ``by_key`` holds each key's block rows as dicts, in block order."""
 
-    __slots__ = ("by_key", "spec", "off", "dec", "decp")
+    __slots__ = ("by_key", "off", "dec", "decp", "bmax")
 
-    def __init__(self, grp: pd.DataFrame, spec, off: int):
-        self.by_key = {k: g for k, g in grp.groupby(["field", "term"],
-                                                    sort=False)}
-        self.spec = spec
+    def __init__(self, grp: pd.DataFrame, off: int):
+        self.by_key: dict = {}
+        for r in grp.to_dict("records"):
+            self.by_key.setdefault((r["field"], r["term"]), []).append(r)
         self.off = off
         self.dec: dict = {}
         self.decp: dict = {}
+        self.bmax: dict = {}     # id(term leaf) → per-block score bounds
 
     def decode(self, key):
         """(docs, freqs, norms) for the key within the bucket, or None."""
         if key in self.dec:
             return self.dec[key]
-        g = self.by_key.get(key)
-        if g is None:
+        rows = self.by_key.get(key)
+        if rows is None:
             self.dec[key] = None
             return None
         docs_l, freqs_l, norms_l = [], [], []
-        for row in g.itertuples(index=False):
-            d, f, n = decode_postings_block(row._asdict())
+        for r in rows:
+            d, f, n = decode_postings_block(r)
             docs_l.append(d)
             freqs_l.append(f)
             norms_l.append(n)
@@ -1766,13 +1504,12 @@ class _BucketData:
         within each doc (fully vectorized, no per-doc loop)."""
         if key in self.decp:
             return self.decp[key]
-        g = self.by_key.get(key)
-        if g is None:
+        rows = self.by_key.get(key)
+        if rows is None:
             self.decp[key] = None
             return None
         docs_l, freqs_l, norms_l, pos_l = [], [], [], []
-        for row in g.itertuples(index=False):
-            r = row._asdict()
+        for r in rows:
             d, f, n = decode_postings_block(r)
             docs_l.append(d)
             freqs_l.append(f)
@@ -1803,117 +1540,44 @@ class _BucketData:
 
 
 def _score_bucket(grp: pd.DataFrame, spec, threshold, heap):
-    if "tree" in spec:
-        return _score_bucket_tree(grp, spec, threshold, heap)
+    """Evaluate the annotated tree to a (mask, score) pair over the
+    bucket grid and feed the hits to the heap (or emit them, exhaustive
+    mode). Pruning, top-k mode only:
+
+      bucket  the tree's upper bound (block-max skylines) below the
+              threshold skips the whole bucket;
+      block   (the WANDScorer / BlockMaxConjunctionScorer roles) a term
+              leaf whose path to the root runs through MUST/SHOULD edges
+              of bool nodes only adds its score straight into the
+              root's, so a doc scores at most the bounds of the leaves
+              it matches plus the constants. A block of such a leaf
+              whose block max + the bounds of all other leaves is below
+              the threshold holds no top-k doc and is never decoded.
+              Dropping its matches only shrinks masks (no MUST_NOT or
+              dismax above the leaf); a doc that still matches scores
+              below the threshold anyway, so the heap never takes it.
+    """
     grid = spec["grid"]
-    bucket = int(grp["bucket"].iloc[0])
-    off = bucket * grid
-    mode = spec["mode"]
-    dtype = np.float32 if mode == "f32" else np.float64
-    data = _BucketData(grp, spec, off)
-
-    clauses = spec["clauses"]
-    n_groups = spec["n_groups"]
-    msm = spec["msm"]
-
-    # ---- group-death + bucket-level upper bound (block-max data) ---------
-    group_present = [False] * n_groups
-    for c in clauses:
-        if c["group"] is not None and _clause_present(c, data):
-            group_present[c["group"]] = True
-    if n_groups and not all(group_present):
-        return None, threshold   # a required group is absent from the bucket
-
-    clause_ub = {}
+    off = int(grp["bucket"].iloc[0]) * grid
+    dtype = np.float32 if spec["mode"] == "f32" else np.float64
+    data = _BucketData(grp, off)
+    root = spec["tree"]
+    if not _tree_present(root, data):
+        return None, threshold
+    skip = None
     if spec["prune"]:
-        ub = 0.0
-        for ci, c in enumerate(clauses):
-            u = _clause_bucket_ub(c, data, spec)
-            clause_ub[ci] = u
-            ub += u
-        ub = ub * (1.0 + _UB_EPS) + _UB_EPS
-        if not spec["collect_all"] and ub < threshold:
+        leaf_ubs: dict = {}
+        ub = (_tree_ub(root, data, spec, dtype, leaf_ubs)
+              * (1.0 + _UB_EPS) + _UB_EPS)
+        if ub < threshold:
             return None, threshold
-        ub_total = ub
-    else:
-        ub_total = np.inf
-
-    score = np.zeros(grid, dtype=dtype)
-    grp_matched = (np.zeros((n_groups, grid), dtype=bool) if n_groups else None)
-    need_should = msm > 0 or n_groups == 0
-    should_cnt = np.zeros(grid, dtype=np.int16) if need_should else None
-
-    # Block-max skipping (WANDScorer + BlockMaxConjunctionScorer roles):
-    # a block may be skipped whenever every doc in it has
-    #   blockmax(this clause) + Σ other scoring clauses' bucket max
-    # below the current top-k threshold — such a doc can never enter the
-    # final top-k, so dropping it from scoring AND from match/msm
-    # tracking only removes rows that the driver merge would discard
-    # anyway (masks only shrink; surviving docs' scores are exact).
-    # MUST_NOT blocks are never skipped (skipping would un-exclude).
-    block_skip = spec["prune"] and not spec["collect_all"]
-
-    for ci, c in enumerate(clauses):
-        if c["kind"] == "term":
-            res = _eval_term(c, data, spec, dtype,
-                             skip=block_skip,
-                             ub_other=(ub_total - clause_ub.get(ci, 0.0)
-                                       if block_skip else 0.0),
-                             threshold=threshold)
-        elif c["kind"] == "phrase":
-            res = _eval_phrase(c, data, spec, dtype)
-        elif c["kind"] == "multiphrase":
-            res = _eval_multiphrase(c, data, spec, dtype)
-        elif c["kind"] == "span":
-            res = _eval_span(c, data, spec, dtype)
-        elif c["kind"] == "spantree":
-            res = _eval_spantree(c, data, spec, dtype)
-        elif c["kind"] == "interval":
-            res = _eval_interval(c, data, spec, dtype)
-        else:
-            res = _eval_dismax(c, data, spec, dtype, grid)
-        if res is None:
-            continue
-        idxs, s = res
-        if len(idxs) == 0:
-            continue
-        if c["scoring"]:
-            score[idxs] += s.astype(dtype, copy=False)
-        if c["group"] is not None:
-            grp_matched[c["group"], idxs] = True
-        elif c["should"] and should_cnt is not None:
-            should_cnt[idxs] += 1
-
-    # must_not exclusion (+ liveDocs tombstones, LeafReader.getLiveDocs)
-    excl = None
+        if threshold > -np.inf:
+            skip = ({i: ub - u for i, u in leaf_ubs.items()}, threshold)
+    mask, score = _eval_tree(root, data, spec, dtype, grid, skip=skip)
     doffs = _bucket_deleted(grp, spec, off, grid)
     if doffs is not None:
-        excl = np.zeros(grid, dtype=bool)
-        excl[doffs] = True
-    for c in spec["must_not"]:
-        # MUST_NOT excludes the clause's full match set — term, phrase,
-        # or dismax (union of disjunct matches; previously dismax under
-        # MUST_NOT was silently dropped)
-        if c["kind"] == "term":
-            d = data.decode(c["key"])
-            res = None if d is None else (d[0] - off, None)
-        else:
-            res = _eval_leaf(c, data, spec, dtype, grid)
-        if res is None or len(res[0]) == 0:
-            continue
-        if excl is None:
-            excl = np.zeros(grid, dtype=bool)
-        excl[res[0]] = True
-
-    # ---- combine masks ----------------------------------------------------
-    if n_groups:
-        mask = grp_matched.all(axis=0)
-        if msm > 0:
-            mask &= should_cnt >= msm
-    else:
-        mask = should_cnt >= max(1, msm)
-    if excl is not None:
-        mask &= ~excl
+        mask = mask.copy()
+        mask[doffs] = False
     hit = np.flatnonzero(mask)
     if len(hit) == 0:
         return None, threshold
@@ -1971,57 +1635,10 @@ def _flush_heap(heap):
         "score": np.array([s for s, _ in heap], dtype=np.float64)})
 
 
-def _eval_leaf(c, data: "_BucketData", spec, dtype, grid):
-    """Evaluate a term/phrase/span/dismax leaf → (idxs, scores) or None."""
-    if c["kind"] == "term":
-        return _eval_term(c, data, spec, dtype)
-    if c["kind"] == "phrase":
-        return _eval_phrase(c, data, spec, dtype)
-    if c["kind"] == "multiphrase":
-        return _eval_multiphrase(c, data, spec, dtype)
-    if c["kind"] == "span":
-        return _eval_span(c, data, spec, dtype)
-    if c["kind"] == "spantree":
-        return _eval_spantree(c, data, spec, dtype)
-    if c["kind"] == "interval":
-        return _eval_interval(c, data, spec, dtype)
-    return _eval_dismax(c, data, spec, dtype, grid)
-
-
-def _score_bucket_tree(grp: pd.DataFrame, spec, threshold, heap):
-    """Recursive-plan variant of _score_bucket: evaluate the annotated
-    tree to a (mask, score) pair over the bucket grid. Pruning is
-    bucket-level only (conservative tree upper bound from the block-max
-    skylines); per-block skipping inside nested plans is not attempted —
-    correctness-safe, costs only pruning efficiency on deep plans."""
-    grid = spec["grid"]
-    bucket = int(grp["bucket"].iloc[0])
-    off = bucket * grid
-    dtype = np.float32 if spec["mode"] == "f32" else np.float64
-    data = _BucketData(grp, spec, off)
-    root = spec["tree"]
-    if not _tree_present(root, data):
-        return None, threshold
-    if spec["prune"] and not spec["collect_all"]:
-        ub = _tree_ub(root, data, spec, dtype) * (1.0 + _UB_EPS) + _UB_EPS
-        if ub < threshold:
-            return None, threshold
-    mask, score = _eval_tree(root, data, spec, dtype, grid, scoring=True)
-    doffs = _bucket_deleted(grp, spec, off, grid)
-    if doffs is not None:
-        mask = mask.copy()
-        mask[doffs] = False
-    hit = np.flatnonzero(mask)
-    if len(hit) == 0:
-        return None, threshold
-    return _emit_hits(hit, score, off, spec, threshold, heap)
-
-
 def _tree_present(node, data: "_BucketData") -> bool:
     """Cheap dictionary-presence check: can the node match in-bucket?"""
     kind = node["kind"]
-    if kind in ("term", "phrase", "multiphrase", "span", "spantree",
-                "interval"):
+    if kind in _LEAF_KINDS:
         return _clause_present(node, data)
     if kind == "dismax":
         return any(_tree_present(ch, data) for ch in node["children"])
@@ -2044,39 +1661,50 @@ def _tree_present(node, data: "_BucketData") -> bool:
     return True
 
 
-def _tree_ub(node, data: "_BucketData", spec, dtype) -> float:
+def _tree_ub(node, data: "_BucketData", spec, dtype,
+             leaf_ubs: dict | None = None) -> float:
     """Conservative max-score upper bound of a tree node in the bucket
-    (block-max skylines; FILTER/MUST_NOT contribute nothing)."""
+    (block-max skylines; FILTER/MUST_NOT contribute nothing). With
+    ``leaf_ubs``, records {id(leaf): bound} for every term leaf reached
+    through bool MUST/SHOULD edges only — the leaves whose blocks
+    `_score_bucket` may skip."""
     kind = node["kind"]
-    if kind in ("term", "phrase", "multiphrase", "span", "spantree",
-                "interval", "dismax"):
-        return _leaf_ub(node, data, spec, dtype)
-    return (sum(_tree_ub(ch, data, spec, dtype) for ch in node["must"])
-            + sum(_tree_ub(ch, data, spec, dtype) for ch in node["should"])
+    if kind == "dismax":
+        # max_child_ub + tie * (sum_others_ub)
+        ubs = [_tree_ub(ch, data, spec, dtype) for ch in node["children"]]
+        ubs = [u for u in ubs if u > 0.0]
+        if not ubs:
+            return 0.0
+        mx, sm = max(ubs), sum(ubs)
+        return mx + node["tie"] * (sm - mx)
+    if kind != "bool":
+        u = _leaf_ub(node, data, spec, dtype)
+        if leaf_ubs is not None and kind == "term":
+            leaf_ubs[id(node)] = u
+        return u
+    return (sum(_tree_ub(ch, data, spec, dtype, leaf_ubs)
+                for ch in node["must"])
+            + sum(_tree_ub(ch, data, spec, dtype, leaf_ubs)
+                  for ch in node["should"])
             + node.get("const", 0.0))
 
 
 def _eval_tree(node, data: "_BucketData", spec, dtype, grid,
-               scoring: bool = True):
+               scoring: bool = True, skip=None):
     """Recursive evaluation → (mask bool[grid], score dtype[grid]);
     score is zeroed outside the mask, so a parent may blindly add it.
     f32 accumulation order (children in appearance order, MUST before
-    SHOULD) is replicated by the pure-Python oracle's tree interpreter."""
+    SHOULD) is replicated by the pure-Python oracle's tree interpreter.
+    ``skip`` = ({id(term leaf): bound of everything else}, threshold)
+    turns on per-block skipping for those leaves (see `_score_bucket`);
+    it only travels down bool MUST/SHOULD edges."""
     kind = node["kind"]
-    if kind in ("term", "phrase", "multiphrase", "span", "spantree",
-                "interval"):
-        if kind == "term":
-            res = _eval_term(node, data, spec, dtype)
-        elif kind == "phrase":
-            res = _eval_phrase(node, data, spec, dtype)
-        elif kind == "multiphrase":
-            res = _eval_multiphrase(node, data, spec, dtype)
-        elif kind == "span":
-            res = _eval_span(node, data, spec, dtype)
-        elif kind == "interval":
-            res = _eval_interval(node, data, spec, dtype)
+    if kind in _LEAF_KINDS:
+        if skip is not None and id(node) in skip[0]:
+            res = _eval_term(node, data, spec, dtype, skip=True,
+                             ub_other=skip[0][id(node)], threshold=skip[1])
         else:
-            res = _eval_spantree(node, data, spec, dtype)
+            res = _LEAF_EVAL[kind](node, data, spec, dtype)
         mask = np.zeros(grid, dtype=bool)
         score = np.zeros(grid, dtype=dtype)
         if res is not None and len(res[0]):
@@ -2108,7 +1736,7 @@ def _eval_tree(node, data: "_BucketData", spec, dtype, grid,
         return np.zeros(grid, dtype=bool), score
     req = None
     for ch in node["must"]:
-        m, s = _eval_tree(ch, data, spec, dtype, grid, scoring)
+        m, s = _eval_tree(ch, data, spec, dtype, grid, scoring, skip)
         req = m if req is None else (req & m)
         if scoring:
             score += s
@@ -2124,7 +1752,7 @@ def _eval_tree(node, data: "_BucketData", spec, dtype, grid,
         # MatchAll SHOULD clauses satisfy the counter for every slot
         cnt = np.full(grid, node.get("all_should", 0), dtype=np.int16)
         for ch in node["should"]:
-            m, s = _eval_tree(ch, data, spec, dtype, grid, scoring)
+            m, s = _eval_tree(ch, data, spec, dtype, grid, scoring, skip)
             cnt += m
             if scoring:
                 score += s
@@ -2161,10 +1789,8 @@ def _clause_present(c, data: _BucketData) -> bool:
         # required-leaf presence (sor alternatives / snot excludes are
         # optional); conservative — never skips a matchable bucket
         return all(k in data.by_key for k in c["required"])
-    if c["kind"] == "interval":
-        return all(k in data.by_key
-                   for k in _interval_required_keys(c["root"]))
-    return any(_clause_present(ch, data) for ch in c["children"])
+    return all(k in data.by_key
+               for k in _interval_required_keys(c["root"]))   # interval
 
 
 def _term_w(c, spec, dtype):
@@ -2245,72 +1871,66 @@ def _score_freqs(freqs, norms, w, field, spec, dtype, cp=None):
     return w * f / (f + k1 * (1.0 - b + b * dl / spec["avgdl64"][field]))
 
 
-def _max_impact(imp_freqs, imp_norms, w, field, spec, dtype, cp=None):
-    if len(imp_freqs) == 0:
-        return 0.0
+def _block_max(rows, w, field, spec, dtype, cp=None) -> np.ndarray:
+    """Per-block score bound (float64) of one key's block rows: the max
+    over each block's competitive-impact skyline, every block in one
+    vectorized pass over the concatenated skylines."""
+    fr = [np.asarray(r["imp_freqs"], dtype=np.int64) for r in rows]
+    lens = np.array([len(x) for x in fr], dtype=np.int64)
+    out = np.zeros(len(rows), dtype=np.float64)
+    if not lens.any():
+        return out
+    freqs = np.concatenate(fr)
     if spec.get("sim") == "sweetspot":
         # SweetSpot's lengthNorm is NOT anti-monotone in doc length (it
         # RISES toward the [min,max] plateau), so the pareto skyline's
         # (freq↑, norm↓) guarantee does not bound it — bound with the
         # plateau value ln=1.0 (the global max), monotone in freq only.
         l, h, st_, tb, tm = spec["ss"]
-        f = np.asarray(imp_freqs, dtype=np.float64)
-        tf = np.where(f <= tm, tb, np.sqrt(f + tb * tb - tm))
-        return float(np.max(w * tf))
-    s = _score_freqs(np.asarray(imp_freqs, dtype=np.int64),
-                     np.asarray(imp_norms, dtype=np.int64),
-                     w, field, spec, dtype, cp=cp)
-    return float(np.max(s))
+        f = freqs.astype(np.float64)
+        s = w * np.where(f <= tm, tb, np.sqrt(f + tb * tb - tm))
+    else:
+        norms = np.concatenate([np.asarray(r["imp_norms"], dtype=np.int64)
+                                for r in rows])
+        s = _score_freqs(freqs, norms, w, field, spec, dtype, cp=cp)
+    nz = lens > 0
+    starts = np.concatenate(([0], np.cumsum(lens[nz])[:-1]))
+    out[nz] = np.maximum.reduceat(np.asarray(s, dtype=np.float64), starts)
+    return out
 
 
-def _clause_bucket_ub(c, data: _BucketData, spec) -> float:
-    """Float64 upper bound of a FLAT clause's max contribution in the
-    bucket (per-block competitive-impact skylines); 0 for non-scoring."""
-    if not c.get("scoring", True):
-        return 0.0
-    dtype = np.float32 if spec["mode"] == "f32" else np.float64
-    return _leaf_ub(c, data, spec, dtype)
+def _term_block_max(c, data: _BucketData, spec, dtype) -> np.ndarray:
+    """`_block_max` of a term leaf in the bucket, computed once per leaf
+    (the bucket bound and the per-block skip both read it)."""
+    bm = data.bmax.get(id(c))
+    if bm is None:
+        bm = _block_max(data.by_key[c["key"]], _term_w(c, spec, dtype),
+                        c["key"][0], spec, dtype, cp=c.get("cp64"))
+        data.bmax[id(c)] = bm
+    return bm
 
 
 def _leaf_ub(c, data: _BucketData, spec, dtype) -> float:
-    """Upper bound of a term/phrase/dismax leaf (recursing disjuncts)."""
+    """Float64 upper bound of a leaf's max score in the bucket."""
     if c["kind"] == "term":
-        g = data.by_key.get(c["key"])
-        if g is None:
+        if c["key"] not in data.by_key:
             return 0.0
-        w = _term_w(c, spec, dtype)
-        m = 0.0
-        for fr, no in zip(g["imp_freqs"], g["imp_norms"]):
-            m = max(m, _max_impact(fr, no, w, c["key"][0], spec, dtype,
-                                   cp=c.get("cp64")))
-        return m
+        return max(0.0, float(_term_block_max(c, data, spec, dtype).max()))
     if c["kind"] in ("phrase", "span"):
         if not _clause_present(c, data):
             return 0.0
         # phrase/span freq <= min term freq in doc; bound by the weight
         # applied at the max min-term impact (cheap, safe bound)
         w = np.float32(c["w32"]) if dtype is np.float32 else c["w64"]
-        field = c["keys"][0][0]
-        m = 0.0
-        g = data.by_key.get(c["keys"][0])
-        for fr, no in zip(g["imp_freqs"], g["imp_norms"]):
-            m = max(m, _max_impact(fr, no, w, field, spec, dtype))
-        return m
-    if c["kind"] in ("multiphrase", "spantree", "interval"):
-        if not _clause_present(c, data):
-            return 0.0
-        # BM25 is bounded by the clause weight for ANY freq:
-        # f32 w − w/(1+f·ni) < w; f64 w·f/(f+k1(…)) < w — cheap, safe
-        return float(c["w32"] if dtype is np.float32 else c["w64"])
-    if c["kind"] == "bool":        # dismax child may be a nested bool
-        return _tree_ub(c, data, spec, dtype)
-    # dismax: max_child_ub + tie * (sum_others_ub)
-    ubs = [_leaf_ub(ch, data, spec, dtype) for ch in c["children"]]
-    ubs = [u for u in ubs if u > 0.0]
-    if not ubs:
+        bm = _block_max(data.by_key[c["keys"][0]], w, c["keys"][0][0],
+                        spec, dtype)
+        return max(0.0, float(bm.max()))
+    # multiphrase / spantree / interval
+    if not _clause_present(c, data):
         return 0.0
-    mx, sm = max(ubs), sum(ubs)
-    return mx + c["tie"] * (sm - mx)
+    # BM25 is bounded by the clause weight for ANY freq:
+    # f32 w − w/(1+f·ni) < w; f64 w·f/(f+k1(…)) < w — cheap, safe
+    return float(c["w32"] if dtype is np.float32 else c["w64"])
 
 
 def _eval_term(c, data: _BucketData, spec, dtype, skip=False,
@@ -2319,25 +1939,21 @@ def _eval_term(c, data: _BucketData, spec, dtype, skip=False,
     field = key[0]
     w = _term_w(c, spec, dtype)
     if skip and key not in data.dec:
-        g = data.by_key.get(key)
-        if g is None:
+        rows = data.by_key.get(key)
+        if rows is None:
             return None
         # per-block skip: a block whose max possible TOTAL score is below
         # the current threshold cannot contribute a top-k doc
-        idx_l, s_l = [], []
-        for row in g.itertuples(index=False):
-            r = row._asdict()
-            bm = _max_impact(r["imp_freqs"], r["imp_norms"], w, field,
-                             spec, dtype, cp=c.get("cp64"))
-            if (bm + ub_other) * (1.0 + _UB_EPS) + _UB_EPS < threshold:
-                continue
-            d, f, n = decode_postings_block(r)
-            idx_l.append(d - data.off)
-            s_l.append(_score_freqs(f, n, w, field, spec, dtype,
-                                    cp=c.get("cp64")))
-        if not idx_l:
+        bm = _term_block_max(c, data, spec, dtype)
+        keep = np.flatnonzero(
+            ~((bm + ub_other) * (1.0 + _UB_EPS) + _UB_EPS < threshold))
+        if len(keep) == 0:
             return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=dtype)
-        return np.concatenate(idx_l), np.concatenate(s_l)
+        if len(keep) < len(rows):
+            d, f, n = (np.concatenate(x) for x in zip(
+                *(decode_postings_block(rows[i]) for i in keep)))
+            return d - data.off, _score_freqs(f, n, w, field, spec, dtype,
+                                              cp=c.get("cp64"))
     d = data.decode(key)
     if d is None:
         return None
@@ -3068,28 +2684,6 @@ def _eval_interval(c, data: _BucketData, spec, dtype):
     return idxs, s
 
 
-def _eval_dismax(c, data: _BucketData, spec, dtype, grid):
-    """DisjunctionMaxQuery: score = max + tie × (sum − max) over matching
-    disjuncts (DisjunctionMaxQuery.java:51,61). Disjuncts may be any
-    leaf kind — term, phrase, or nested dismax."""
-    mx = np.zeros(grid, dtype=dtype)
-    sm = np.zeros(grid, dtype=dtype)
-    matched = np.zeros(grid, dtype=bool)
-    any_child = False
-    for ch in c["children"]:
-        res = _eval_leaf(ch, data, spec, dtype, grid)
-        if res is None:
-            continue
-        idxs, s = res
-        if len(idxs) == 0:
-            continue
-        any_child = True
-        sm[idxs] += s.astype(dtype, copy=False)
-        np.maximum.at(mx, idxs, s.astype(dtype, copy=False))
-        matched[idxs] = True
-    if not any_child:
-        return None
-    idxs = np.flatnonzero(matched)
-    tie = dtype(c["tie"])
-    s = mx[idxs] + tie * (sm[idxs] - mx[idxs])
-    return idxs, s
+_LEAF_EVAL = {"term": _eval_term, "phrase": _eval_phrase,
+              "multiphrase": _eval_multiphrase, "span": _eval_span,
+              "spantree": _eval_spantree, "interval": _eval_interval}

@@ -3,14 +3,18 @@
 The reference treats explanations as part of the correctness contract
 (`search/IndexSearcher.java:814` explain, checked by
 `CheckHits.checkExplanations:280`: the explanation's value must equal
-the score the scorer produced). Same here: ``explain`` recomputes a
-doc's score per CLAUSE from driver-fetched postings using the exact
-float32 kernel arithmetic, and tests assert the totals are bit-equal to
-``Searcher.top_k`` scores.
+the score the scorer produced). Same here, by construction: ``explain``
+evaluates the query's annotated tree plan with the kernel's own
+`_BucketData` / `_eval_tree` over the postings of the buckets that hold
+the requested docs, and reports every node's value at every doc. The
+root value is bit-equal to the ``Searcher.top_k`` score for every leaf
+kind and any nesting depth, and a bool node's details sum (float32, in
+the kernel's order: MUST, FILTER, SHOULD, then the MatchAll constant)
+to its value.
 
 Driver-side by design — explain is a per-doc debugging surface, not a
-scan operator; the fetch is a term-filtered (pushed-down) scan
-restricted to the requested docs.
+scan operator; the fetch is a term- and bucket-filtered (pushed-down)
+scan.
 """
 
 from __future__ import annotations
@@ -19,180 +23,119 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from ..functions.smallfloat import LENGTH_TABLE
-from ..index.builder import decode_positions_blob, decode_postings_block
+from .executor import (_BucketData, _LEAF_KINDS, _bucket_deleted,
+                       _eval_tree)
 
 
-def _fetch(searcher, keys, doc_ids, want_pos):
-    """{(field, term): {doc: (freq, norm, positions)}} for the doc set."""
-    from .executor import _key_filter
-    cols = ["field", "term", "block_id", "doc_count",
-            "doc_blob", "freq_blob", "norm_blob"]
-    if want_pos:
-        cols.append("pos_blob")
-    rows = (searcher.index.postings.filter(_key_filter(keys))
-            .select(*cols).collect())
-    docset = set(int(d) for d in doc_ids)
-    out: dict = {}
-    for r in rows:
-        d, f, n = decode_postings_block(r)
-        hits = [i for i, dd in enumerate(d) if int(dd) in docset]
-        if not hits:
-            continue
-        pos = (decode_positions_blob(r["pos_blob"], f)
-               if want_pos and r["pos_blob"] is not None else None)
-        slot = out.setdefault((r["field"], r["term"]), {})
-        for i in hits:
-            slot[int(d[i])] = (int(f[i]), int(n[i]),
-                               pos[i] if pos is not None else None)
+def _describe(node) -> str:
+    kind = node["kind"]
+    if kind == "term":
+        return "weight({}:{})".format(*node["key"])
+    if kind in ("phrase", "span"):
+        return f"{kind}({node['keys']}~{node['slop']})"
+    if kind == "multiphrase":
+        return f"multiphrase({node['slots']}~{node['slop']})"
+    if kind == "dismax":
+        return f"dismax(tie={node['tie']})"
+    if kind == "bool":
+        return f"boolean(msm={node['msm']})"
+    return kind
+
+
+def _explain_node(node, data, spec, dtype, grid, locs, scoring=True):
+    """→ one detail dict per bucket offset in ``locs``: the node's match
+    flag and value there (the kernel's own `_eval_tree`), with the
+    details of its matching children nested under "details"."""
+    mask, score = _eval_tree(node, data, spec, dtype, grid, scoring)
+    kind = node["kind"]
+    if kind == "bool":
+        kids = [(occur, ch, scoring and occur in ("must", "should"))
+                for occur in ("must", "filter", "should", "must_not")
+                for ch in node[occur]]
+    elif kind == "dismax":
+        kids = [("disjunct", ch, scoring) for ch in node["children"]]
+    else:
+        kids = []
+    sub = [(occur, _explain_node(ch, data, spec, dtype, grid, locs, sc))
+           for occur, ch, sc in kids]
+    w = node.get("w32" if dtype is np.float32 else "w64")
+    post = data.decode(node["key"]) if kind == "term" else None
+    out = []
+    for i, loc in enumerate(locs):
+        e = {"description": _describe(node), "match": bool(mask[loc]),
+             "value": float(score[loc])}
+        if kind in _LEAF_KINDS:
+            e.update(boost=node["boost"], weight=float(w))
+        if post is not None:
+            j = np.searchsorted(post[0], loc + data.off)
+            if j < len(post[0]) and post[0][j] == loc + data.off:
+                e.update(freq=int(post[1][j]),
+                         dl=int(LENGTH_TABLE[int(post[2][j]) & 0xFF]))
+        details = [dict(s[i], occur=occur) for occur, s in sub
+                   if s[i]["match"]]
+        if kind == "bool" and node.get("const") and mask[loc] and scoring:
+            details.append({"description": "MatchAllDocsQuery",
+                            "match": True,
+                            "value": float(dtype(node["const"]))})
+        if details:
+            e["details"] = details
+        out.append(e)
     return out
 
 
-def _phrase_pf(keys, slop, doc, data):
-    """Min-displacement phrase freq for one doc (kernel semantics)."""
-    pls = []
-    for k in keys:
-        e = data.get(k, {}).get(doc)
-        if e is None or e[2] is None:
-            return 0.0
-        pls.append(list(e[2]))
-    pf = 0.0
-    for p0 in pls[0]:
-        tot = 0.0
-        for i in range(1, len(pls)):
-            tot += min(abs(p - (p0 + i)) for p in pls[i])
-            if tot > slop:
-                break
-        if tot <= slop:
-            pf += 1.0 / (1.0 + tot)
-    return pf
-
-
 def explain(searcher, query, doc_ids: list[int], mode: str = "f32") -> dict:
-    """→ {doc_id: {"match": bool, "value": float,
-                   "details": [per-clause dicts]}}.
+    """→ {doc_id: {"match": bool, "value": float, "details": [...]}}.
 
-    Each detail carries the clause description, its float32 contribution,
-    and the BM25 inputs (boost, idf/weight, freq, quantized dl) — the
-    `weight(field:term in doc) = score(freq=..., norm=...)` shape of the
-    reference's Explanation tree."""
+    The top-level details are the root's explanation: the root node
+    itself for a leaf or dismax root, the matching clauses (each with
+    its own nested details) for a boolean root. Leaves carry their
+    boost and weight, term leaves also freq and quantized dl — the
+    `weight(field:term in doc) = score(freq=..., norm=...)` shape of
+    the reference's Explanation tree."""
+    doc_ids = [int(d) for d in doc_ids]
+    if searcher.sim != "bm25":
+        mode = "f64"      # non-BM25 similarities are f64-only
+    out = {d: {"match": False, "value": 0.0, "details": []}
+           for d in doc_ids}
     plan = searcher._plan(query)
     if plan is None:
-        return {int(d): {"match": False, "value": 0.0, "details": []}
-                for d in doc_ids}
+        return out
     if plan == "ALL":
-        return {int(d): {"match": True, "value": 1.0,
-                         "details": [{"description": "MatchAllDocsQuery",
-                                      "value": 1.0}]} for d in doc_ids}
-    if "tree" in plan:
-        # Nested (recursive) plans: per-clause decomposition is not
-        # attempted — recompute match + total via the kernel itself
-        # (bit-exact by construction) and emit one summary detail.
+        return {d: {"match": True, "value": 1.0,
+                    "details": [{"description": "MatchAllDocsQuery",
+                                 "value": 1.0}]} for d in doc_ids}
+    if "tree" not in plan:
+        # unbounded / exists compositions are DataFrame joins, not a
+        # tree: report the composed score as one summary detail
         rows = (searcher.score_all(query, mode=mode)
-                .filter(F.col("doc_id").isin([int(d) for d in doc_ids]))
-                .collect())
-        vals = {int(r["doc_id"]): float(r["score"]) for r in rows}
-        return {int(d): {
-            "match": int(d) in vals,
-            "value": vals.get(int(d), 0.0),
-            "details": [{"description": "nested boolean (tree plan)",
-                         "value": vals.get(int(d), 0.0)}]
-            if int(d) in vals else []} for d in doc_ids}
-    spec, live, dead = searcher._spec_for_plan(plan, mode, k=10, prune=False,
+                .filter(F.col("doc_id").isin(doc_ids)).collect())
+        for r in rows:
+            v = float(r["score"])
+            out[int(r["doc_id"])] = {
+                "match": True, "value": v,
+                "details": [{"description": "composition", "value": v}]}
+        return out
+    spec, live, dead = searcher._spec_for_plan(plan, mode, 0, False,
                                                collect_all=True)
     if dead:
-        return {int(d): {"match": False, "value": 0.0, "details": []}
-                for d in doc_ids}
-    want_pos = any(c["kind"] == "phrase"
-                   for c in spec["clauses"] + spec["must_not"])
-    data = _fetch(searcher, live, doc_ids, want_pos)
-    f32 = mode == "f32"
-
-    def bm25_val(freq, norm, w, field):
-        if f32:
-            ni = spec["cache32"][field][norm & 0xFF]
-            fq = np.float32(freq)
-            return np.float32(np.float32(w) - np.float32(w)
-                              / (np.float32(1.0) + fq * ni))
-        dl = float(LENGTH_TABLE[norm & 0xFF])
-        k1, b = spec["k1"], spec["b"]
-        return w * freq / (freq + k1 * (1.0 - b + b * dl
-                                        / spec["avgdl64"][field]))
-
-    out = {}
-    for d in doc_ids:
-        d = int(d)
-        acc = np.float32(0.0) if f32 else 0.0
-        details = []
-        group_ok = [False] * spec["n_groups"]
-        should_n = 0
-        for c in spec["clauses"]:
-            w = c.get("w32" if f32 else "w64")
-            val = None
-            if c["kind"] == "term":
-                e = data.get(c["key"], {}).get(d)
-                if e is not None:
-                    freq, norm = e[0], e[1]
-                    val = bm25_val(freq, norm, w, c["key"][0])
-                    details.append({
-                        "description": (f"weight({c['key'][0]}:{c['key'][1]} "
-                                        f"in {d})"),
-                        "value": float(val), "boost": c["boost"],
-                        "weight": float(w), "freq": freq,
-                        "dl": int(LENGTH_TABLE[norm & 0xFF])})
-            elif c["kind"] == "phrase":
-                pf = _phrase_pf(c["keys"], c["slop"], d, data)
-                if pf > 0:
-                    e0 = data[c["keys"][0]][d]
-                    val = bm25_val(np.float32(pf) if f32 else pf,
-                                   e0[1], w, c["keys"][0][0])
-                    details.append({
-                        "description": f"phrase({c['keys']}~{c['slop']})",
-                        "value": float(val), "phrase_freq": pf,
-                        "weight": float(w)})
-            else:  # dismax
-                vals = []
-                for ch in c["children"]:
-                    e = data.get(ch["key"], {}).get(d)
-                    if e is not None:
-                        cw = ch.get("w32" if f32 else "w64")
-                        vals.append(bm25_val(e[0], e[1], cw, ch["key"][0]))
-                if vals:
-                    if f32:
-                        sm = np.float32(0.0)
-                        mx = np.float32(vals[0])
-                        for v in vals:
-                            sm = np.float32(sm + v)
-                            mx = max(mx, v)
-                        val = np.float32(mx + np.float32(c["tie"])
-                                         * np.float32(sm - mx))
-                    else:
-                        sm, mx = sum(vals), max(vals)
-                        val = mx + c["tie"] * (sm - mx)
-                    details.append({
-                        "description": f"dismax(tie={c['tie']})",
-                        "value": float(val),
-                        "disjuncts": [float(v) for v in vals]})
-            if val is not None:
-                if c["scoring"]:
-                    acc = np.float32(acc + val) if f32 else acc + val
-                if c["group"] is not None:
-                    group_ok[c["group"]] = True
-                elif c["should"]:
-                    should_n += 1
-        excluded = False
-        for c in spec["must_not"]:
-            if c["kind"] == "term":
-                if d in data.get(c["key"], {}):
-                    excluded = True
-            elif _phrase_pf(c["keys"], c.get("slop", 0), d, data) > 0:
-                excluded = True
-        if spec["n_groups"]:
-            match = all(group_ok) and (spec["msm"] == 0
-                                       or should_n >= spec["msm"])
-        else:
-            match = should_n >= max(1, spec["msm"])
-        match = match and not excluded
-        out[d] = {"match": bool(match),
-                  "value": float(acc) if match else 0.0,
-                  "details": details if match else details}
+        return out
+    grid = spec["grid"]
+    buckets = sorted({d // grid for d in doc_ids})
+    pdf = (searcher._blocks(live).filter(F.col("bucket").isin(buckets))
+           .toPandas().sort_values(["bucket", "field", "term", "block_id"]))
+    dtype = np.float32 if mode == "f32" else np.float64
+    for bucket, grp in pdf.groupby("bucket"):
+        off = int(bucket) * grid
+        docs = [d for d in doc_ids if d // grid == bucket]
+        dead_offs = _bucket_deleted(grp, spec, off, grid)
+        dead_offs = set() if dead_offs is None else set(dead_offs.tolist())
+        root = _explain_node(spec["tree"], _BucketData(grp, off),
+                             spec, dtype, grid, [d - off for d in docs])
+        for d, e in zip(docs, root):
+            if not e["match"] or d - off in dead_offs:
+                continue
+            details = (e.pop("details", [])
+                       if spec["tree"]["kind"] == "bool" else [e])
+            out[d] = {"match": True, "value": e["value"],
+                      "details": details}
     return out

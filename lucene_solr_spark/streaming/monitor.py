@@ -19,9 +19,11 @@ Spark-first restatement:
   one pushed-predicate probe of the batch's terms table for the UNION
   of registered keys);
 - every surviving query is evaluated in ONE kernel pass over the batch
-  index (`_bucket_kernel_multi` with exhaustive specs — the same
+  index (`Searcher._kernel` with exhaustive specs — the same
   single-scan-many-queries shape as ``top_k_many``), so match cost is
-  O(batch × touched terms), not O(batch × queries);
+  O(batch × touched terms), not O(batch × queries); the compositions
+  the kernel does not scan (MatchAll, pure negation, FieldExistsQuery)
+  run as ``match_docs`` joins over the batch index;
 - ``match_stream`` wires it to Structured Streaming via foreachBatch,
   appending (batch_id, query_id, doc_id) matches.
 
@@ -36,8 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..analysis.analyzer import ENGLISH_ANALYZER
 from ..index.builder import IndexBuilder
-from ..search.executor import (Searcher, _bucket_kernel_multi, _key_filter,
-                               _leaf_keys, _tree_keys)
+from ..search.executor import Searcher, _tree_keys
 
 MATCH_SCHEMA = "query_id string, doc_id long"
 
@@ -65,19 +66,6 @@ class Monitor:
         return len(self._queries)
 
     # -- matching --------------------------------------------------------
-    @staticmethod
-    def _plan_keys(plan) -> list:
-        """Presearcher key set: positive leaf keys of a flat plan (a doc
-        can only match if one is present); tree plans fall back to ALL
-        keys (conservative — over-inclusion only, never a missed
-        match)."""
-        if "tree" in plan:
-            return list(dict.fromkeys(_tree_keys(plan["tree"])))
-        keys = []
-        for c in plan["clauses"]:
-            keys.extend(_leaf_keys(c))
-        return list(dict.fromkeys(keys))
-
     def match_batch(self, spark: SparkSession, docs: DataFrame,
                     doc_id_col: str = "doc_id") -> DataFrame:
         """→ (query_id, doc_id) for every registered query matching each
@@ -89,31 +77,28 @@ class Monitor:
                                spark, docs, doc_id_col).cache()
         try:
             s = Searcher(spark, idx)
-            plans = {}
-            all_keys = set()
+            trees, parts = {}, []
             for qid, ast in self._queries.items():
                 plan = s._plan(ast)
                 if plan is None:
                     continue
-                plans[qid] = plan
-                if plan != "ALL":
-                    all_keys.update(self._plan_keys(plan))
-            present = set()
-            if all_keys:
-                present = {(r["field"], r["term"]) for r in
-                           idx.terms.filter(_key_filter(sorted(all_keys)))
-                           .select("field", "term").collect()}
-            parts = []
+                if isinstance(plan, dict) and "tree" in plan:
+                    trees[qid] = plan
+                else:       # MatchAll / unbounded / exists compositions
+                    parts.append(s.match_docs(ast).select(
+                        F.lit(qid).alias("query_id"), "doc_id"))
+            # one dictionary probe for every key (it also fills the
+            # searcher's stats cache, so building the specs below
+            # launches no further job)
+            present = set(s.term_stats(list(dict.fromkeys(
+                k for p in trees.values() for k in _tree_keys(p["tree"])))))
             specs, qids, live_union = [], [], []
-            for qid, plan in plans.items():
-                if plan == "ALL":
-                    parts.append(idx.norms.select("doc_id").distinct()
-                                 .select(F.lit(qid).alias("query_id"),
-                                         "doc_id"))
-                    continue
-                keys = self._plan_keys(plan)
+            for qid, plan in trees.items():
+                # presearcher: a doc can only match if one of the tree's
+                # positive (MUST/FILTER/SHOULD) keys is present
+                keys = _tree_keys(plan["tree"], ("must", "filter", "should"))
                 if keys and not (set(keys) & present):
-                    continue        # presearcher skip: cannot match
+                    continue
                 spec, live, dead = s._spec_for_plan(
                     plan, "f64", 1, False, collect_all=True)
                 if dead:
@@ -122,21 +107,11 @@ class Monitor:
                 qids.append(qid)
                 live_union.extend(live)
             if specs:
-                live_union = list(dict.fromkeys(live_union))
-                blocks = idx.postings.filter(_key_filter(live_union))
-                if not idx.with_positions:
-                    blocks = blocks.drop("pos_blob")
-                blocks = blocks.drop("off_blob", "pay_blob")
-
-                def kernel(batches):
-                    yield from _bucket_kernel_multi(batches, specs)
-
-                hits = blocks.mapInPandas(
-                    kernel, schema="query_id int, doc_id long, score double")
                 qmap = spark.createDataFrame(
                     [(i, q) for i, q in enumerate(qids)],
                     "query_id int, qname string")
-                parts.append(hits.join(F.broadcast(qmap), "query_id")
+                parts.append(s._kernel(specs, live_union)
+                             .join(F.broadcast(qmap), "query_id")
                              .select(F.col("qname").alias("query_id"),
                                      "doc_id"))
             if not parts:

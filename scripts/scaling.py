@@ -64,8 +64,7 @@ def child(cores: int, input_path: str, iters: int = 3) -> None:
     # bucket count ~= 128 at either parallelism level (identical layout at
     # N and 4N — the determinism fingerprint below depends on it)
     grid = max(512, n_docs // 128)
-    builder = IndexBuilder(ENGLISH_ANALYZER, grid=grid, head_df=4096,
-                           salt_target=4096, with_positions=True)
+    builder = IndexBuilder(ENGLISH_ANALYZER, grid=grid, with_positions=True)
 
     # warm-up: one full-size build (untimed) to reach steady state — JIT,
     # Python worker pool, shuffle/codegen paths all warm. Then 3 timed

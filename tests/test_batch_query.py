@@ -3,11 +3,15 @@ scores), including MatchAll/MatchNo/unknown-term members of the batch."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
 from lucene_solr_spark.analysis.analyzer import ENGLISH_ANALYZER
 from lucene_solr_spark.index import IndexBuilder
 from lucene_solr_spark.search import Searcher, parse_query
+from lucene_solr_spark.search.ast import (BooleanQuery, Clause,
+                                          FieldExistsQuery, MatchAllQuery,
+                                          Occur, TermQuery)
 from tests.conftest import SF_DIR
 
 QUERIES = ["merge", "spark merge fast", "spark AND table",
@@ -41,3 +45,40 @@ def test_batch_f64_mode(searcher):
     for s, q, got in zip(QUERIES, qs, batch):
         want = searcher.top_k(q, k=5, mode="f64")
         assert got["doc_id"].tolist() == want["doc_id"].tolist(), s
+
+
+# one member per route of the dispatch top_k, top_k_many and score_all
+# share: match-all, unbounded (the NOT-wrapper), exists, nothing (an
+# unknown term) and the kernel
+PATH_QUERIES = {
+    "match_all": (MatchAllQuery(), "ALL"),
+    "not_wrapper": (BooleanQuery((
+        Clause(Occur.MUST_NOT, TermQuery("spark")),
+        Clause(Occur.SHOULD, MatchAllQuery()))), "unbounded"),
+    "exists": (FieldExistsQuery("text"), "exists"),
+    "unknown_term": (TermQuery("zzzqqq"), "tree"),
+    "kernel": (TermQuery("merge"), "tree"),
+}
+
+
+def test_batch_covers_every_plan_path(searcher):
+    names = list(PATH_QUERIES)
+    qs = [PATH_QUERIES[n][0] for n in names]
+    for n, q in zip(names, qs):
+        plan = searcher._plan(q)
+        route = plan if isinstance(plan, str) else next(iter(plan))
+        assert route == PATH_QUERIES[n][1], n
+    batch = searcher.top_k_many(qs, k=10)
+    for n, q, got in zip(names, qs, batch):
+        want = searcher.top_k(q, k=10)
+        assert got["doc_id"].tolist() == want["doc_id"].tolist(), n
+        assert got["score"].tolist() == want["score"].tolist(), n
+        full = (searcher.score_all(q, mode="f32").toPandas()
+                .sort_values(["score", "doc_id"], ascending=[False, True])
+                .head(10))
+        assert got["doc_id"].tolist() == full["doc_id"].tolist(), n
+        assert got["score"].tolist() == \
+            full["score"].astype(np.float32).tolist(), n
+    assert len(batch[names.index("unknown_term")]) == 0
+    assert all(len(batch[names.index(n)]) == 10
+               for n in ("match_all", "not_wrapper", "exists", "kernel"))

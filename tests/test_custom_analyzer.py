@@ -81,7 +81,7 @@ def test_index_bit_identical_to_standard(spark, corpus):
     """The custom restatement of the standard chain must build the
     SAME index through the per-doc path as the standard analyzer
     through the batch path."""
-    kw = dict(grid=64, head_df=32, salt_target=64, with_positions=True)
+    kw = dict(grid=64, with_positions=True)
     std = IndexBuilder(ENGLISH_ANALYZER, **kw).build(spark, corpus)
     cus = IndexBuilder(STANDARD_EQUIV, **kw).build(spark, corpus)
     cols = ["field", "term", "bucket", "block_id", "doc_count",
@@ -104,8 +104,7 @@ def test_custom_chain_searchable(spark, corpus):
     and serves: every hit must actually contain the term."""
     an = CustomAnalyzer(token_filters=(
         lowercase_filter(), drop_filter(lambda t: len(t) <= 1)))
-    idx = IndexBuilder(an, grid=64, head_df=32, salt_target=64,
-                       with_positions=True).build(spark, corpus)
+    idx = IndexBuilder(an, grid=64, with_positions=True).build(spark, corpus)
     s = Searcher(spark, idx)
     res = s.top_k(parse_query("merge", an), k=5)
     assert len(res) > 0

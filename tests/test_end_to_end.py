@@ -30,8 +30,7 @@ def corpus(spark):
     oracle = OracleIndex(ENGLISH_ANALYZER)
     for d, t in zip(pdf["doc_id"], pdf["text"]):
         oracle.add(int(d), t)
-    builder = IndexBuilder(ENGLISH_ANALYZER, grid=64, head_df=50,
-                           salt_target=64, with_positions=True)
+    builder = IndexBuilder(ENGLISH_ANALYZER, grid=64, with_positions=True)
     idx = builder.build(spark, docs).cache()
     return docs, oracle, idx
 

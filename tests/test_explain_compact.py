@@ -16,8 +16,10 @@ from lucene_solr_spark.index.compact import compact, needs_compaction
 from lucene_solr_spark.index.merge import append
 from lucene_solr_spark.search import Searcher, parse_query
 from lucene_solr_spark.search.ast import (BooleanQuery, Clause,
-                                          DisjunctionMaxQuery, Occur,
-                                          PhraseQuery, TermQuery)
+                                          DisjunctionMaxQuery,
+                                          MultiPhraseQuery, Occur,
+                                          PhraseQuery, SpanNearQuery,
+                                          TermQuery)
 from lucene_solr_spark.search.explain import explain
 from tests.conftest import SF_DIR
 
@@ -66,6 +68,44 @@ def test_explain_matches_kernel_scores(searcher, qs):
         for d in e["details"]:
             acc = np.float32(acc + np.float32(d["value"]))
         assert acc == np.float32(row["score"])
+
+
+EXPLAIN_TREES = {
+    "span_near": SpanNearQuery(terms=("key", "agg"), slop=2),
+    "multiphrase": MultiPhraseQuery(slots=(("key",), ("agg", "merge")),
+                                    slop=2),
+    # +a -(b | c): a dismax under MUST_NOT
+    "must_not_dismax": BooleanQuery((
+        Clause(Occur.MUST, TermQuery("spark")),
+        Clause(Occur.MUST_NOT, DisjunctionMaxQuery(
+            (TermQuery("dup"), TermQuery("table")), 0.0)))),
+    # (a AND b) OR c
+    "nested_or_of_and": BooleanQuery((
+        Clause(Occur.SHOULD, BooleanQuery((
+            Clause(Occur.MUST, TermQuery("spark")),
+            Clause(Occur.MUST, TermQuery("table"))))),
+        Clause(Occur.SHOULD, TermQuery("merge")))),
+}
+
+
+@pytest.mark.parametrize("label", list(EXPLAIN_TREES))
+def test_explain_tree_shapes(searcher, label):
+    """Every leaf kind and nesting depth: the value is the top_k float32
+    score bit for bit, and the top-level details sum (f32, kernel
+    order) to it."""
+    q = EXPLAIN_TREES[label]
+    top = searcher.top_k(q, k=10)
+    assert len(top) > 0, label
+    ex = explain(searcher, q, top["doc_id"].astype(int).tolist())
+    for _, row in top.iterrows():
+        e = ex[int(row["doc_id"])]
+        assert e["match"], (label, row["doc_id"])
+        assert np.float32(e["value"]) == np.float32(row["score"]), \
+            (label, row["doc_id"], e["value"], row["score"])
+        acc = np.float32(0.0)
+        for d in e["details"]:
+            acc = np.float32(acc + np.float32(d["value"]))
+        assert acc == np.float32(row["score"]), (label, e["details"])
 
 
 def test_explain_dismax_and_nonmatch(searcher):

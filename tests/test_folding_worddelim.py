@@ -85,7 +85,7 @@ def test_folding_index_end_to_end(spark):
                                ascii_folding=True)
     accented = docs.withColumn(
         "text", F.regexp_replace("text", "fast", "fást"))
-    kw = dict(grid=128, head_df=64, salt_target=128, with_positions=True)
+    kw = dict(grid=128, with_positions=True)
     plain = IndexBuilder(ENGLISH_ANALYZER, **kw).build(spark, docs).cache()
     folded = IndexBuilder(fold_an, **kw).build(spark, accented).cache()
     try:
@@ -138,8 +138,7 @@ def test_phonetic_terms_expansion(spark):
     from lucene_solr_spark.analysis.phonetic import phonetic_terms, soundex
     from lucene_solr_spark.index.builder import IndexBuilder
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    idx = IndexBuilder(ENGLISH_ANALYZER, grid=128, head_df=64,
-                       salt_target=128).build(spark, docs)
+    idx = IndexBuilder(ENGLISH_ANALYZER, grid=128).build(spark, docs)
     try:
         assert soundex("mirge") == soundex("merge")
         terms = phonetic_terms(idx.terms, "mirge")

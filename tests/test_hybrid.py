@@ -63,8 +63,7 @@ def test_rrf_end_to_end_bm25_plus_ann(spark):
     sf = "/root/testdata/sf0.001"
     docs = spark.read.parquet(f"{sf}/documents.parquet")
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    idx = IndexBuilder(ENGLISH_ANALYZER, grid=128, head_df=64,
-                       salt_target=128).build(spark, docs)
+    idx = IndexBuilder(ENGLISH_ANALYZER, grid=128).build(spark, docs)
     s = Searcher(spark, idx)
     bm = (s.score_all(TermQuery("key"), mode="f64")
           .orderBy(F.desc("score"), F.asc("doc_id")).limit(20)

@@ -29,8 +29,7 @@ def docs(spark):
 
 
 def _builder():
-    return IndexBuilder(ENGLISH_ANALYZER, grid=128, head_df=64,
-                        salt_target=128, with_positions=True)
+    return IndexBuilder(ENGLISH_ANALYZER, grid=128, with_positions=True)
 
 
 def _sorted_rows(df, *cols):
@@ -83,8 +82,7 @@ def test_checkpoint_resume(spark, docs, tmp_path_factory):
 
     # changed params -> new generation in its own directory; the old
     # generation's files stay intact for existing readers
-    b2 = IndexBuilder(ENGLISH_ANALYZER, grid=256, head_df=64,
-                      salt_target=128, with_positions=True)
+    b2 = IndexBuilder(ENGLISH_ANALYZER, grid=256, with_positions=True)
     idx3, m3 = catalog.build_or_resume(spark, docs, b2, path)
     assert m3["generation"] != m1["generation"]
     assert m3["key"] != m1["key"]

@@ -16,6 +16,9 @@ from pyspark.sql import functions as F
 from lucene_solr_spark.analysis.analyzer import ENGLISH_ANALYZER
 from lucene_solr_spark.index import IndexBuilder
 from lucene_solr_spark.search import Searcher, parse_query
+from lucene_solr_spark.search.ast import (BooleanQuery, Clause,
+                                          FieldExistsQuery, MatchAllQuery,
+                                          Occur, TermQuery)
 from lucene_solr_spark.streaming.monitor import Monitor
 from tests.conftest import SF_DIR
 
@@ -73,6 +76,33 @@ def test_match_all_and_empty_registry(spark, docs):
     exp = {int(r["doc_id"]) for r in batch.filter(
         F.length("text") > 0).collect()}
     assert got == exp
+
+
+def test_negation_and_exists_alerts(spark, docs):
+    """Alerts the kernel does not scan — a pure-negation NOT-wrapper
+    (BQ(MUST_NOT t, SHOULD MatchAll)) and a FieldExistsQuery — match
+    exactly what forward search matches, next to a kernel alert."""
+    alerts = {
+        "alert_neg": BooleanQuery((
+            Clause(Occur.MUST_NOT, TermQuery("spark")),
+            Clause(Occur.SHOULD, MatchAllQuery()))),
+        "alert_exists": FieldExistsQuery("text"),
+        "alert_merge": TermQuery("merge"),
+    }
+    m = Monitor(ENGLISH_ANALYZER, grid=128)
+    for qid, q in alerts.items():
+        m.register(qid, q)
+    batch = docs.filter(F.col("doc_id") < 200)
+    got = {(r["query_id"], int(r["doc_id"]))
+           for r in m.match_batch(spark, batch).collect()}
+    idx = (IndexBuilder(ENGLISH_ANALYZER, grid=128, with_positions=True)
+           .build(spark, batch).cache())
+    s = Searcher(spark, idx)
+    exp = {(qid, int(r["doc_id"])) for qid, q in alerts.items()
+           for r in s.match_docs(q).collect()}
+    idx.release()
+    assert got == exp
+    assert {q for q, _ in got} == set(alerts)
 
 
 def test_wildcard_expands_per_batch(spark):

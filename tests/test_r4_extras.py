@@ -26,8 +26,8 @@ from conftest import SF_DIR
 @pytest.fixture(scope="module")
 def env(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    idx = IndexBuilder(ENGLISH_ANALYZER, grid=256, head_df=128,
-                      salt_target=128, with_positions=True).build(spark, docs)
+    idx = IndexBuilder(ENGLISH_ANALYZER, grid=256,
+                       with_positions=True).build(spark, docs)
     idx = idx.cache()
     yield docs, idx, Searcher(spark, idx)
     idx.release()

@@ -41,8 +41,7 @@ NOW = datetime(2026, 8, 18, 13, 45, 59)
 @pytest.fixture(scope="module")
 def env(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    idx = IndexBuilder(ENGLISH_ANALYZER, grid=256, head_df=128,
-                       salt_target=128).build(spark, docs)
+    idx = IndexBuilder(ENGLISH_ANALYZER, grid=256).build(spark, docs)
     idx = idx.cache()
     yield docs, idx, Searcher(spark, idx)
     idx.release()

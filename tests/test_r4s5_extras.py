@@ -30,8 +30,7 @@ from conftest import SF_DIR
 @pytest.fixture(scope="module")
 def env(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    idx = IndexBuilder(ENGLISH_ANALYZER, grid=256, head_df=128,
-                       salt_target=128).build(spark, docs)
+    idx = IndexBuilder(ENGLISH_ANALYZER, grid=256).build(spark, docs)
     idx = idx.cache()
     yield docs, idx, Searcher(spark, idx)
     idx.release()
@@ -224,8 +223,7 @@ def test_clustering_separates_planted_topics(spark, env):
     rows = [(i, "alpha beta gamma alpha beta") for i in range(5)] + \
            [(i + 5, "delta epsilon zeta delta epsilon") for i in range(5)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    idx = IndexBuilder(ENGLISH_ANALYZER, grid=16, head_df=16,
-                       salt_target=16).build(spark, df)
+    idx = IndexBuilder(ENGLISH_ANALYZER, grid=16).build(spark, df)
     s = Searcher(spark, idx)
     q = BooleanQuery((Clause(Occur.SHOULD, TermQuery("alpha")),
                       Clause(Occur.SHOULD, TermQuery("delta"))))

@@ -24,8 +24,8 @@ from lucene_solr_spark.search import Searcher, parse_query
 from lucene_solr_spark.search.ast import (BooleanQuery, BoostQuery, Clause,
                                           DisjunctionMaxQuery, Occur,
                                           PhraseQuery, TermQuery, rewrite)
-from lucene_solr_spark.search.executor import (_bucket_kernel, _key_filter,
-                                               flatten_plan)
+from lucene_solr_spark.search.executor import (_bucket_kernel_multi,
+                                               _key_filter, flatten_plan)
 
 from conftest import SF_DIR
 
@@ -39,8 +39,7 @@ def corpus(spark):
     oracle = OracleIndex(ENGLISH_ANALYZER)
     for d, t in zip(pdf["doc_id"], pdf["text"]):
         oracle.add(int(d), t)
-    builder = IndexBuilder(ENGLISH_ANALYZER, grid=64, head_df=50,
-                           salt_target=64, with_positions=True)
+    builder = IndexBuilder(ENGLISH_ANALYZER, grid=64, with_positions=True)
     idx = builder.build(spark, docs).cache()
     return docs, oracle, idx
 
@@ -132,6 +131,10 @@ def _shapes(oracle):
         "three_levels": OR(
             AND(term(t[0]), OR(term(t[1]), term(t[2]))),
             AND(term(t[3]), term(t[4]))),
+        # +(a b) +(c d): two multi-member required groups, summed per
+        # level ((a+b)+(c+d)) like Lucene's per-level scorer sums
+        "two_required_groups": AND(OR(term(t[0]), term(t[1])),
+                                   OR(term(t[2]), term(t[3]))),
     }
 
 
@@ -145,16 +148,11 @@ def test_nested_shapes_match_oracle(searcher, corpus):
 
 def test_nested_shapes_route_to_tree_plan(corpus):
     """These shapes raised ValueError at executor.py flatten in round 2;
-    they must now produce runnable plans (flat for leaf dismax, tree for
-    true nesting) — the ValueError cliff is gone."""
+    every one must now produce a tree plan — the one plan form."""
     _, oracle, _ = corpus
-    deep = 0
     for label, q in _shapes(oracle).items():
         plan = flatten_plan(rewrite(q))
-        assert plan is not None, label
-        if isinstance(plan, dict) and "tree" in plan:
-            deep += 1
-    assert deep >= 4  # true-nesting shapes go through the tree kernel
+        assert isinstance(plan, dict) and set(plan) == {"tree"}, label
 
 
 def test_nested_pruned_equals_exhaustive(searcher, corpus):
@@ -199,6 +197,6 @@ def test_partition_emission_bounded(searcher, corpus):
            .reset_index(drop=True))
     # the query matches far more docs than k across many buckets
     assert pdf["bucket"].nunique() > 1
-    out = list(_bucket_kernel([pdf], spec))
+    out = list(_bucket_kernel_multi([pdf], [spec]))
     total = sum(len(f) for f in out)
     assert len(out) == 1 and total <= K
