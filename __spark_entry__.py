@@ -704,20 +704,6 @@ def q_sort_multi(spark, sf_dir):
                       F.col("n_chars").cast("long"))
 
 
-def q_mlt_topk(spark, sf_dir):
-    """r2-era simplified MLT metric, now explicitly named _simple
-    (VERDICT r4 #4): the public more_like_this is reference-exact
-    (gated as q_mlt_classic_topk); this oracle pins the deprecated
-    variant's unchanged semantics."""
-    from lucene_solr_spark.search.extras import more_like_this_simple
-    docs, _, s = _index(spark, sf_dir)
-    q = more_like_this_simple(s, 7, docs, max_terms=5)
-    raw = s.score_all(q, mode="f64").filter(F.col("doc_id") != 7)
-    return (raw.orderBy(F.desc("score"), F.asc("doc_id")).limit(10)
-            .select(F.col("doc_id").cast("long"),
-                    F.round("score", 4).alias("score")))
-
-
 def q_mlt_interesting_terms(spark, sf_dir):
     """MoreLikeThis.retrieveInterestingTerms (MoreLikeThis.java:651-702
     createQueue + Solr mlt.interestingTerms=details): the selected
@@ -5162,19 +5148,6 @@ WHERE d.doc_id IN (SELECT doc_id FROM sc WHERE term = 'spark')
 ORDER BY d.lang ASC NULLS LAST, d.n_chars DESC, d.doc_id
 LIMIT 10"""
 
-    # MoreLikeThis: top-5 seed-doc terms by tf*ln(N/df) (ties: term asc),
-    # scored as an OR query, seed excluded
-    sql["q_mlt_topk"] = _PRELUDE + """
-, mlt AS (
-  SELECT tf.term FROM tf JOIN dfreq USING (term) CROSS JOIN stats
-  WHERE tf.doc_id = 7
-  ORDER BY tf.freq * ln(stats.n / dfreq.df) DESC, tf.term LIMIT 5
-)
-SELECT doc_id, ROUND(SUM(s), 4) AS score
-FROM sc JOIN mlt USING (term)
-WHERE doc_id <> 7
-GROUP BY doc_id ORDER BY SUM(s) DESC, doc_id LIMIT 10"""
-
     # reference-exact MLT (MoreLikeThis.java:651-702): tf/df filters,
     # ClassicSimilarity idf ln((N+1)/(df+1))+1, top-10 by tf*idf
     # (ties term asc), scored as OR via BM25, seed excluded
@@ -7344,7 +7317,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_facet_source": q_facet_source,
         "q_group_top2_lang": q_group_top2_lang,
         "q_windowed_events": q_windowed_events,
-        "q_mlt_topk": q_mlt_topk,
         "q_dedup_exact": q_dedup_exact,
         "q_dedup_minhash": q_dedup_minhash,
         "q_dedup_simhash": q_dedup_simhash,

@@ -117,17 +117,7 @@ class OracleIndex:
         cand = set(fpos[terms[0]])
         for t in terms[1:]:
             cand &= set(fpos[t])
-        if not cand:
-            return {}
-        idf_sum = np.float32(sum(
-            np.float32(bm25.idf(self.df(t, field),
-                                self.field_doc_count[field]))
-            for t in terms))
-        w = np.float32(np.float32(boost) * idf_sum)
-        avgdl = bm25.avg_field_length(self.field_sum_ttf[field],
-                                      self.field_doc_count[field])
-        cache = bm25.norm_inverse_cache(avgdl)
-        out: dict[int, np.float32] = {}
+        pfs: dict[int, float] = {}
         for d in cand:
             pf = 0.0
             for p0 in fpos[terms[0]][d]:
@@ -140,11 +130,8 @@ class OracleIndex:
                         break
                 if tot <= slop:
                     pf += 1.0 / (1.0 + tot)
-            if pf > 0:
-                ni = cache[self.norms[field][d]]
-                out[d] = np.float32(
-                    w - w / (np.float32(1.0) + np.float32(pf) * ni))
-        return out
+            pfs[d] = pf
+        return self._bm25_pf(field, keys, boost, pfs)
 
 
     def _phrase_scores_lucene(self, keys, slop: int,
@@ -163,25 +150,10 @@ class OracleIndex:
         cand = set(fpos[terms[0]])
         for t in terms[1:]:
             cand &= set(fpos[t])
-        if not cand:
-            return {}
-        idf_sum = np.float32(sum(
-            np.float32(bm25.idf(self.df(t, field),
-                                self.field_doc_count[field]))
-            for t in terms))
-        w = np.float32(np.float32(boost) * idf_sum)
-        avgdl = bm25.avg_field_length(self.field_sum_ttf[field],
-                                      self.field_doc_count[field])
-        cache = bm25.norm_inverse_cache(avgdl)
         offs = list(range(len(terms)))
-        out: dict[int, np.float32] = {}
-        for d in cand:
-            pf = sloppy_freq(offs, [fpos[t][d] for t in terms], slop)
-            if pf > 0:
-                ni = cache[self.norms[field][d]]
-                out[d] = np.float32(
-                    w - w / (np.float32(1.0) + np.float32(pf) * ni))
-        return out
+        return self._bm25_pf(field, keys, boost, {
+            d: sloppy_freq(offs, [fpos[t][d] for t in terms], slop)
+            for d in cand})
 
     def _multiphrase_scores(self, slots, slop: int,
                             boost: float = 1.0) -> dict[int, np.float32]:
@@ -207,17 +179,7 @@ class OracleIndex:
         cand = set(upos[0])
         for m in upos[1:]:
             cand &= set(m)
-        if not cand:
-            return {}
-        idf_sum = np.float32(sum(
-            np.float32(bm25.idf(self.df(t, field),
-                                self.field_doc_count[field]))
-            for slot in live for t in slot))
-        w = np.float32(np.float32(boost) * idf_sum)
-        avgdl = bm25.avg_field_length(self.field_sum_ttf[field],
-                                      self.field_doc_count[field])
-        cache = bm25.norm_inverse_cache(avgdl)
-        out: dict[int, np.float32] = {}
+        pfs: dict[int, float] = {}
         for d in cand:
             pf = 0.0
             for p0 in upos[0][d]:
@@ -230,86 +192,41 @@ class OracleIndex:
                         break
                 if tot <= slop:
                     pf += 1.0 / (1.0 + tot)
-            if pf > 0:
-                ni = cache[self.norms[field][d]]
-                out[d] = np.float32(
-                    w - w / (np.float32(1.0) + np.float32(pf) * ni))
-        return out
+            pfs[d] = pf
+        return self._bm25_pf(field, [(field, t) for slot in live
+                                     for t in slot], boost, pfs)
 
-    def _span_scores(self, keys, slop: int,
-                     boost: float = 1.0) -> dict[int, np.float32]:
-        """Ordered span-near (executor._eval_span spec): per occurrence
-        p0 of the first term, chain each later term to its FIRST
-        occurrence strictly after the previous link; matchLength =
-        (p_last − p0) − (n−1) ≤ slop contributes 1/(1+matchLength)."""
-        field = keys[0][0]
-        terms = [t for _, t in keys]
-        fpos = self.positions.get(field, {})
-        if any(t not in fpos for t in terms):
-            return {}
-        cand = set(fpos[terms[0]])
-        for t in terms[1:]:
-            cand &= set(fpos[t])
-        if not cand:
-            return {}
-        idf_sum = np.float32(sum(
-            np.float32(bm25.idf(self.df(t, field),
-                                self.field_doc_count[field]))
-            for t in terms))
-        w = np.float32(np.float32(boost) * idf_sum)
-        avgdl = bm25.avg_field_length(self.field_sum_ttf[field],
-                                      self.field_doc_count[field])
-        cache = bm25.norm_inverse_cache(avgdl)
-        out: dict[int, np.float32] = {}
-        for d in cand:
-            pf = 0.0
-            for p0 in fpos[terms[0]][d]:
-                cur, ok = p0, True
-                for t in terms[1:]:
-                    nxt = [p for p in fpos[t][d] if p > cur]
-                    if not nxt:
-                        ok = False
-                        break
-                    cur = nxt[0]
-                if ok:
-                    ml = (cur - p0) - (len(terms) - 1)
-                    if ml <= slop:
-                        pf += 1.0 / (1.0 + ml)
-            if pf > 0:
-                ni = cache[self.norms[field][d]]
-                out[d] = np.float32(
-                    w - w / (np.float32(1.0) + np.float32(pf) * ni))
-        return out
-
-    def _span_op_spans(self, op, field: str) -> dict[int, list]:
+    def _span_op_spans(self, op) -> dict[int, list]:
         """Interpret a span-op tree → {doc: [(start, end, width), ...]},
         lists sorted — the per-doc mirror of executor._eval_span_op
-        (same greedy/nearest choices, same width rules)."""
+        (same greedy/nearest choices, same width rules). A term reads
+        its own field's positions (a masked clause's real field)."""
         o = op["op"]
         if o == "sterm":
-            fpos = self.positions.get(field, {}).get(op["key"][1], {})
+            f, t = op["key"]
+            fpos = self.positions.get(f, {}).get(t, {})
             return {d: [(p, p + 1, 0) for p in sorted(ps)]
                     for d, ps in fpos.items()}
         if o == "sor":
             out: dict[int, list] = {}
             for ch in op["children"]:
-                for d, sp in self._span_op_spans(ch, field).items():
+                for d, sp in self._span_op_spans(ch).items():
                     out.setdefault(d, []).extend(sp)
             return {d: sorted(sp) for d, sp in out.items()}
         if o == "sfirst":
-            inner = self._span_op_spans(op["child"], field)
+            inner = self._span_op_spans(op["child"])
             out = {d: [x for x in sp if x[1] <= op["end"]]
                    for d, sp in inner.items()}
             return {d: sp for d, sp in out.items() if sp}
         if o == "sposrange":
-            inner = self._span_op_spans(op["child"], field)
+            inner = self._span_op_spans(op["child"])
             out = {d: [x for x in sp
                        if x[0] >= op["start"] and x[1] <= op["end"]]
                    for d, sp in inner.items()}
             return {d: sp for d, sp in out.items() if sp}
         if o in ("scontain", "swithin"):
-            bigs = self._span_op_spans(op["big"], field)
-            littles = self._span_op_spans(op["little"], field)
+            bigs = self._span_op_spans(op["big"])
+            littles = self._span_op_spans(op["little"])
             out = {}
             for d, bsp in bigs.items():
                 lsp = littles.get(d, [])
@@ -325,8 +242,8 @@ class OracleIndex:
                     out[d] = sorted(kept)
             return out
         if o == "snot":
-            inc = self._span_op_spans(op["include"], field)
-            exc = self._span_op_spans(op["exclude"], field)
+            inc = self._span_op_spans(op["include"])
+            exc = self._span_op_spans(op["exclude"])
             pre, post = op["pre"], op["post"]
             out = {}
             for d, sp in inc.items():
@@ -338,7 +255,7 @@ class OracleIndex:
                     out[d] = kept
             return out
         # snear
-        kids = [self._span_op_spans(ch, field) for ch in op["children"]]
+        kids = [self._span_op_spans(ch) for ch in op["children"]]
         docs = set(kids[0])
         for k in kids[1:]:
             docs &= set(k)
@@ -541,27 +458,34 @@ class OracleIndex:
         """Composite span query — freq = Σ 1/(1+width), BM25 weight over
         the distinct scoring keys (the executor's spantree leaf)."""
         from ..search.executor import _annotate_span_op, _span_op_keys
-        field = c["field"]
-        st = {(field, t): True for t in self.postings.get(field, {})}
+        st = {(f, t) for f, terms in self.postings.items() for t in terms}
         root = _annotate_span_op(c["root"], st)
         if root is None:
             return {}
         keys = list(dict.fromkeys(_span_op_keys(root, scoring_only=True)))
+        return self._bm25_pf(c["field"], keys, c["boost"], {
+            d: sum(1.0 / (1.0 + wd) for _, _, wd in sp)
+            for d, sp in self._span_op_spans(root).items()})
+
+    def _bm25_pf(self, field, keys, boost,
+                 pfs: dict[int, float]) -> dict[int, np.float32]:
+        """float32 BM25 of per-doc phrase/span freqs — the one scoring
+        step of every positional leaf: weight = boost × Σ idf over
+        ``keys`` (f32 sum in key order, each key's own field stats),
+        norms and avgdl of the scoring ``field``; pf = 0 docs drop."""
+        pfs = {d: pf for d, pf in pfs.items() if pf > 0}
+        if not pfs:
+            return {}
         idf_sum = np.float32(sum(
             np.float32(bm25.idf(self.df(t, f), self.field_doc_count[f]))
             for f, t in keys))
-        w = np.float32(np.float32(c["boost"]) * idf_sum)
+        w = np.float32(np.float32(boost) * idf_sum)
         avgdl = bm25.avg_field_length(self.field_sum_ttf[field],
                                       self.field_doc_count[field])
         cache = bm25.norm_inverse_cache(avgdl)
-        out: dict[int, np.float32] = {}
-        for d, sp in self._span_op_spans(root, field).items():
-            pf = sum(1.0 / (1.0 + wd) for _, _, wd in sp)
-            if pf > 0:
-                ni = cache[self.norms[field][d]]
-                out[d] = np.float32(
-                    w - w / (np.float32(1.0) + np.float32(pf) * ni))
-        return out
+        return {d: np.float32(w - w / (np.float32(1.0) + np.float32(pf)
+                                       * cache[self.norms[field][d]]))
+                for d, pf in pfs.items()}
 
     def _leaf_scores(self, c) -> dict[int, np.float32]:
         """Score a tree-plan leaf dict — the executor's _LEAF_EVAL
@@ -577,8 +501,6 @@ class OracleIndex:
         if c["kind"] == "multiphrase":
             return self._multiphrase_scores(c["slots"], c["slop"],
                                             c["boost"])
-        if c["kind"] == "span":
-            return self._span_scores(c["keys"], c["slop"], c["boost"])
         if c["kind"] == "spantree":
             return self._spantree_scores(c)
         return self._interval_scores(c)
@@ -594,7 +516,7 @@ class OracleIndex:
         appearance order, then SHOULD children) — so engine and oracle
         agree bit-for-bit on nested plans."""
         kind = node["kind"]
-        if kind in ("term", "phrase", "multiphrase", "span", "spantree",
+        if kind in ("term", "phrase", "multiphrase", "spantree",
                     "interval"):
             sc = self._leaf_scores(node)
             return set(sc), (sc if scoring else {})
@@ -684,7 +606,8 @@ class OracleIndex:
         docs, sc = self._eval_tree_node(plan["tree"], scoring=True)
         return self._topk({d: sc.get(d, np.float32(0.0)) for d in docs}, k)
 
-    # --- legacy single-field API (kept for existing golden tests) ------
+    # --- single-field reference API: scores without build_tree, so the
+    # end-to-end tests check the engine's plan against independent code
     def search_or(self, terms: list[str], k: int = 10):
         acc: dict[int, np.float32] = {}
         for t in terms:

@@ -36,11 +36,17 @@ Clause kinds the kernel scores:
            contributing sloppyWeight = 1/(1+matchLength) to the phrase
            freq — the reference's sloppy weight formula; the matcher is
            fully vectorized, no per-doc Python)
-  span     ordered SpanNearQuery (NearSpansOrdered.java:36 role):
-           greedy first-term-anchored chain to each later term's first
-           occurrence after the previous link, matchLength ≤ slop
+  multiphrase  MultiPhraseQuery.java:58 — the phrase chain over per-slot
+           unions of alternative terms
+  spantree every span query (SpanTerm/Near/Or/Not/First/Containing/
+           Within/PositionRange, FieldMaskingSpan): a span-op tree
+           evaluated to flat spans, freq = Σ 1/(1+width) per doc
+           (SpanScorer.java:106-112), weight over the distinct terms
+           (SpanWeight.java:100-118)
+  interval IntervalQuery — minimal-interval algebra, saturation score
+           (IntervalScoreFunction.java:69-73)
   dismax   DisjunctionMaxQuery.java:45,51 — max + tie×(sum−max), over
-           ARBITRARY disjuncts (term/phrase/span/nested boolean)
+           ARBITRARY disjuncts (any leaf or nested boolean)
 
 Every scanned query runs as ONE plan form: the recursive tree
 (`build_tree`, the Boolean2ScorerSupplier.java:100-127 composition
@@ -103,8 +109,7 @@ MULTI_SCHEMA = "query_id int, doc_id long, score double"
 _UB_EPS = 1e-6
 
 # tree-plan leaf kinds (each evaluated by its _LEAF_EVAL entry)
-_LEAF_KINDS = ("term", "phrase", "multiphrase", "span", "spantree",
-               "interval")
+_LEAF_KINDS = ("term", "phrase", "multiphrase", "spantree", "interval")
 
 
 class Searcher:
@@ -842,21 +847,11 @@ def _span_op(q):
 
 
 def _span_leaf(q, boost: float):
-    """Span AST → kernel leaf clause. A plain ordered term-near keeps the
-    legacy vectorized fast path ({"kind": "span"}); every composite
-    shape compiles to {"kind": "spantree"}."""
-    from .ast import span_leaf_keys
-    if isinstance(q, SpanNearQuery):
-        if bool(q.terms) == bool(q.clauses):
-            raise ValueError(
-                "SpanNearQuery takes exactly one of terms= or clauses=")
-        if len(q.terms or q.clauses) < 2:
-            raise ValueError("span-near needs >= 2 children")
-    if isinstance(q, SpanNearQuery) and q.terms and q.in_order:
-        return {"kind": "span", "keys": [(q.field, t) for t in q.terms],
-                "slop": int(q.slop), "boost": boost}
+    """Span AST → kernel leaf clause {"kind": "spantree"} — every span
+    shape, a plain term-near included (Lucene has one SpanNearQuery)."""
+    from .ast import span_effective_fields, span_leaf_keys
+    root = _span_op(q)
     keys = span_leaf_keys(q)
-    from .ast import span_effective_fields
     fields = span_effective_fields(q)
     if len(fields) > 1:
         raise ValueError(
@@ -873,8 +868,7 @@ def _span_leaf(q, boost: float):
             "leaf posting — include at least one unmasked clause of the "
             "masking field (FieldMaskingSpanQuery.java pairs a masked "
             "clause WITH native ones)")
-    return {"kind": "spantree", "root": _span_op(q), "boost": boost,
-            "field": eff}
+    return {"kind": "spantree", "root": root, "boost": boost, "field": eff}
 
 
 def _interval_op(src, field: str):
@@ -987,7 +981,7 @@ def build_tree(query, boost: float = 1.0):
     leaf weight and dismax is positively homogeneous, so the fold is
     exact — `search/BoostQuery.java:34`).
 
-    Node kinds: term/phrase/multiphrase/span/spantree/interval leaves,
+    Node kinds: term/phrase/multiphrase/spantree/interval leaves,
     dismax nodes whose children may be ANY node, and
     {"kind": "bool", "must": [...], "filter": [...], "should": [...],
      "must_not": [...], "msm": int}.
@@ -1087,7 +1081,7 @@ def _leaf_keys(c) -> list:
     though they don't score)."""
     if c["kind"] == "term":
         return [c["key"]]
-    if c["kind"] in ("phrase", "span"):
+    if c["kind"] == "phrase":
         return list(c["keys"])
     if c["kind"] == "multiphrase":
         return [k for slot in c["slots"] for k in slot]
@@ -1277,18 +1271,6 @@ def _annotate_leaf(c, st, weights, sim: str = "bm25"):
         return dict(c, w32=float(np.float32(
             np.float32(b) * np.float32(w["idf32"]))),
             w64=b * w["idf64"])
-    if kind in ("phrase", "span"):
-        if sim != "bm25":
-            raise ValueError(
-                "phrase/span clauses support the BM25 similarity only")
-        keys = c["keys"]
-        if not all(k in st for k in keys):
-            return None
-        b = c["boost"]
-        w32 = float(np.float32(np.float32(b) * np.float32(
-            sum(np.float32(weights[k]["idf32"]) for k in keys))))
-        w64 = b * sum(weights[k]["idf64"] for k in keys)
-        return dict(c, w32=w32, w64=w64)
     if kind == "interval":
         # saturation scoring is norm/idf-free (IntervalScorer scores via
         # the score function, never the session Similarity) — the only
@@ -1299,45 +1281,72 @@ def _annotate_leaf(c, st, weights, sim: str = "bm25"):
             return None    # a required interval key is dead
         b = c["boost"]
         return dict(c, w32=float(np.float32(b)), w64=b)
+    if kind not in ("phrase", "multiphrase", "spantree"):
+        raise ValueError(f"not a leaf: {kind!r}")
+    if sim != "bm25":
+        raise ValueError(
+            "phrase/span clauses support the BM25 similarity only")
+    if kind == "phrase":
+        keys = c["keys"]
+        if not all(k in st for k in keys):
+            return None
+        return dict(c, anchor=keys[0], **_idf_sum_weight(c, keys, weights))
     if kind == "multiphrase":
-        if sim != "bm25":
-            raise ValueError(
-                "phrase/span clauses support the BM25 similarity only")
-        # MultiPhraseWeight ctor: one SimScorer over ALL terms' stats →
-        # weight = boost × Σ idf, slot-major order (f32 sum order shared
-        # with the pyoracle). Engine spec: df == 0 terms are dropped
-        # from both the weight and matching; an empty slot kills the
-        # clause (pinned in tests/test_multiphrase.py).
+        # MultiPhraseWeight ctor: one SimScorer over ALL terms' stats,
+        # slot-major order (f32 sum order shared with the pyoracle).
+        # Engine spec: df == 0 terms are dropped from both the weight
+        # and matching; an empty slot kills the clause (pinned in
+        # tests/test_multiphrase.py).
         slots = [[k for k in slot if k in st] for slot in c["slots"]]
         if any(not slot for slot in slots):
             return None
         keys = [k for slot in slots for k in slot]
-        b = c["boost"]
-        w32 = float(np.float32(np.float32(b) * np.float32(
-            sum(np.float32(weights[k]["idf32"]) for k in keys))))
-        w64 = b * sum(weights[k]["idf64"] for k in keys)
-        return dict(c, slots=slots, w32=w32, w64=w64)
-    if kind == "spantree":
-        if sim != "bm25":
-            raise ValueError(
-                "phrase/span clauses support the BM25 similarity only")
-        root = _annotate_span_op(c["root"], st)
-        if root is None:
-            return None
-        # SpanWeight.buildSimWeight (SpanWeight.java:100-118): one
-        # SimScorer over the DISTINCT scoring terms' aggregated stats —
-        # weight = boost × Σ idf over distinct include-branch keys
-        keys = list(dict.fromkeys(_span_op_keys(root, scoring_only=True)))
-        keys = [k for k in keys if k in st]
-        if not keys:
-            return None
-        b = c["boost"]
-        w32 = float(np.float32(np.float32(b) * np.float32(
-            sum(np.float32(weights[k]["idf32"]) for k in keys))))
-        w64 = b * sum(weights[k]["idf64"] for k in keys)
-        return dict(c, root=root, w32=w32, w64=w64,
-                    required=_span_required_keys(root))
-    raise ValueError(f"not a leaf: {kind!r}")
+        return dict(c, slots=slots, **_idf_sum_weight(c, keys, weights))
+    root = _annotate_span_op(c["root"], st)                  # spantree
+    if root is None:
+        return None
+    # SpanWeight.buildSimWeight (SpanWeight.java:100-118): one SimScorer
+    # over the DISTINCT include-branch terms' stats
+    keys = list(dict.fromkeys(_span_op_keys(root, scoring_only=True)))
+    anchor = _span_anchor(root)
+    if anchor is not None and anchor[0] != c["field"]:
+        anchor = None    # masked: its norms are not the scoring field's
+    return dict(c, root=root, required=_span_required_keys(root),
+                anchor=anchor, **_idf_sum_weight(c, keys, weights))
+
+
+def _idf_sum_weight(c, keys, weights) -> dict:
+    """{w32, w64} of a positional leaf: boost × Σ idf over ``keys`` —
+    the one SimScorer a phrase, multiphrase or span weight builds over
+    all its terms' stats (f32 sum in key order)."""
+    b = c["boost"]
+    return {"w32": float(np.float32(np.float32(b) * np.float32(
+                sum(np.float32(weights[k]["idf32"]) for k in keys)))),
+            "w64": b * sum(weights[k]["idf64"] for k in keys)}
+
+
+def _span_anchor(op):
+    """The term whose occurrences bound a span-op tree's spans: every
+    span of a near is anchored at one span of its first child, and
+    not/containing/within/first/position-range keep a subset of one
+    child's spans (include, big, little, child), so a doc's span freq
+    Σ 1/(1+width) never exceeds the anchor's term freq. → key, or None
+    when the chain reaches a multi-child or."""
+    o = op["op"]
+    if o == "sterm":
+        return op["key"]
+    if o == "sor":
+        return (_span_anchor(op["children"][0])
+                if len(op["children"]) == 1 else None)
+    if o == "snear":
+        return _span_anchor(op["children"][0])
+    if o == "snot":
+        return _span_anchor(op["include"])
+    if o == "scontain":
+        return _span_anchor(op["big"])
+    if o == "swithin":
+        return _span_anchor(op["little"])
+    return _span_anchor(op["child"])                    # sfirst/sposrange
 
 
 def _annotate_tree(node, st, weights, sim: str = "bm25"):
@@ -1481,6 +1490,10 @@ class _BucketData:
         """(docs, freqs, norms) for the key within the bucket, or None."""
         if key in self.dec:
             return self.dec[key]
+        if self.decp.get(key) is not None:
+            # positions already decoded: reuse their doc-sorted columns
+            out = self.dec[key] = self.decp[key][:3]
+            return out
         rows = self.by_key.get(key)
         if rows is None:
             self.dec[key] = None
@@ -1780,7 +1793,7 @@ def _eval_tree(node, data: "_BucketData", spec, dtype, grid,
 def _clause_present(c, data: _BucketData) -> bool:
     if c["kind"] == "term":
         return c["key"] in data.by_key
-    if c["kind"] in ("phrase", "span"):
+    if c["kind"] == "phrase":
         return all(k in data.by_key for k in c["keys"])
     if c["kind"] == "multiphrase":
         return all(any(k in data.by_key for k in slot)
@@ -1916,21 +1929,22 @@ def _leaf_ub(c, data: _BucketData, spec, dtype) -> float:
         if c["key"] not in data.by_key:
             return 0.0
         return max(0.0, float(_term_block_max(c, data, spec, dtype).max()))
-    if c["kind"] in ("phrase", "span"):
-        if not _clause_present(c, data):
-            return 0.0
-        # phrase/span freq <= min term freq in doc; bound by the weight
-        # applied at the max min-term impact (cheap, safe bound)
-        w = np.float32(c["w32"]) if dtype is np.float32 else c["w64"]
-        bm = _block_max(data.by_key[c["keys"][0]], w, c["keys"][0][0],
-                        spec, dtype)
-        return max(0.0, float(bm.max()))
-    # multiphrase / spantree / interval
     if not _clause_present(c, data):
         return 0.0
-    # BM25 is bounded by the clause weight for ANY freq:
-    # f32 w − w/(1+f·ni) < w; f64 w·f/(f+k1(…)) < w — cheap, safe
-    return float(c["w32"] if dtype is np.float32 else c["w64"])
+    w = _term_w(c, spec, dtype)
+    anchor = c.get("anchor")
+    if anchor is None:
+        # BM25 is bounded by the clause weight for ANY freq: f32
+        # w − w/(1+f·ni) < w; f64 w·f/(f+k1(…)) < w (the interval
+        # saturation likewise stays below its boost)
+        return float(w)
+    if anchor not in data.by_key:
+        return 0.0       # an or-branch anchor absent: no span in bucket
+    # phrase/span freq ≤ the anchor term's freq in the doc, and the
+    # anchor's norm is the scoring field's: its block-max skyline bounds
+    # the leaf (phrase: the first term; spantree: `_span_anchor`)
+    bm = _block_max(data.by_key[anchor], w, anchor[0], spec, dtype)
+    return max(0.0, float(bm.max()))
 
 
 def _eval_term(c, data: _BucketData, spec, dtype, skip=False,
@@ -2026,10 +2040,9 @@ def _eval_phrase_lucene(c, per, data: _BucketData, spec, dtype):
     d0, _, n0 = per[0][0], per[0][1], per[0][2]
     ni = np.searchsorted(d0, cand[m])
     norms = n0[ni]
-    w = np.float32(c["w32"]) if dtype is np.float32 else c["w64"]
-    field = c["keys"][0][0]
     idxs = (cand[m] - data.off).astype(np.int64)
-    s = _score_freqs(pf[m], norms, w, field, spec, dtype)
+    s = _score_freqs(pf[m], norms, _term_w(c, spec, dtype), c["keys"][0][0],
+                     spec, dtype)
     return idxs, s.astype(dtype, copy=False)
 
 
@@ -2118,83 +2131,8 @@ def _phrase_chain_score(slot0, rest, c, data, spec, dtype, field):
     # norms of matched docs from term0's postings
     norm_grid = np.zeros(spec["grid"], dtype=np.int64)
     norm_grid[d0 - data.off] = n0
-    norms = norm_grid[idxs]
-    w = np.float32(c["w32"]) if dtype is np.float32 else c["w64"]
-    if dtype is np.float32:
-        ni = spec["cache32"][field][norms & 0xFF]
-        f = pf.astype(np.float32)
-        s = (np.float32(w) - np.float32(w) / (np.float32(1.0) + f * ni))
-    else:
-        dl = LENGTH_TABLE[norms & 0xFF].astype(np.float64)
-        f = pf.astype(np.float64)
-        k1, b = spec["k1"], spec["b"]
-        s = w * f / (f + k1 * (1.0 - b + b * dl / spec["avgdl64"][field]))
-    return idxs, s
-
-
-def _eval_span(c, data: _BucketData, spec, dtype):
-    """Vectorized ordered span-near (the NearSpansOrdered.java:36 role).
-
-    One candidate span per occurrence p0 of the FIRST term: each later
-    term chains (searchsorted) to its first occurrence STRICTLY AFTER
-    the previous link within the same doc; the anchor matches when
-    matchLength = (p_last - p0) - (n-1) <= slop, contributing
-    1/(1+matchLength) to the span freq (SpanWeight sloppy weight). No
-    per-doc Python. Spec shared with pyoracle._span_scores and the SQL
-    oracle; divergence from Lucene's minimal-span enumeration on
-    overlapping repeats is pinned in tests."""
-    if not spec["with_positions"]:
-        raise ValueError("span query requires an index built with positions")
-    keys = c["keys"]
-    slop = c.get("slop", 0)
-    empty = (np.zeros(0, dtype=np.int64), np.zeros(0, dtype=dtype))
-    per = []
-    for k in keys:
-        r = data.decode_positions(k)
-        if r is None:
-            return empty
-        per.append(r)
-    d0, f0, n0, fd0, fp0 = per[0]
-    if len(fd0) == 0:
-        return empty
-    base = (fd0 << _POS_SHIFT) + fp0 + _POS_PAD
-    cur = base.copy()
-    alive = np.ones(len(cur), dtype=bool)
-    for i in range(1, len(keys)):
-        _, _, _, fdi, fpi = per[i]
-        if len(fdi) == 0:
-            return empty
-        arr = (fdi << _POS_SHIFT) + fpi + _POS_PAD
-        j = np.searchsorted(arr, cur + 1, side="left")
-        jr = np.minimum(j, len(arr) - 1)
-        ok = (j < len(arr)) & ((arr[jr] >> _POS_SHIFT)
-                               == (cur >> _POS_SHIFT))
-        alive &= ok
-        cur = np.where(ok, arr[jr], cur)
-    ml = (cur - base).astype(np.float64) - (len(keys) - 1)
-    match = alive & (ml <= slop)
-    if not match.any():
-        return empty
-    wts = 1.0 / (1.0 + ml[match])
-    docs_m = fd0[match]
-    pf_grid = np.bincount(docs_m, weights=wts, minlength=spec["grid"])
-    idxs = np.flatnonzero(pf_grid > 0)
-    pf = pf_grid[idxs]
-    norm_grid = np.zeros(spec["grid"], dtype=np.int64)
-    norm_grid[d0 - data.off] = n0
-    norms = norm_grid[idxs]
-    w = np.float32(c["w32"]) if dtype is np.float32 else c["w64"]
-    field = keys[0][0]
-    if dtype is np.float32:
-        ni = spec["cache32"][field][norms & 0xFF]
-        f = pf.astype(np.float32)
-        s = (np.float32(w) - np.float32(w) / (np.float32(1.0) + f * ni))
-    else:
-        dl = LENGTH_TABLE[norms & 0xFF].astype(np.float64)
-        f = pf.astype(np.float64)
-        k1, b = spec["k1"], spec["b"]
-        s = w * f / (f + k1 * (1.0 - b + b * dl / spec["avgdl64"][field]))
-    return idxs, s
+    return idxs, _score_freqs(pf, norm_grid[idxs], _term_w(c, spec, dtype),
+                              field, spec, dtype)
 
 
 _SPAN_EMPTY = (np.zeros(0, np.int64), np.zeros(0, np.int64),
@@ -2375,19 +2313,8 @@ def _eval_spantree(c, data: _BucketData, spec, dtype):
         d = data.decode(key)
         if d is not None:
             norm_grid[d[0] - data.off] = d[2]
-    norms = norm_grid[idxs]
-    w = np.float32(c["w32"]) if dtype is np.float32 else c["w64"]
-    field = c["field"]
-    if dtype is np.float32:
-        ni = spec["cache32"][field][norms & 0xFF]
-        f = pf.astype(np.float32)
-        s = (np.float32(w) - np.float32(w) / (np.float32(1.0) + f * ni))
-    else:
-        dl = LENGTH_TABLE[norms & 0xFF].astype(np.float64)
-        f = pf.astype(np.float64)
-        k1, b = spec["k1"], spec["b"]
-        s = w * f / (f + k1 * (1.0 - b + b * dl / spec["avgdl64"][field]))
-    return idxs, s
+    return idxs, _score_freqs(pf, norm_grid[idxs], _term_w(c, spec, dtype),
+                              c["field"], spec, dtype)
 
 
 _IV_EMPTY = (np.zeros(0, np.int64), np.zeros(0, np.int64),
@@ -2685,5 +2612,5 @@ def _eval_interval(c, data: _BucketData, spec, dtype):
 
 
 _LEAF_EVAL = {"term": _eval_term, "phrase": _eval_phrase,
-              "multiphrase": _eval_multiphrase, "span": _eval_span,
-              "spantree": _eval_spantree, "interval": _eval_interval}
+              "multiphrase": _eval_multiphrase, "spantree": _eval_spantree,
+              "interval": _eval_interval}

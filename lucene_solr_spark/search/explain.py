@@ -31,8 +31,8 @@ def _describe(node) -> str:
     kind = node["kind"]
     if kind == "term":
         return "weight({}:{})".format(*node["key"])
-    if kind in ("phrase", "span"):
-        return f"{kind}({node['keys']}~{node['slop']})"
+    if kind == "phrase":
+        return f"phrase({node['keys']}~{node['slop']})"
     if kind == "multiphrase":
         return f"multiphrase({node['slots']}~{node['slop']})"
     if kind == "dismax":

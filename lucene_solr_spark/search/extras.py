@@ -243,37 +243,6 @@ def constant_score(searcher, query, score: float = 1.0) -> DataFrame:
         "doc_id", F.lit(float(score)).alias("score"))
 
 
-def more_like_this_simple(searcher, doc_id: int, docs: DataFrame,
-                          max_terms: int = 5, field: str = DEFAULT_FIELD,
-                          text_col: str = "text"):
-    """DEPRECATED name-alias casualty (VERDICT r4 #4): the r2-era
-    simplified MLT — terms ranked by tf × ln(N/df), ties term-asc, no
-    minTermFreq/minDocFreq gates — returned as an OR query. It SILENTLY
-    DIFFERS from Lucene's MoreLikeThis (ClassicSimilarity idf
-    ln((N+1)/(df+1))+1, tf>=2 / df>=5 selection gates, boost path);
-    the public ``more_like_this`` is now the reference-exact
-    `search/mlt.py` implementation. This variant survives only for the
-    long-gated q_mlt_topk oracle and callers who explicitly want the
-    gate-free metric."""
-    import math as _math
-    from .ast import BooleanQuery, Clause, Occur, TermQuery
-    row = (docs.filter(F.col("doc_id") == int(doc_id))
-           .select(text_col).collect())
-    if not row:
-        return None
-    tf = searcher.index.analyzer.term_freqs(row[0][0] or "")
-    st = searcher.term_stats([(field, t) for t in tf])
-    n = searcher.field_stats(field)["doc_count"]
-    scored = [(t, tf[t] * _math.log(n / st[(field, t)][0]))
-              for t in tf if (field, t) in st]
-    scored.sort(key=lambda x: (-x[1], x[0]))
-    terms = [t for t, _ in scored[:max_terms]]
-    if not terms:
-        return None
-    return BooleanQuery(tuple(Clause(Occur.SHOULD, TermQuery(t, field))
-                              for t in terms))
-
-
 def fetch_documents(spark, hits, docs: DataFrame,
                     columns: list[str] | None = None):
     """StoredFields retrieval — ``IndexSearcher.doc(docID)`` analog.

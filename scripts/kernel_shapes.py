@@ -5,8 +5,9 @@
 
 Generates `corpus.generate_pages(seed=42)`, builds and caches the index
 (grid = docs/16, the perfbench rule on 4 cores) and draws 4 queries of
-each of the 12 perfbench shapes, plus 4 of `+(a b) +(c d)`, from the
-serve-large df pools. Each query's postings blocks are collected to the
+each of the 12 perfbench shapes, plus 4 of `+(a b) +(c d)` and 4
+ordered span-near queries of two terms at slop 3 (planned from the AST:
+the query parser has no span syntax), from the serve-large df pools. Each query's postings blocks are collected to the
 driver once; the timed region is `_bucket_kernel_multi` over them alone
 (pruned, k=10, f32), min of --reps runs, with no Spark in it. --root
 imports the engine from another checkout, so two commits can be timed
@@ -43,6 +44,7 @@ def main() -> None:
     from lucene_solr_spark.analysis.analyzer import ENGLISH_ANALYZER
     from lucene_solr_spark.index import IndexBuilder
     from lucene_solr_spark.search import Searcher, parse_query
+    from lucene_solr_spark.search.ast import SpanNearQuery
     from lucene_solr_spark.search.executor import (_bucket_kernel_multi,
                                                    _key_filter)
     from lucene_solr_spark.session import get_spark
@@ -56,17 +58,28 @@ def main() -> None:
     pools = inputs.term_pools(idx.terms.select("term", "df").collect(),
                               (3, 10, 40, 200))
     stream = inputs.QueryStream(1, pools, "0102304123")
-    queries = [stream.next() for _ in range(4 * len(inputs.SHAPES))]
+    queries = [(shape, text, parse_query(text, ENGLISH_ANALYZER))
+               for shape, text in (stream.next()
+                                   for _ in range(4 * len(inputs.SHAPES)))]
     rng = np.random.default_rng(7)
+
+    def pick(pool):
+        return pool[int(rng.integers(len(pool)))]
+
     for r in range(4):
-        t = [pools[(r + j) % len(pools)][int(rng.integers(
-            len(pools[(r + j) % len(pools)])))] for j in range(4)]
-        queries.append(("q_two_groups",
-                        f"+({t[0]} {t[1]}) +({t[2]} {t[3]})"))
+        t = [pick(pools[(r + j) % len(pools)]) for j in range(4)]
+        text = f"+({t[0]} {t[1]}) +({t[2]} {t[3]})"
+        queries.append(("q_two_groups", text,
+                        parse_query(text, ENGLISH_ANALYZER)))
+    for r in range(4):
+        # head bands, so the two terms co-occur within the slop
+        a, b = pick(pools[r % 3]), pick(pools[(r + 1) % 3])
+        queries.append(("q_span_near", f"spanNear([{a}, {b}], 3)",
+                        SpanNearQuery((a, b), slop=3)))
 
     out: dict = {}
-    for shape, text in queries:
-        plan = s._plan(parse_query(text, ENGLISH_ANALYZER))
+    for shape, text, q in queries:
+        plan = s._plan(q)
         spec, live, dead = s._spec_for_plan(plan, "f32", 10, True)
         if dead:
             continue

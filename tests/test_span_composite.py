@@ -5,14 +5,17 @@ reference's TestSpans.java / TestSpansAdvanced.java coverage."""
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from lucene_solr_spark.analysis.analyzer import ENGLISH_ANALYZER, StandardAnalyzer
+from lucene_solr_spark.functions import bm25
 from lucene_solr_spark.index.builder import IndexBuilder
 from lucene_solr_spark.oracle import OracleIndex
 from lucene_solr_spark.search import Searcher
 from lucene_solr_spark.search.ast import (
-    BooleanQuery, Clause, DisjunctionMaxQuery, Occur, SpanFirstQuery,
-    SpanNearQuery, SpanNotQuery, SpanOrQuery, SpanTermQuery, TermQuery,
+    BooleanQuery, BoostQuery, Clause, DisjunctionMaxQuery,
+    FieldMaskingSpanQuery, Occur, SpanFirstQuery, SpanNearQuery,
+    SpanNotQuery, SpanOrQuery, SpanTermQuery, TermQuery,
 )
 
 from conftest import SF_DIR
@@ -166,6 +169,40 @@ def test_span_in_boolean_and_dismax(spark):
            expect_ids=[3])
 
 
+def test_span_near_repeated_term_one_weight(spark):
+    """terms= and clauses= spell the same SpanNearQuery: same docs, same
+    float32 scores. The weight sums idf over the DISTINCT terms
+    (SpanWeight.java:100-118), so a repeated term counts once."""
+    oracle, s = _mk(spark, [
+        "aa bb aa",        # width 0
+        "aa xx bb yy aa",  # width 2
+        "aa bb cc",        # no aa after bb
+        "bb aa bb aa",     # width 0
+        "aa aa bb aa",     # two anchors: widths 1 and 0
+        "cc dd",
+    ])
+    terms = ("aa", "bb", "aa")
+    for slop in (0, 2):
+        by_terms = SpanNearQuery(terms, slop=slop)
+        by_clauses = SpanNearQuery(
+            clauses=tuple(SpanTermQuery(t) for t in terms), slop=slop)
+        a = _check(oracle, s, by_terms, f"terms= slop {slop}")
+        b = _check(oracle, s, by_clauses, f"clauses= slop {slop}")
+        assert len(a) == (3 if slop == 0 else 4)
+        _assert_equal(a, list(zip(b["doc_id"].astype(int),
+                                  b["score"].astype(np.float32))),
+                      f"terms= vs clauses= slop {slop}")
+    n = oracle.field_doc_count["text"]
+    idf = np.float32(bm25.idf(oracle.df("aa"), n)
+                     + bm25.idf(oracle.df("bb"), n))
+    for q in (SpanNearQuery(terms, slop=2),
+              SpanNearQuery(clauses=tuple(SpanTermQuery(t) for t in terms),
+                            slop=2)):
+        leaf = s._spec_for_plan(s._plan(BoostQuery(q, 2.0)), "f32", K,
+                                True)[0]["tree"]
+        assert leaf["w32"] == float(np.float32(np.float32(2.0) * idf))
+
+
 def test_span_missing_required_term(spark):
     oracle, s = _mk(spark, ["aa bb", "bb cc"])
     q = SpanNearQuery(clauses=(SpanTermQuery("aa"),
@@ -178,13 +215,16 @@ def test_span_missing_required_term(spark):
 def test_span_corpus_differential(spark):
     """Engine ≡ oracle on the real sf documents corpus across composite
     span shapes built from genuinely co-occurring terms."""
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    pdf = docs.select("doc_id", "text").toPandas()
+    # title = the first 12 words of text: a parallel position space for
+    # the FieldMaskingSpanQuery shape
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").withColumn(
+        "title", F.concat_ws(" ", F.slice(F.split("text", " "), 1, 12)))
+    pdf = docs.select("doc_id", "text", "title").toPandas()
     oracle = OracleIndex(ENGLISH_ANALYZER)
-    for d, t in zip(pdf["doc_id"], pdf["text"]):
-        oracle.add(int(d), t)
-    idx = IndexBuilder(ENGLISH_ANALYZER, grid=64, with_positions=True
-                       ).build(spark, docs).cache()
+    for d, t, ti in zip(pdf["doc_id"], pdf["text"], pdf["title"]):
+        oracle.add(int(d), t, fields={"title": ti})
+    idx = IndexBuilder(ENGLISH_ANALYZER, grid=64, with_positions=True,
+                       fields=("text", "title")).build(spark, docs).cache()
     s = Searcher(spark, idx)
     # find an adjacent bigram to anchor realistic spans
     pos = oracle.positions["text"]
@@ -213,11 +253,28 @@ def test_span_corpus_differential(spark):
             SpanTermQuery(t2)), slop=4, in_order=False)),
         ("not-near", SpanNotQuery(
             SpanTermQuery(t1), SpanNearQuery((t1, t2), slop=0), post=1)),
+        ("ordered", SpanNearQuery((t1, t2), slop=2)),
+        ("first-near", SpanFirstQuery(SpanNearQuery((t1, t2), slop=1),
+                                      end=8)),
+        # the anchor reads title norms, not the scoring field's: the
+        # bucket bound falls back to the weight
+        ("masked-first", SpanNearQuery(clauses=(
+            FieldMaskingSpanQuery(SpanTermQuery(t1, field="title"),
+                                  field="text"),
+            SpanTermQuery(t2)), slop=3)),
     ]
     for label, q in shapes:
         got = s.top_k(q, k=K)
         exp = oracle.search_ast(q, k=K)
         _assert_equal(got, exp, f"corpus span:{label}")
+        exhaustive = s.top_k(q, k=K, prune=False)
+        _assert_equal(got, list(zip(exhaustive["doc_id"].astype(int),
+                                    exhaustive["score"].astype(np.float32))),
+                      f"corpus span:{label} pruned vs exhaustive")
+    anchors = {label: s._spec_for_plan(s._plan(q), "f32", K, True)[0]
+               ["tree"]["anchor"] for label, q in shapes[-3:]}
+    assert anchors == {"ordered": ("text", t1), "first-near": ("text", t1),
+                       "masked-first": None}
 
 
 def test_span_validation_errors(spark):
