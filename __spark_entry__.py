@@ -1272,9 +1272,9 @@ def q_check_index(spark, sf_dir):
     compare with the dictionary, cross-check norms and collection
     stats. Totals gate index == corpus; the *_delta / mismatch rows
     are identically 0 on a healthy index (the oracle pins them)."""
-    from lucene_solr_spark.index.checkindex import check_index
+    from lucene_solr_spark.index.check import check_field
     idx = _index(spark, sf_dir)[1]
-    return check_index(idx, "text").orderBy("check_name")
+    return check_field(idx, "text").orderBy("check_name")
 
 
 def q_dsir_weights(spark, sf_dir):
@@ -5242,7 +5242,7 @@ WITH t AS (
                      ROWS UNBOUNDED PRECEDING) AS cum_tokens
   FROM t
 )
-SELECT doc_id, source, n_tok, cum_tokens
+SELECT doc_id, source, n_tok, cum_tokens::BIGINT AS cum_tokens
 FROM c
 WHERE cum_tokens <= CASE WHEN source IN ('src0','src1','src2','src3','src4')
                          THEN 600 ELSE 300 END
@@ -7076,26 +7076,62 @@ def q_phonetic_terms(spark, sf_dir):
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Registry order matters: the driver's correctness report caps at
-    50 entries. Round-2 and round-3 both lost queries to hand-counted
-    windows (VERDICT r3 #1: 18 registered queries never driver-verified,
-    7 intended slots miscounted past position 50), so the window is now
-    MACHINE-CHECKED: tests/test_registry_window.py recomputes the
-    never-driver-verified set from the CORRECTNESS_r*.json reports on
-    disk and asserts every one of them sits inside ``queries()[:50]``.
-    Round-5 rotation (VERDICT r4 #1): the 35 round-4 additions without
-    a driver rows+schema+hash row plus rows-only q_sloppy_lucene_topk
-    occupy positions 0-35; the 14 round-5 additions take 36-49 — the
-    window is exactly full, so rows-only q_passage_highlight (driver
-    rows-only row in r4) backfills below it. Everything past position
-    50 was driver-verified green on code since re-gated every round by
-    scripts/check_oracles.py (docs/CORRECTNESS_SELF_r*.log) + pytest."""
+    50 entries, so the window is MACHINE-CHECKED:
+    tests/test_registry_window.py recomputes the never-driver-verified
+    set from the CORRECTNESS_r*.json reports on disk and asserts every
+    one of them sits inside ``queries()[:50]``. The set has 41
+    entries (≤ 50), so all of them come first, in their earlier relative
+    order; the driver-verified rest follows. Everything is re-gated every
+    run by scripts/check_oracles.py (docs/CORRECTNESS_SELF_r*.log) +
+    pytest."""
     return {
-        # ---- (1) never-driver-verified backlog: every round-4 query
-        # without a rows+schema+hash row in any CORRECTNESS_r*.json,
-        # plus rows-only q_sloppy_lucene_topk (its weaker rows-only
-        # driver check re-records each round). 36 entries; the window
+        # ---- (1) never driver-verified: every query without a rows
+        # row in any CORRECTNESS_r*.json, rows-only ones included.
+        # 41 entries, all inside the 50-slot window; the window
         # test recomputes this set from disk and fails on any drift. ----
         "q_sloppy_lucene_topk": q_sloppy_lucene_topk,
+        "q_cluster_topdocs": q_cluster_topdocs,
+        "q_dsir_select": q_dsir_select,
+        "q_hybrid_rrf_topk": q_hybrid_rrf_topk,
+        "q_eval_quality": q_eval_quality,
+        "q_eval_map": q_eval_map,
+        "q_phrase_wildcard_topk": q_phrase_wildcard_topk,
+        "q_luke_fields": q_luke_fields,
+        "q_url_dedup": q_url_dedup,
+        "q_bpe_pair_counts": q_bpe_pair_counts,
+        "q_strdist_topk": q_strdist_topk,
+        "q_ip_cidr_stats": q_ip_cidr_stats,
+        "q_shuffle_shards": q_shuffle_shards,
+        "q_html_strip_terms": q_html_strip_terms,
+        "q_path_facet": q_path_facet,
+        "q_urlemail_tokens": q_urlemail_tokens,
+        "q_edge_ngram_terms": q_edge_ngram_terms,
+        "q_common_grams": q_common_grams,
+        "q_fingerprint_filter": q_fingerprint_filter,
+        "q_custom_analyzer_topk": q_custom_analyzer_topk,
+        "q_shortest_path": q_shortest_path,
+        "q_perfield_topk": q_perfield_topk,
+        "q_curation_manifest": q_curation_manifest,
+        "q_field_exists": q_field_exists,
+        "q_blended_topk": q_blended_topk,
+        "q_localparams_topk": q_localparams_topk,
+        "q_sql_group_topk": q_sql_group_topk,
+        "q_script_profile": q_script_profile,
+        "q_passage_highlight": q_passage_highlight,
+        "q_bloom_or_topk": q_bloom_or_topk,
+        "q_ann_pq_topk": q_ann_pq_topk,
+        "q_semdedup": q_semdedup,
+        "q_facet_params": q_facet_params,
+        "q_relatedness": q_relatedness,
+        "q_facet_range_other": q_facet_range_other,
+        "q_sweetspot_topk": q_sweetspot_topk,
+        "q_span_fieldmask_topk": q_span_fieldmask_topk,
+        "q_scale_boost_topk": q_scale_boost_topk,
+        "q_blockjoin_facet": q_blockjoin_facet,
+        "q_stem_override_topk": q_stem_override_topk,
+        "q_mlt_interesting_terms": q_mlt_interesting_terms,
+        # ---- (2) driver-verified green in an earlier round; all
+        # re-gated every run by scripts/check_oracles.py + pytest. ----
         "q_dfi_topk": q_dfi_topk,
         "q_term_vectors_positions": q_term_vectors_positions,
         "q_facet_percentiles": q_facet_percentiles,
@@ -7125,13 +7161,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_facet_unique": q_facet_unique,
         "q_c4_filter": q_c4_filter,
         "q_suggest_context": q_suggest_context,
-        "q_cluster_topdocs": q_cluster_topdocs,
         "q_mlt_classic_topk": q_mlt_classic_topk,
         "q_synonym_graph_topk": q_synonym_graph_topk,
         "q_blended_suggest": q_blended_suggest,
         "q_paragraph_dedup": q_paragraph_dedup,
         "q_temperature_mix": q_temperature_mix,
-        # ---- (2) round-5 additions: 14 — fills the window exactly ----
         "q_soft_delete_search": q_soft_delete_search,
         "q_docvalues_update_binary": q_docvalues_update_binary,
         "q_analyzing_suggest": q_analyzing_suggest,
@@ -7146,55 +7180,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_span_wildcard_topk": q_span_wildcard_topk,
         "q_check_index": q_check_index,
         "q_dsir_weights": q_dsir_weights,
-        # ---- (2b) overflow: never-driver-verified queries that no
-        # longer fit the exactly-full window sit DIRECTLY after it
-        # (machine-checked ordering) so a hypothetical next rotation
-        # picks them up without re-counting; both are self-gated by
-        # scripts/check_oracles.py every run. ----
-        "q_dsir_select": q_dsir_select,
-        "q_hybrid_rrf_topk": q_hybrid_rrf_topk,
-        "q_eval_quality": q_eval_quality,
-        "q_eval_map": q_eval_map,
-        "q_phrase_wildcard_topk": q_phrase_wildcard_topk,
-        "q_luke_fields": q_luke_fields,
-        "q_url_dedup": q_url_dedup,
-        "q_bpe_pair_counts": q_bpe_pair_counts,
-        "q_strdist_topk": q_strdist_topk,
-        "q_ip_cidr_stats": q_ip_cidr_stats,
-        "q_shuffle_shards": q_shuffle_shards,
-        "q_html_strip_terms": q_html_strip_terms,
-        "q_path_facet": q_path_facet,
-        "q_urlemail_tokens": q_urlemail_tokens,
-        "q_edge_ngram_terms": q_edge_ngram_terms,
-        "q_common_grams": q_common_grams,
-        "q_fingerprint_filter": q_fingerprint_filter,
-        "q_custom_analyzer_topk": q_custom_analyzer_topk,
-        "q_shortest_path": q_shortest_path,
-        "q_perfield_topk": q_perfield_topk,
-        "q_curation_manifest": q_curation_manifest,
-        "q_field_exists": q_field_exists,
-        "q_blended_topk": q_blended_topk,
-        "q_localparams_topk": q_localparams_topk,
-        "q_sql_group_topk": q_sql_group_topk,
-        "q_script_profile": q_script_profile,
-        # ---- (3) driver-verified green in r1-r4 (window backfill; all
-        # re-gated every round by scripts/check_oracles.py + pytest).
-        # q_passage_highlight's weaker rows-only driver check has a row
-        # in r4; with 49 never-verified entries above, the window has no
-        # spare slot for it this round. ----
-        "q_passage_highlight": q_passage_highlight,
-        "q_bloom_or_topk": q_bloom_or_topk,
-        "q_ann_pq_topk": q_ann_pq_topk,
-        "q_semdedup": q_semdedup,
-        "q_facet_params": q_facet_params,
-        "q_relatedness": q_relatedness,
-        "q_facet_range_other": q_facet_range_other,
-        "q_sweetspot_topk": q_sweetspot_topk,
-        "q_span_fieldmask_topk": q_span_fieldmask_topk,
-        "q_scale_boost_topk": q_scale_boost_topk,
-        "q_blockjoin_facet": q_blockjoin_facet,
-        "q_stem_override_topk": q_stem_override_topk,
-        "q_mlt_interesting_terms": q_mlt_interesting_terms,
         "q_span_near_topk": q_span_near_topk,
         "q_span_or_topk": q_span_or_topk,
         "q_span_unordered_topk": q_span_unordered_topk,

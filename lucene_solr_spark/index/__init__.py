@@ -1,4 +1,5 @@
-"""Inverted-index construction: invert → stats → salted pack → tables."""
+"""The index lifecycle: build (invert → dictionary, norms and stats →
+pack by grid cell), append, delete, compact, expunge, save and load."""
 
 from .builder import IndexBuilder, InvertedIndex  # noqa: F401
 from .compact import compact, needs_compaction  # noqa: F401

@@ -418,7 +418,10 @@ def _vbyte_values(vals) -> bytes:
 
 @dataclass
 class InvertedIndex:
-    """The index = four DataFrames (persisted as sorted Parquet tables)."""
+    """The index = four DataFrames (persisted as sorted Parquet tables)
+    plus its tombstones. An index derived from another (append, compact,
+    expunge, a delete) is ``dataclasses.replace(idx, <changed tables>)``,
+    so every field below carries over unless the operation changes it."""
 
     postings: DataFrame
     terms: DataFrame
@@ -430,6 +433,32 @@ class InvertedIndex:
     with_payloads: bool = False      # per-occurrence payload channel
     raw: DataFrame | None = None     # persisted intermediate; release()-able
     timings: dict = field(default_factory=dict)   # per-stage build seconds
+    # tombstones (liveDocs): ``deletes`` = hard ∪ soft doc_ids, the set
+    # every reader masks. Its carrier is ``deleted_array`` (sorted, rides
+    # the kernel spec) or ``del_table`` (per-cell rows joined on bucket);
+    # exactly one is set when ``deletes`` is (deletes.with_tombstones)
+    deletes: DataFrame | None = None
+    deleted_array: np.ndarray | None = None
+    del_table: DataFrame | None = None
+    hard_deletes: DataFrame | None = None
+    soft_deletes: DataFrame | None = None   # expunge may retain these
+    soft_delete_field: str | None = None
+
+    @property
+    def flags(self) -> tuple:
+        """(positions, offsets, payloads) — the channels a block carries."""
+        return self.with_positions, self.with_offsets, self.with_payloads
+
+    def drop_deleted(self, frame: DataFrame) -> DataFrame:
+        """``frame`` (a doc_id column) minus tombstoned docs. Only the
+        bounded driver-array carrier is broadcast; a distributed set
+        anti-joins without the hint."""
+        if self.deletes is None:
+            return frame
+        dels = self.deletes
+        if self.deleted_array is not None:
+            dels = F.broadcast(dels)
+        return frame.join(dels, "doc_id", "left_anti")
 
     @property
     def fields(self) -> list[str]:
@@ -583,10 +612,7 @@ class IndexBuilder:
         # maxPartitionBytes, which would serialize the (Python-bound)
         # analyzer stage. Round-robin repartition = the DWPT work-queue
         # analog; index content is order-independent, so this is safe.
-        import time as _time
         flds = self._resolve_fields(text_col, fields)
-        timings: dict = {}
-        t0 = _time.perf_counter()
         # Bigger Arrow batches for the build: the vectorized invert/pack
         # kernels amortize per-batch fixed costs (regex setup, factorize,
         # buffer concat) — 10k-row default batches are too fine-grained
@@ -608,7 +634,7 @@ class IndexBuilder:
         except Exception:
             prev_batch = None
         try:
-            return self._build_inner(spark, docs, doc_id_col, flds, timings)
+            return self._build_inner(spark, docs, doc_id_col, flds)
         finally:
             if prev_batch is not None:
                 spark.conf.set(
@@ -616,8 +642,9 @@ class IndexBuilder:
                     prev_batch)
 
     def _build_inner(self, spark: SparkSession, docs: DataFrame,
-                     doc_id_col, flds, timings) -> InvertedIndex:
+                     doc_id_col, flds) -> InvertedIndex:
         import time as _time
+        timings = {}
         t0 = _time.perf_counter()
         n_inv = _shuffle_n(spark)
         # THE one wide shuffle of the build moves the DOCUMENTS, keyed by
@@ -642,47 +669,11 @@ class IndexBuilder:
         timings["invert_sec"] = round(_time.perf_counter() - t0, 3)
         t0 = _time.perf_counter()
 
-        # --- per-field term dictionary + singleton pulsing (shuffle w/
-        # partial agg). Terms are (field, text) pairs.
-        terms = (raw.groupBy("field", "term")
-                 .agg(F.count("*").alias("df"),
-                      F.sum("freq").alias("ttf"),
-                      F.min("doc_id").alias("singleton_doc"),
-                      F.max("freq").alias("singleton_freq"),
-                      F.max("norm").alias("singleton_norm"))
-                 .withColumn("singleton_doc",
-                             F.when(F.col("df") == 1, F.col("singleton_doc")))
-                 .withColumn("singleton_freq",
-                             F.when(F.col("df") == 1, F.col("singleton_freq")))
-                 .withColumn("singleton_norm",
-                             F.when(F.col("df") == 1, F.col("singleton_norm"))))
-        terms = terms.repartitionByRange(
-            max(4, spark.sparkContext.defaultParallelism // 2), "field", "term"
-        ).sortWithinPartitions("field", "term").persist()
-
-        # --- per-(field, doc) norms + per-field collection stats
-        norms = (raw.groupBy("field", "doc_id")
-                 .agg(F.sum("freq").alias("dl"), F.max("norm").alias("norm"))
-                 .repartitionByRange(max(4, spark.sparkContext.defaultParallelism // 2),
-                                     "doc_id")
-                 .sortWithinPartitions("field", "doc_id")).persist()
-        frows = (norms.groupBy("field")
-                 .agg(F.count("*").alias("doc_count"),
-                      F.sum("dl").alias("sum_ttf"))).collect()
-        sdf_rows = terms.groupBy("field").agg(F.sum("df").alias("sum_df")).collect()
-        sdf = {r["field"]: int(r["sum_df"]) for r in sdf_rows}
-        fstats = {r["field"]: {"doc_count": int(r["doc_count"]),
-                               "sum_ttf": int(r["sum_ttf"]),
-                               "sum_df": sdf.get(r["field"], 0)}
-                  for r in frows}
-        grow = norms.agg(F.countDistinct("doc_id").alias("doc_count"),
-                         F.max("doc_id").alias("max_doc")).collect()[0]
-        stats = {"doc_count": int(grow["doc_count"]),
-                 "sum_ttf": sum(v["sum_ttf"] for v in fstats.values()),
-                 "sum_df": sum(v["sum_df"] for v in fstats.values()),
-                 "max_doc": int(grow["max_doc"]),
-                 "grid": self.grid,
-                 "fields": fstats}
+        terms, norms, stats = derive_tables(
+            spark, raw,
+            raw.groupBy("field", "doc_id").agg(F.sum("freq").alias("dl"),
+                                               F.max("norm").alias("norm")),
+            self.grid)
         timings["dict_norms_stats_sec"] = round(_time.perf_counter() - t0, 3)
         t0 = _time.perf_counter()
 
@@ -699,28 +690,83 @@ class IndexBuilder:
         # shuffle: filter(term) is narrow and every cell's blocks are
         # contiguous; Parquet row-group stats on the (bucket, field,
         # term) sort order still prune term lookups on disk.
-        grid = self.grid
-        with_pos = self.with_positions
-        with_off = self.with_offsets
-        with_pay = self.payload is not None
-
-        def pack(batches):
-            yield from pack_partition(batches, grid, with_pos, with_off,
-                                      with_pay)
-
-        postings = (raw.withColumn("bucket", F.expr(f"doc_id div {grid}"))
-                    .sortWithinPartitions("bucket", "field", "term", "doc_id")
-                    .mapInPandas(pack, schema=POSTINGS_SCHEMA))
-
+        flags = (self.with_positions, self.with_offsets,
+                 self.payload is not None)
+        postings = pack_postings(raw, self.grid, flags)
         timings["pack_plan_sec"] = round(_time.perf_counter() - t0, 3)
         # pack/layout stage is lazy; callers time its materialization
-        idx = InvertedIndex(postings=postings, terms=terms, norms=norms,
-                            stats=stats, analyzer=self.analyzer,
-                            with_positions=self.with_positions,
-                            with_offsets=self.with_offsets,
-                            with_payloads=with_pay, raw=raw,
-                            timings=timings)
-        return idx
+        return InvertedIndex(postings=postings, terms=terms, norms=norms,
+                             stats=stats, analyzer=self.analyzer,
+                             with_positions=flags[0], with_offsets=flags[1],
+                             with_payloads=flags[2], raw=raw,
+                             timings=timings)
+
+
+SINGLETON_COLS = ("singleton_doc", "singleton_freq", "singleton_norm")
+
+
+def pulse_singletons(terms: DataFrame) -> DataFrame:
+    """Singleton pulsing: a df == 1 term keeps its one posting (doc,
+    freq, norm) in the dictionary; every other term's are null."""
+    one = F.col("df") == 1
+    return terms.select("field", "term", "df", "ttf",
+                        *[F.when(one, F.col(c)).alias(c)
+                          for c in SINGLETON_COLS])
+
+
+def derive_tables(spark: SparkSession, raw: DataFrame, norms: DataFrame,
+                  grid: int) -> tuple[DataFrame, DataFrame, dict]:
+    """Raw postings + per-(field, doc) norms → (terms, norms, stats):
+    the per-field dictionary with singleton pulsing (one partial-agg
+    shuffle; Terms are (field, text) pairs), the norms laid out by
+    doc_id, and per-field plus global collection stats. Build and
+    expunge both end here, so a merge's tables are a build's tables."""
+    n_tab = max(4, spark.sparkContext.defaultParallelism // 2)
+    terms = (pulse_singletons(
+                 raw.groupBy("field", "term")
+                 .agg(F.count("*").alias("df"), F.sum("freq").alias("ttf"),
+                      F.min("doc_id").alias("singleton_doc"),
+                      F.max("freq").alias("singleton_freq"),
+                      F.max("norm").alias("singleton_norm")))
+             .repartitionByRange(n_tab, "field", "term")
+             .sortWithinPartitions("field", "term").persist())
+    norms = (norms.repartitionByRange(n_tab, "doc_id")
+             .sortWithinPartitions("field", "doc_id").persist())
+    frows = (norms.groupBy("field")
+             .agg(F.count("*").alias("doc_count"),
+                  F.sum("dl").alias("sum_ttf"))).collect()
+    sdf = {r["field"]: int(r["sum_df"]) for r in
+           terms.groupBy("field").agg(F.sum("df").alias("sum_df")).collect()}
+    fstats = {r["field"]: {"doc_count": int(r["doc_count"]),
+                           "sum_ttf": int(r["sum_ttf"]),
+                           "sum_df": sdf.get(r["field"], 0)}
+              for r in frows}
+    grow = norms.agg(F.countDistinct("doc_id").alias("doc_count"),
+                     F.max("doc_id").alias("max_doc")).collect()[0]
+    stats = {"doc_count": int(grow["doc_count"]),
+             "sum_ttf": sum(v["sum_ttf"] for v in fstats.values()),
+             "sum_df": sum(v["sum_df"] for v in fstats.values()),
+             "max_doc": int(grow["max_doc"]),
+             "grid": grid,
+             "fields": fstats}
+    return terms, norms, stats
+
+
+def pack_postings(raw: DataFrame, grid: int, flags: tuple,
+                  n_part: int | None = None) -> DataFrame:
+    """Raw posting rows → the postings block table: bucket → (optional
+    bucket-range shuffle into ``n_part`` partitions) → partition-local
+    sort (bucket, field, term, doc_id) → :func:`pack_partition`.
+    ``flags`` = (positions, offsets, payloads). The build passes no
+    ``n_part``: its rows already sit whole-cell per partition."""
+    def pack(batches):
+        yield from pack_partition(batches, grid, *flags)
+
+    rows = raw.withColumn("bucket", F.expr(f"doc_id div {grid}"))
+    if n_part is not None:
+        rows = rows.repartitionByRange(n_part, "bucket")
+    return (rows.sortWithinPartitions("bucket", "field", "term", "doc_id")
+            .mapInPandas(pack, schema=POSTINGS_SCHEMA))
 
 
 _PACK_MIN_ROWS = 50_000

@@ -36,6 +36,7 @@ from ..analysis.analyzer import StandardAnalyzer
 from .builder import IndexBuilder, InvertedIndex
 
 MANIFEST = "MANIFEST.json"
+FORMAT_VERSION = 1
 
 _SCHEME_RE = re.compile(r"^[a-zA-Z][a-zA-Z0-9+.-]*:")
 
@@ -145,11 +146,11 @@ def _input_fingerprint(docs: DataFrame) -> dict:
 def _params(builder: IndexBuilder) -> dict:
     return {"grid": builder.grid,
             "with_positions": builder.with_positions,
-            "with_offsets": getattr(builder, "with_offsets", False),
+            "with_offsets": builder.with_offsets,
             # only recorded when set — adding an always-present key would
             # invalidate every pre-payloads generation's resume key
             **({"with_payloads": True}
-               if getattr(builder, "payload", None) is not None else {}),
+               if builder.payload is not None else {}),
             "fields": list(builder.fields),
             "stop_words": sorted(builder.analyzer.stop_words),
             "max_token_length": builder.analyzer.max_token_length,
@@ -175,9 +176,8 @@ def save(idx: InvertedIndex, path: str, builder: IndexBuilder,
     stage_rows = {}
     tables = [("postings", idx.postings), ("terms", idx.terms),
               ("norms", idx.norms)]
-    dels = getattr(idx, "deletes", None)
-    if dels is not None:
-        tables.append(("deletes", dels))
+    if idx.deletes is not None:
+        tables.append(("deletes", idx.deletes))
     for name, df in tables:
         t = time.perf_counter()
         df.write.mode("overwrite").parquet(f"{path}/{name}")
@@ -193,7 +193,7 @@ def save(idx: InvertedIndex, path: str, builder: IndexBuilder,
                      F.max("bucket").alias("max_bucket"))
                 .orderBy("part").collect())
     manifest = {
-        "format_version": 1,
+        "format_version": FORMAT_VERSION,
         "generation": str(uuid.uuid4()),
         "created_unix": int(time.time()),
         "input": _input_fingerprint(docs),
@@ -202,7 +202,7 @@ def save(idx: InvertedIndex, path: str, builder: IndexBuilder,
         "stats": idx.stats,
         "stages": stage_rows,
         "partitions": [r.asDict() for r in per_part],
-        "has_deletes": dels is not None,
+        "has_deletes": idx.deletes is not None,
         "timings": timings or {},
         "save_sec": round(time.perf_counter() - t0, 3),
     }
@@ -211,9 +211,26 @@ def save(idx: InvertedIndex, path: str, builder: IndexBuilder,
     return manifest
 
 
+def read_postings(spark: SparkSession, path: str) -> DataFrame:
+    """A saved postings table in the current POSTINGS_SCHEMA: tables
+    written before the offsets or payload channels existed get those
+    columns as nulls, so unions (append, segment folds) and the unpack
+    paths keep working."""
+    postings = spark.read.parquet(path)
+    for col in ("off_blob", "pay_blob"):
+        if col not in postings.columns:
+            postings = postings.withColumn(col, F.lit(None).cast("binary"))
+    return postings
+
+
 def load(spark: SparkSession, path: str,
          analyzer: StandardAnalyzer | None = None) -> InvertedIndex:
     manifest = json.loads(_FS(spark, path).read_text(f"{path}/{MANIFEST}"))
+    version = manifest.get("format_version")
+    if version != FORMAT_VERSION:
+        raise ValueError(
+            f"index at {path} has manifest format_version {version!r}; "
+            f"this reader understands only {FORMAT_VERSION}")
     kwargs = {}
     if analyzer is not None:
         kwargs["analyzer"] = analyzer
@@ -222,16 +239,7 @@ def load(spark: SparkSession, path: str,
     # files at row-group boundaries or coalesce small ones, either of
     # which could tear a bucket across partitions. One shuffle at load
     # time, amortized over every query against this generation.
-    postings = spark.read.parquet(f"{path}/postings")
-    if "off_blob" not in postings.columns:
-        # pre-offsets generation: align to the current schema so unions
-        # (append) and the unpack paths keep working
-        postings = postings.withColumn("off_blob",
-                                       F.lit(None).cast("binary"))
-    if "pay_blob" not in postings.columns:   # pre-payloads generation
-        postings = postings.withColumn("pay_blob",
-                                       F.lit(None).cast("binary"))
-    postings = (postings
+    postings = (read_postings(spark, f"{path}/postings")
                 .repartitionByRange(
                     max(4, spark.sparkContext.defaultParallelism), "bucket")
                 .sortWithinPartitions("bucket", "field", "term", "block_id"))
@@ -244,21 +252,11 @@ def load(spark: SparkSession, path: str,
         with_offsets=manifest["params"].get("with_offsets", False),
         with_payloads=manifest["params"].get("with_payloads", False),
         **kwargs)
-    if manifest.get("has_deletes"):
-        import numpy as np
-
-        from .deletes import MAX_DRIVER_DELETES, del_table
-        dels = spark.read.parquet(f"{path}/deletes")
-        idx.deletes = dels
-        if dels.count() > MAX_DRIVER_DELETES:
-            # per-cell bitmap carrier: doc_ids never reach the driver
-            idx.deleted_array = None
-            idx.del_table = del_table(
-                dels, int(manifest["stats"]["grid"])).persist()
-        else:
-            idx.deleted_array = np.sort(np.array(
-                [r["doc_id"] for r in dels.collect()], dtype=np.int64))
-    return idx
+    if not manifest.get("has_deletes"):
+        return idx
+    # the saved set is the effective one; it reloads as hard deletes
+    from .deletes import with_tombstones
+    return with_tombstones(idx, spark.read.parquet(f"{path}/deletes"), None)
 
 
 def latest_generation(path: str,

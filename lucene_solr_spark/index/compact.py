@@ -6,14 +6,15 @@ has the same: small segments accumulate until TieredMergePolicy rewrites
 them, `index/TieredMergePolicy.java:88-103`). ``compact`` rewrites the
 postings table into fresh, maximally-128-aligned blocks:
 
-  decode blocks → raw posting rows   (narrow — no shuffle)
-  repartitionByRange(bucket) + sort  (ONE shuffle, same key as build)
-  pack                               (narrow — the builder's layout stage)
+  unpack_postings: blocks → raw posting rows  (narrow — no shuffle)
+  builder.pack_postings: repartitionByRange(bucket) + sort + pack
+                         (ONE shuffle, same key and pack as the build)
 
-The dictionary, norms and stats tables are untouched (compaction changes
-the physical block layout only, never the logical postings), so
-``check_index`` invariants and every query result are preserved —
-pinned differentially in tests/test_incremental.py.
+``expunge_deletes`` runs the same two steps with a tombstone anti-join
+between them. The dictionary, norms, stats and tombstones are untouched
+(compaction changes the physical block layout only, never the logical
+postings), so ``check_index`` invariants and every query result are
+preserved — pinned differentially in tests/test_incremental.py.
 
 Scale posture: the shuffle moves the already-compressed postings
 equivalent (not the corpus), and the bucket key bounds skew exactly as
@@ -23,13 +24,15 @@ in the build. Run it when blocks-per-run exceeds a threshold
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .builder import (InvertedIndex, RAW_SCHEMA, decode_postings_block,
-                      pack_partition, POSTINGS_SCHEMA, _shuffle_n)
+                      pack_postings, _shuffle_n)
 
 
 def _split_pos_blob(pos_blob: bytes, freqs: np.ndarray) -> list[bytes]:
@@ -88,43 +91,21 @@ def _unpack_blocks(batches, with_pos: bool, with_off: bool = False,
         })
 
 
+def unpack_postings(idx: InvertedIndex) -> DataFrame:
+    """The postings table back to raw posting rows (RAW_SCHEMA) —
+    narrow, one decode per block; the input of every repack."""
+    flags = idx.flags
+    return idx.postings.mapInPandas(lambda it: _unpack_blocks(it, *flags),
+                                    schema=RAW_SCHEMA)
+
+
 def compact(spark: SparkSession, idx: InvertedIndex) -> InvertedIndex:
-    """Rewrite postings into fresh 128-aligned blocks (layout-only)."""
-    with_pos = idx.with_positions
-    with_off = getattr(idx, "with_offsets", False)
-    with_pay = getattr(idx, "with_payloads", False)
-    grid = idx.stats["grid"]
-    raw = idx.postings.mapInPandas(
-        lambda it: _unpack_blocks(it, with_pos, with_off, with_pay),
-        schema=RAW_SCHEMA)
-    n_part = _shuffle_n(spark)
-
-    def pack(batches):
-        yield from pack_partition(batches, grid, with_pos, with_off,
-                                  with_pay)
-
-    postings = (raw.withColumn("bucket", F.expr(f"doc_id div {grid}"))
-                .repartitionByRange(n_part, "bucket")
-                .sortWithinPartitions("bucket", "field", "term", "doc_id")
-                .mapInPandas(pack, schema=POSTINGS_SCHEMA))
-    out = InvertedIndex(postings=postings, terms=idx.terms, norms=idx.norms,
-                        stats=dict(idx.stats), analyzer=idx.analyzer,
-                        with_positions=with_pos, with_offsets=with_off,
-                        with_payloads=with_pay)
-    # tombstones survive compaction unchanged (doc_ids are stable): a
-    # layout-only rewrite must not resurrect deleted docs — the
-    # 'every query result preserved' contract includes liveDocs
-    dels = getattr(idx, "deletes", None)
-    if dels is not None:
-        out.deletes = dels
-        out.deleted_array = getattr(idx, "deleted_array", None)
-        out.del_table = getattr(idx, "del_table", None)
-        # the hard/soft split survives too, so a retention-aware
-        # expunge after compaction still knows which docs it may keep
-        for attr in ("hard_deletes", "soft_deletes", "soft_delete_field"):
-            if getattr(idx, attr, None) is not None:
-                setattr(out, attr, getattr(idx, attr))
-    return out
+    """Rewrite postings into fresh 128-aligned blocks (layout-only).
+    Tombstones, hard/soft split included, carry over unchanged: doc_ids
+    are stable, and a layout rewrite must not resurrect deleted docs."""
+    postings = pack_postings(unpack_postings(idx), idx.stats["grid"],
+                             idx.flags, _shuffle_n(spark))
+    return replace(idx, postings=postings, raw=None)
 
 
 def needs_compaction(idx: InvertedIndex, max_blocks_per_run: int = 4) -> bool:

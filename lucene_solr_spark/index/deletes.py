@@ -8,16 +8,23 @@ counting it until a merge physically drops it. Scores therefore do NOT
 change when a doc is deleted; only the match set shrinks. This module
 reproduces exactly that:
 
-- :func:`delete_docs` records tombstones (a small doc_id set). The
-  Searcher ships the sorted tombstone array to the kernel, which masks
-  those docs out of every match (the liveDocs bitset analog). Like
-  Lucene's in-memory liveDocs, the tombstone set is assumed SMALL
-  relative to the corpus (bounded by ``MAX_DRIVER_DELETES``); beyond
-  that, expunge.
+- :func:`delete_docs` records HARD tombstones, :func:`soft_delete_docs`
+  SOFT ones. Both are ``InvertedIndex`` fields (``hard_deletes``,
+  ``soft_deletes``) and their union is ``deletes``, the set every reader
+  masks (the liveDocs bitset analog). Any index derived from a
+  tombstoned one (append, update, compact, catalog load) keeps them.
+- The carrier (chosen in :func:`with_tombstones`): a set of at most
+  ``MAX_DRIVER_DELETES`` doc_ids rides the kernel spec as a sorted array
+  (``deleted_array``; no join per query). A larger one — a dedup feedback
+  stream on a 10%-dup corpus — becomes the per-cell bitmap table
+  (``del_table``), joined to the queried blocks on ``bucket``, so
+  tombstone volume never touches the driver.
 - :func:`expunge_deletes` (forceMergeDeletes analog) rewrites postings
-  without the deleted docs and RECOMPUTES dictionary/norms/stats — after
-  it, scores reflect the shrunken collection, exactly as after a Lucene
-  merge.
+  without the deleted docs and RECOMPUTES dictionary/norms/stats through
+  the build's own derivation (``builder.derive_tables``,
+  ``builder.pack_postings``) — after it, scores reflect the shrunken
+  collection, exactly as after a Lucene merge. A retention query keeps
+  matching soft-deleted docs physically present.
 
 A training-data pipeline wires dedup output straight in:
 ``delete_docs(idx, dedup_result.filter("is_duplicate"))``.
@@ -25,19 +32,24 @@ A training-data pipeline wires dedup output straight in:
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .builder import InvertedIndex, POSTINGS_SCHEMA, RAW_SCHEMA, _shuffle_n
-from .compact import _unpack_blocks
-from .builder import pack_partition
+from .builder import InvertedIndex, derive_tables, pack_postings, _shuffle_n
+from .compact import unpack_postings
 
-# legacy driver-array bound: a tombstone set at or below this rides the
-# kernel spec as a broadcast numpy array (fast, no join); above it the
-# per-cell bitmap table takes over automatically — delete_docs no
-# longer raises (VERDICT r3 #4)
+# driver-array bound: a tombstone set at or below this rides the kernel
+# spec as a sorted numpy array (fast, no join); above it the per-cell
+# bitmap table takes over automatically
 MAX_DRIVER_DELETES = 2_000_000
+
+# the tombstone fields of an index that masks nothing
+_NO_TOMBSTONES = dict(deletes=None, deleted_array=None, del_table=None,
+                      hard_deletes=None, soft_deletes=None,
+                      soft_delete_field=None)
 
 
 def del_table(dels: DataFrame, grid: int) -> DataFrame:
@@ -61,47 +73,32 @@ def _as_doc_df(spark: SparkSession, doc_ids) -> DataFrame:
                                  "doc_id long").distinct()
 
 
-def _hard_soft(idx):
-    """(hard, soft) tombstone DataFrames. Legacy indexes carry only
-    ``deletes`` — all hard."""
-    soft = getattr(idx, "soft_deletes", None)
-    hard = getattr(idx, "hard_deletes", None)
-    if hard is None and soft is None:
-        hard = getattr(idx, "deletes", None)
-    return hard, soft
+def _union(a: DataFrame | None, b: DataFrame | None) -> DataFrame | None:
+    """a ∪ b of doc_id frames; either may be None."""
+    if a is None or b is None:
+        return b if a is None else a
+    return a.unionByName(b).distinct()
 
 
-def _masked_view(spark: SparkSession, idx: InvertedIndex,
-                 effective: DataFrame,
-                 distributed: bool | None) -> InvertedIndex:
-    """Index view whose queries exclude ``effective`` — the carrier
-    logic shared by hard and soft deletes.
-
-    Carrier: ≤ MAX_DRIVER_DELETES uses the in-spec sorted array (no
-    join per query); above that — a realistic dedup feedback stream on
-    a 10%-dup corpus — the per-cell bitmap table (:func:`del_table`)
-    is joined to the queried blocks on ``bucket`` instead, so tombstone
-    volume never touches the driver. ``distributed=True/False`` forces
-    a carrier."""
-    out = InvertedIndex(postings=idx.postings, terms=idx.terms,
-                        norms=idx.norms, stats=dict(idx.stats),
-                        analyzer=idx.analyzer,
-                        with_positions=idx.with_positions, raw=idx.raw)
-    out.with_offsets = getattr(idx, "with_offsets", False)
-    out.with_payloads = getattr(idx, "with_payloads", False)
-    out.deletes = effective
+def with_tombstones(idx: InvertedIndex, hard: DataFrame | None,
+                    soft: DataFrame | None, distributed: bool | None = None,
+                    **changes) -> InvertedIndex:
+    """``idx`` (plus ``changes``) whose readers mask hard ∪ soft — the
+    one place an index's tombstone fields are set, carrier included.
+    ``distributed=True/False`` forces a carrier; None picks by size
+    against ``MAX_DRIVER_DELETES``."""
+    dels = _union(hard, soft)
     if distributed is None:
-        distributed = effective.count() > MAX_DRIVER_DELETES
+        distributed = dels.count() > MAX_DRIVER_DELETES
+    arr = table = None
     if distributed:
-        out.deleted_array = None
-        out.del_table = del_table(effective,
-                                  int(idx.stats["grid"])).persist()
-        out.del_table.count()    # pin: one build, not one per query
+        table = del_table(dels, int(idx.stats["grid"])).persist()
+        table.count()    # pin: one build, not one per query
     else:
-        out.del_table = None
-        out.deleted_array = np.sort(np.array(
-            [r["doc_id"] for r in effective.collect()], dtype=np.int64))
-    return out
+        arr = np.sort(np.array([r["doc_id"] for r in dels.collect()],
+                               dtype=np.int64))
+    return replace(idx, deletes=dels, deleted_array=arr, del_table=table,
+                   hard_deletes=hard, soft_deletes=soft, **changes)
 
 
 def delete_docs(spark: SparkSession, idx: InvertedIndex,
@@ -110,13 +107,9 @@ def delete_docs(spark: SparkSession, idx: InvertedIndex,
     exclude them. ``doc_ids`` is a DataFrame with a doc_id column or an
     iterable of ints. Stats/norms/dictionary are intentionally UNCHANGED
     (IndexWriter semantics: deletes don't affect scoring until merge)."""
-    new = _as_doc_df(spark, doc_ids)
-    hard, soft = _hard_soft(idx)
-    hard = new if hard is None else hard.unionByName(new).distinct()
-    eff = hard if soft is None else hard.unionByName(soft).distinct()
-    out = _masked_view(spark, idx, eff, distributed)
-    out.hard_deletes, out.soft_deletes = hard, soft
-    return out
+    return with_tombstones(
+        idx, _union(idx.hard_deletes, _as_doc_df(spark, doc_ids)),
+        idx.soft_deletes, distributed)
 
 
 def soft_delete_docs(spark: SparkSession, idx: InvertedIndex,
@@ -135,23 +128,18 @@ def soft_delete_docs(spark: SparkSession, idx: InvertedIndex,
     reference stores it as a doc-values field; ours lives beside the
     per-cell tombstone tables — same newest-state-wins overlay model as
     index/dv_updates.py)."""
-    new = _as_doc_df(spark, doc_ids)
-    hard, soft = _hard_soft(idx)
-    soft = new if soft is None else soft.unionByName(new).distinct()
-    eff = soft if hard is None else hard.unionByName(soft).distinct()
-    out = _masked_view(spark, idx, eff, distributed)
-    out.hard_deletes, out.soft_deletes = hard, soft
-    out.soft_delete_field = soft_delete_field
-    return out
+    return with_tombstones(
+        idx, idx.hard_deletes,
+        _union(idx.soft_deletes, _as_doc_df(spark, doc_ids)), distributed,
+        soft_delete_field=soft_delete_field)
 
 
 def live_doc_count(idx: InvertedIndex) -> int:
     """numDocs() analog: maxDoc-style doc_count minus tombstones."""
-    arr = getattr(idx, "deleted_array", None)
-    if arr is not None:
-        return idx.stats["doc_count"] - len(arr)
-    dels = getattr(idx, "deletes", None)
-    return idx.stats["doc_count"] - (dels.count() if dels is not None else 0)
+    if idx.deleted_array is not None:
+        return idx.stats["doc_count"] - len(idx.deleted_array)
+    return idx.stats["doc_count"] - (
+        idx.deletes.count() if idx.deletes is not None else 0)
 
 
 def _retained_soft(spark: SparkSession, idx: InvertedIndex,
@@ -166,15 +154,8 @@ def _retained_soft(spark: SparkSession, idx: InvertedIndex,
         keep = retention.select(F.col("doc_id").cast("long")).distinct()
     else:
         from ..search.executor import Searcher
-        base = InvertedIndex(postings=idx.postings, terms=idx.terms,
-                             norms=idx.norms, stats=dict(idx.stats),
-                             analyzer=idx.analyzer,
-                             with_positions=idx.with_positions,
-                             with_offsets=getattr(idx, "with_offsets",
-                                                  False),
-                             with_payloads=getattr(idx, "with_payloads",
-                                                   False))
-        keep = Searcher(spark, base).match_docs(retention).distinct()
+        keep = (Searcher(spark, replace(idx, **_NO_TOMBSTONES))
+                .match_docs(retention).distinct())
     return soft.join(keep, "doc_id", "left_semi")
 
 
@@ -194,10 +175,10 @@ def expunge_deletes(spark: SparkSession, idx: InvertedIndex,
     non-retained soft deletes are dropped as before; with
     ``retention=None`` soft deletes expunge like hard ones (a merge
     with no retention policy)."""
-    dels = getattr(idx, "deletes", None)
+    dels = idx.deletes
     if dels is None:
         return idx
-    hard, soft = _hard_soft(idx)
+    hard, soft = idx.hard_deletes, idx.soft_deletes
     retained = None
     if retention is not None and soft is not None:
         retained = _retained_soft(spark, idx, soft, retention)
@@ -209,75 +190,21 @@ def expunge_deletes(spark: SparkSession, idx: InvertedIndex,
         if retained.limit(1).count() == 0:
             retained = None
         else:
-            dropped_soft = soft.join(retained, "doc_id", "left_anti")
-            dels = (dropped_soft if hard is None
-                    else hard.unionByName(dropped_soft).distinct())
-    with_pos = idx.with_positions
-    with_off = getattr(idx, "with_offsets", False)
-    with_pay = getattr(idx, "with_payloads", False)
+            dels = _union(hard, soft.join(retained, "doc_id", "left_anti"))
+    raw = (unpack_postings(idx).join(F.broadcast(dels), "doc_id", "left_anti")
+           .persist())
     grid = idx.stats["grid"]
-    raw = idx.postings.mapInPandas(
-        lambda it: _unpack_blocks(it, with_pos, with_off, with_pay),
-        schema=RAW_SCHEMA)
-    raw = raw.join(F.broadcast(dels), "doc_id", "left_anti").persist()
-
-    terms = (raw.groupBy("field", "term")
-             .agg(F.count("*").alias("df"), F.sum("freq").alias("ttf"),
-                  F.min("doc_id").alias("singleton_doc"),
-                  F.max("freq").alias("singleton_freq"),
-                  F.max("norm").alias("singleton_norm")))
-    one = F.col("df") == 1
-    terms = (terms.select(
-        "field", "term", "df", "ttf",
-        F.when(one, F.col("singleton_doc")).alias("singleton_doc"),
-        F.when(one, F.col("singleton_freq")).alias("singleton_freq"),
-        F.when(one, F.col("singleton_norm")).alias("singleton_norm"))
-        .repartitionByRange(max(4, spark.sparkContext.defaultParallelism // 2),
-                            "field", "term")
-        .sortWithinPartitions("field", "term").persist())
-
-    norms = (idx.norms.join(F.broadcast(dels), "doc_id", "left_anti")
-             .repartitionByRange(max(4, spark.sparkContext.defaultParallelism // 2),
-                                 "doc_id")
-             .sortWithinPartitions("field", "doc_id").persist())
-    frows = (norms.groupBy("field")
-             .agg(F.count("*").alias("doc_count"),
-                  F.sum("dl").alias("sum_ttf"))).collect()
-    sdf_rows = terms.groupBy("field").agg(F.sum("df").alias("sum_df")).collect()
-    sdf = {r["field"]: int(r["sum_df"]) for r in sdf_rows}
-    fstats = {r["field"]: {"doc_count": int(r["doc_count"]),
-                           "sum_ttf": int(r["sum_ttf"]),
-                           "sum_df": sdf.get(r["field"], 0)}
-              for r in frows}
-    grow = norms.agg(F.countDistinct("doc_id").alias("n"),
-                     F.max("doc_id").alias("mx")).collect()[0]
-    stats = {"doc_count": int(grow["n"]),
-             "sum_ttf": sum(v["sum_ttf"] for v in fstats.values()),
-             "sum_df": sum(v["sum_df"] for v in fstats.values()),
-             "max_doc": int(grow["mx"]),
-             "grid": grid, "fields": fstats}
-
-    n_part = _shuffle_n(spark)
-
-    def pack(batches):
-        yield from pack_partition(batches, grid, with_pos, with_off,
-                                  with_pay)
-
-    postings = (raw.withColumn("bucket", F.expr(f"doc_id div {grid}"))
-                .repartitionByRange(n_part, "bucket")
-                .sortWithinPartitions("bucket", "field", "term", "doc_id")
-                .mapInPandas(pack, schema=POSTINGS_SCHEMA))
-    out = InvertedIndex(postings=postings, terms=terms, norms=norms,
-                        stats=stats, analyzer=idx.analyzer,
-                        with_positions=with_pos, with_offsets=with_off,
-                        with_payloads=with_pay,
-                        raw=raw)
-    if retained is not None:
-        # physically-retained soft-deleted docs stay soft-deleted: they
-        # count in the merged stats above but every reader still masks
-        # them (the post-merge state of the reference policy)
-        out = _masked_view(spark, out, retained, None)
-        out.hard_deletes, out.soft_deletes = None, retained
-        out.soft_delete_field = getattr(idx, "soft_delete_field",
-                                        "__soft_deletes")
-    return out
+    terms, norms, stats = derive_tables(
+        spark, raw, idx.norms.join(F.broadcast(dels), "doc_id", "left_anti"),
+        grid)
+    out = replace(idx, postings=pack_postings(raw, grid, idx.flags,
+                                              _shuffle_n(spark)),
+                  terms=terms, norms=norms, stats=stats, raw=raw,
+                  **_NO_TOMBSTONES)
+    if retained is None:
+        return out
+    # physically-retained soft-deleted docs stay soft-deleted: they count
+    # in the merged stats above but every reader still masks them (the
+    # post-merge state of the reference policy)
+    return with_tombstones(out, None, retained,
+                           soft_delete_field=idx.soft_delete_field)

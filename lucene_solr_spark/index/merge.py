@@ -4,7 +4,9 @@ merge lifecycle (`index/IndexWriter.java:1400`, `index/SegmentMerger.java:
 
 A delta generation is built from the new documents only (they carry
 doc_ids ABOVE the current max — insertion order, exactly Lucene's
-per-segment docID base remapping), then the index tables are merged:
+per-segment docID base remapping), then the two generations' tables
+merge through :func:`merge_generations`, the same step
+``streaming.nrt.load_segments`` folds its segments with:
 
 - postings: union of block rows, re-range-partitioned by bucket. Blocks
   from different generations never overlap in doc range except inside
@@ -15,6 +17,10 @@ per-segment docID base remapping), then the index tables are merged:
 - terms: full-outer merge summing df/ttf, singleton pulsing recomputed.
 - norms: disjoint union (doc ranges don't overlap).
 - stats: additive.
+- tombstones: the base's hard and soft deletes carry over unchanged.
+
+:func:`update_documents` is an append plus hard deletes of the replaced
+doc_ids.
 
 Query results over append(build(A), B) are identical to build(A+B) —
 pinned by tests/test_incremental.py differentially. Block boundaries may
@@ -24,31 +30,25 @@ same freedom Lucene segments have.
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .builder import IndexBuilder, InvertedIndex
+from .builder import (IndexBuilder, InvertedIndex, SINGLETON_COLS,
+                      pulse_singletons)
 
 
 def _merge_terms(a: DataFrame, b: DataFrame) -> DataFrame:
-    cols = ["field", "term", "df", "ttf", "singleton_doc", "singleton_freq",
-            "singleton_norm"]
-    a, b = a.select(cols), b.select(cols)
-    j = (a.alias("a").join(b.alias("b"), ["field", "term"], "full_outer"))
-    df = F.coalesce(F.col("a.df"), F.lit(0)) + F.coalesce(F.col("b.df"), F.lit(0))
-    ttf = (F.coalesce(F.col("a.ttf"), F.lit(0)) +
-           F.coalesce(F.col("b.ttf"), F.lit(0)))
-    merged = j.select(
-        "field", "term", df.alias("df"), ttf.alias("ttf"),
-        F.coalesce("a.singleton_doc", "b.singleton_doc").alias("s_doc"),
-        F.coalesce("a.singleton_freq", "b.singleton_freq").alias("s_freq"),
-        F.coalesce("a.singleton_norm", "b.singleton_norm").alias("s_norm"))
-    one = F.col("df") == 1
-    return merged.select(
-        "field", "term", "df", "ttf",
-        F.when(one, F.col("s_doc")).alias("singleton_doc"),
-        F.when(one, F.col("s_freq")).alias("singleton_freq"),
-        F.when(one, F.col("s_norm")).alias("singleton_norm"))
+    cols = ["field", "term", "df", "ttf", *SINGLETON_COLS]
+    j = a.select(cols).alias("a").join(b.select(cols).alias("b"),
+                                       ["field", "term"], "full_outer")
+    return pulse_singletons(j.select(
+        "field", "term",
+        *[(F.coalesce(F.col(f"a.{c}"), F.lit(0))
+           + F.coalesce(F.col(f"b.{c}"), F.lit(0))).alias(c)
+          for c in ("df", "ttf")],
+        *[F.coalesce(f"a.{c}", f"b.{c}").alias(c) for c in SINGLETON_COLS]))
 
 
 def merge_stats(a: dict, b: dict) -> dict:
@@ -70,6 +70,15 @@ def merge_stats(a: dict, b: dict) -> dict:
     }
 
 
+def merge_generations(a: tuple, b: tuple) -> tuple:
+    """Two generations' (postings, terms, norms, stats) → the merged four
+    (SegmentMerger): postings and norms union (doc ranges are disjoint),
+    dictionaries fold with df/ttf sums and singleton re-pulsing, stats
+    add. Lazy and unlaid-out: the caller re-shards what it serves."""
+    return (a[0].unionByName(b[0]), _merge_terms(a[1], b[1]),
+            a[2].unionByName(b[2]), merge_stats(a[3], b[3]))
+
+
 def append(spark: SparkSession, idx: InvertedIndex, new_docs: DataFrame,
            builder: IndexBuilder, doc_id_col: str = "doc_id",
            text_col: str = "text") -> InvertedIndex:
@@ -86,43 +95,30 @@ def append(spark: SparkSession, idx: InvertedIndex, new_docs: DataFrame,
         raise ValueError("append must use the same doc-grid as the base index")
     if builder.with_positions != idx.with_positions:
         raise ValueError("append must match the base index's positions mode")
-    if builder.with_offsets != getattr(idx, "with_offsets", False):
+    if builder.with_offsets != idx.with_offsets:
         raise ValueError("append must match the base index's offsets mode")
-    if ((getattr(builder, "payload", None) is not None)
-            != getattr(idx, "with_payloads", False)):
+    if (builder.payload is not None) != idx.with_payloads:
         raise ValueError("append must match the base index's payload mode")
     delta = builder.build(spark, new_docs, doc_id_col, text_col)
-
+    postings, terms, norms, stats = merge_generations(
+        (idx.postings, idx.terms, idx.norms, idx.stats),
+        (delta.postings, delta.terms, delta.norms, delta.stats))
     n_part = max(4, spark.sparkContext.defaultParallelism)
-    postings = (idx.postings.unionByName(delta.postings)
-                .repartitionByRange(n_part, "bucket")
-                .sortWithinPartitions("bucket", "field", "term", "block_id"))
-    terms = (_merge_terms(idx.terms, delta.terms)
-             .repartitionByRange(max(4, n_part // 2), "field", "term")
-             .sortWithinPartitions("field", "term"))
-    norms = (idx.norms.unionByName(delta.norms)
-             .repartitionByRange(max(4, n_part // 2), "doc_id")
-             .sortWithinPartitions("field", "doc_id"))
-    stats = merge_stats(idx.stats, delta.stats)
-    # carry the delta's persisted raw postings so release() on the merged
-    # index unpersists them (ADVICE: repeated appends leaked the delta's
-    # cached raw table; the merged postings are lazy over it, so it can't
-    # be released any earlier than the merged index itself)
-    out = InvertedIndex(postings=postings, terms=terms, norms=norms,
-                        stats=stats, analyzer=builder.analyzer,
-                        with_positions=idx.with_positions,
-                        with_offsets=getattr(idx, "with_offsets", False),
-                        with_payloads=getattr(idx, "with_payloads", False),
-                        raw=delta.raw)
-    # base-index tombstones carry over: appended docs have ids above
-    # max_doc, so the base's liveDocs set stays valid verbatim — an
-    # append must not resurrect deleted docs
-    dels = getattr(idx, "deletes", None)
-    if dels is not None:
-        out.deletes = dels
-        out.deleted_array = getattr(idx, "deleted_array", None)
-        out.del_table = getattr(idx, "del_table", None)
-    return out
+    # the result owns the delta's persisted raw postings, so release() on
+    # the merged index unpersists them (the merged postings are lazy over
+    # it, so it can't be released any earlier than the merged index).
+    # Tombstones, hard/soft split included, carry over: appended docs
+    # have ids above max_doc, so the base's liveDocs stay valid verbatim
+    return replace(
+        idx,
+        postings=(postings.repartitionByRange(n_part, "bucket")
+                  .sortWithinPartitions("bucket", "field", "term",
+                                        "block_id")),
+        terms=(terms.repartitionByRange(max(4, n_part // 2), "field", "term")
+               .sortWithinPartitions("field", "term")),
+        norms=(norms.repartitionByRange(max(4, n_part // 2), "doc_id")
+               .sortWithinPartitions("field", "doc_id")),
+        stats=stats, analyzer=builder.analyzer, raw=delta.raw)
 
 
 def update_documents(spark: SparkSession, idx: InvertedIndex,

@@ -9,12 +9,14 @@ both sides, and each side's statistics reflect only its own docs — so
 scores in a half legitimately differ from the whole (df/avgdl are
 per-index, as with any Lucene split).
 
-Spark shape: pure reuse of the tombstone machinery — each half is
+Spark shape: pure reuse of the index lifecycle — each half is
 ``expunge_deletes(delete_docs(idx, complement))``: one distributed
 anti-join to materialize the complement, then the expunge repack's one
 bucket-range shuffle rebuilding dictionary/norms/stats from the
-surviving postings. No driver-side doc lists; both halves derive from
-the same persisted input scan.
+surviving postings through the build's own derivation. Docs tombstoned
+in ``idx`` (hard or soft) are in neither half: with no retention query,
+expunge drops every tombstone. No driver-side doc lists; both halves
+derive from the same persisted input scan.
 """
 
 from __future__ import annotations

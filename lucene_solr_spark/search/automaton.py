@@ -323,12 +323,7 @@ def term_automaton_scores(searcher, q: TermAutomaton) -> DataFrame:
         (F.lit(idf_sum) * F.col("freq")
          / (F.col("freq") + F.lit(k1) * (1.0 - b + b * F.col("dl") / avgdl))
          ).alias("score"))
-    dels = getattr(searcher.index, "deletes", None)
-    if dels is not None:
-        small = getattr(searcher.index, "deleted_array", None) is not None
-        scored = scored.join(F.broadcast(dels) if small else dels,
-                             "doc_id", "left_anti")
-    return scored
+    return searcher.index.drop_deleted(scored)
 
 
 def term_automaton_topk(searcher, q: TermAutomaton, k: int = 10) -> DataFrame:

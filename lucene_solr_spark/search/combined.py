@@ -122,12 +122,7 @@ def combined_field_scores(searcher, terms: list[str],
                                     + F.lit(k1) * (1.0 - b + b *
                                                    F.col("clen") / avgdl)))
                       .alias("score")))
-    dels = getattr(searcher.index, "deletes", None)
-    if dels is not None:
-        small = getattr(searcher.index, "deleted_array", None) is not None
-        scored = scored.join(F.broadcast(dels) if small else dels,
-                             "doc_id", "left_anti")
-    return scored
+    return searcher.index.drop_deleted(scored)
 
 
 def combined_field_topk(searcher, terms: list[str],

@@ -392,7 +392,7 @@ class Searcher:
         st, cache32, avgdl64, weights = self._stat_env(all_keys)
         root = _annotate_tree(plan["tree"], st, weights, sim=self.sim)
         spec = dict(
-            tree=root, deleted=getattr(self.index, "deleted_array", None),
+            tree=root, deleted=self.index.deleted_array,
             cache32=cache32, avgdl64=avgdl64,
             k1=self.k1, b=self.b, sim=self.sim, mu=self.mu, lam=self.lam,
             dfr_c=self.dfr_c, ax_s=self.ax_s,
@@ -432,10 +432,8 @@ class Searcher:
         ``bucket`` — unique on the table side, so per-partition row
         order is preserved and every bucket group sees its own
         ``del_offsets``. Bounded sets keep the in-spec array (no join)."""
-        dtab = getattr(self.index, "del_table", None)
-        if dtab is None:
-            return blocks
-        return blocks.join(dtab, "bucket", "left")
+        dtab = self.index.del_table
+        return blocks if dtab is None else blocks.join(dtab, "bucket", "left")
 
     # ------------------------------------------------------------------
     # public API
@@ -510,16 +508,8 @@ class Searcher:
         """Every doc with at least one indexed term, minus tombstones
         (liveDocs): the corpus stream the key-filtered kernel never
         scans."""
-        alldocs = self.index.norms.select("doc_id").distinct()
-        dels = getattr(self.index, "deletes", None)
-        if dels is not None:
-            # broadcast only the bounded (driver-array) carrier; a
-            # distributed tombstone set anti-joins without the hint
-            small = getattr(self.index, "deleted_array", None) is not None
-            alldocs = alldocs.join(
-                F.broadcast(dels) if small else dels,
-                "doc_id", "left_anti")
-        return alldocs
+        return self.index.drop_deleted(
+            self.index.norms.select("doc_id").distinct())
 
     def _field_exists_docs(self, fld: str) -> DataFrame:
         """doc_ids with ≥1 indexed token in ``fld`` — one row per

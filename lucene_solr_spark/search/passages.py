@@ -45,7 +45,7 @@ def matched_spans(searcher, terms: list[str], doc_ids,
     from ..index.builder import decode_offsets_flat, decode_postings_block
     from .executor import _key_filter
 
-    if not getattr(searcher.index, "with_offsets", False):
+    if not searcher.index.with_offsets:
         raise ValueError("matched_spans requires "
                          "IndexBuilder(with_offsets=True)")
     wanted = sorted({int(d) for d in doc_ids})

@@ -40,7 +40,7 @@ def payload_scores(searcher, term: str, field: str = DEFAULT_FIELD,
         raise ValueError(f"unknown payload function {func!r}")
     if decoder not in ("identity", "float_bits"):
         raise ValueError(f"unknown payload decoder {decoder!r}")
-    if not getattr(searcher.index, "with_payloads", False):
+    if not searcher.index.with_payloads:
         raise ValueError(
             "payload_scores requires IndexBuilder(payload=...)")
     blocks = (searcher.index.postings
@@ -162,7 +162,7 @@ def span_payload_check(searcher, terms: list[str],
     """
     if len(terms) != len(payloads) or not terms:
         raise ValueError("terms and payloads must align (non-empty)")
-    if not getattr(searcher.index, "with_payloads", False):
+    if not searcher.index.with_payloads:
         raise ValueError(
             "span_payload_check requires IndexBuilder(payload=...)")
     anchored = None

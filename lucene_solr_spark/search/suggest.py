@@ -119,7 +119,7 @@ def highlight_by_offsets(searcher, terms: list[str],
     from ..index.builder import decode_offsets_flat, decode_postings_block
     from .executor import _key_filter
 
-    if not getattr(searcher.index, "with_offsets", False):
+    if not searcher.index.with_offsets:
         raise ValueError(
             "highlight_by_offsets requires IndexBuilder(with_offsets=True)")
     if not doc_texts:

@@ -11,7 +11,8 @@ reopen a reader over the growing set of immutable segments) maps to:
 - readers call :func:`load_segments` to open a point-in-time view over
   all committed segments: postings are the union re-sharded to the
   bucket-major layout, term dictionaries merge with df/ttf sums and
-  singleton re-pulsing (SegmentMerger semantics), stats are additive.
+  singleton re-pulsing (SegmentMerger semantics), stats are additive —
+  the same two-generation merge ``index.merge.append`` runs.
 
 Micro-batch docs must carry globally-unique doc_ids (the corpus embeds
 them in the url — never positional). Segment doc-ranges are recorded in
@@ -30,13 +31,15 @@ import json
 import os
 import bisect
 import time
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..analysis.analyzer import StandardAnalyzer
 from ..index.builder import IndexBuilder, InvertedIndex
-from ..index.merge import _merge_terms, merge_stats
+from ..index.catalog import read_postings
+from ..index.merge import merge_generations
 
 SEGMENTS = "SEGMENTS.json"
 
@@ -131,23 +134,13 @@ def load_segments(spark: SparkSession, path: str,
         with_positions = rec
     elif with_positions is None:
         with_positions = True  # legacy manifests recorded nothing
-    post = terms = norms = None
-    stats = None
-    for s in segs:
-        d = f"{path}/{s['name']}"
-        p = spark.read.parquet(f"{d}/postings")
-        if "off_blob" not in p.columns:    # pre-offsets segment
-            p = p.withColumn("off_blob", F.lit(None).cast("binary"))
-        if "pay_blob" not in p.columns:    # pre-payloads segment
-            p = p.withColumn("pay_blob", F.lit(None).cast("binary"))
-        t = spark.read.parquet(f"{d}/terms")
-        n = spark.read.parquet(f"{d}/norms")
-        post = p if post is None else post.unionByName(p)
-        terms = t if terms is None else _merge_terms(terms, t)
-        norms = n if norms is None else norms.unionByName(n)
-        stats = s["stats"] if stats is None else merge_stats(stats, s["stats"])
-        if s["stats"]["grid"] != stats["grid"]:
-            raise ValueError("segments disagree on doc-grid size")
+    gens = [(read_postings(spark, f"{path}/{s['name']}/postings"),
+             spark.read.parquet(f"{path}/{s['name']}/terms"),
+             spark.read.parquet(f"{path}/{s['name']}/norms"), s["stats"])
+            for s in segs]
+    if len({g[3]["grid"] for g in gens}) > 1:
+        raise ValueError("segments disagree on doc-grid size")
+    post, terms, norms, stats = reduce(merge_generations, gens)
     n_part = max(4, spark.sparkContext.defaultParallelism)
     return InvertedIndex(
         postings=(post.repartitionByRange(n_part, "bucket")

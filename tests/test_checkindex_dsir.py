@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from lucene_solr_spark.analysis.analyzer import StandardAnalyzer
 from lucene_solr_spark.index.builder import IndexBuilder
-from lucene_solr_spark.index.checkindex import check_index
+from lucene_solr_spark.index.check import check_field as check_index
 from lucene_solr_spark.pipeline.dsir import dsir_logratios, dsir_weights
 from lucene_solr_spark.search import Searcher
 from lucene_solr_spark.search.ast import SpanNearQuery, SpanOrQuery, SpanTermQuery

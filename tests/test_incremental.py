@@ -134,3 +134,21 @@ def test_checkpoint_on_hadoop_scheme(spark, docs, tmp_path_factory):
     s = Searcher(spark, idx2.cache())
     assert len(s.top_k(parse_query(QUERIES[0], ENGLISH_ANALYZER), k=5)) > 0
     idx2.release()
+
+
+def test_load_rejects_unknown_manifest_version(spark, docs, tmp_path_factory):
+    """A manifest from another format version is refused with an error
+    naming the version, not read as if it were version 1."""
+    path = str(tmp_path_factory.mktemp("idxver"))
+    small = docs.filter(F.col("doc_id") < 50)
+    b = _builder()
+    catalog.save(b.build(spark, small), path, b, small)
+    assert catalog.load(spark, path).stats["doc_count"] > 0
+    mpath = f"{path}/{catalog.MANIFEST}"
+    with open(mpath) as f:
+        manifest = json.load(f)
+    manifest["format_version"] = 99
+    with open(mpath, "w") as f:
+        json.dump(manifest, f)
+    with pytest.raises(ValueError, match="format_version 99"):
+        catalog.load(spark, path)

@@ -8,7 +8,8 @@ drops, maxDoc doesn't; (2) expunge with a retention query physically
 KEEPS matching soft-deleted docs (they count in the merged stats,
 stay masked); (3) non-retained soft + all hard deletes drop and stats
 shrink exactly as a from-scratch build over the survivors-plus-retained
-corpus; (4) the hard/soft split and retention survive compaction."""
+corpus; (4) the hard/soft split and retention survive compaction,
+append and update_documents."""
 
 from __future__ import annotations
 
@@ -18,6 +19,7 @@ from pyspark.sql import functions as F
 from lucene_solr_spark.analysis.analyzer import ENGLISH_ANALYZER
 from lucene_solr_spark.index import IndexBuilder
 from lucene_solr_spark.index.compact import compact
+from lucene_solr_spark.index.merge import append, update_documents
 from lucene_solr_spark.index.deletes import (delete_docs, expunge_deletes,
                                              live_doc_count,
                                              soft_delete_docs)
@@ -143,3 +145,45 @@ def test_hard_and_soft_compose_and_survive_compaction(spark, docs, base):
         - len(hard_ids) - len(soft_ids - hard_ids - match)
     assert live_doc_count(merged) == \
         merged.stats["doc_count"] - len(retained)
+
+
+def _ids(df):
+    return set() if df is None else {r["doc_id"] for r in df.collect()}
+
+
+@pytest.mark.parametrize("op", ["append", "update"])
+def test_soft_split_survives_append_and_update(spark, docs, base, op):
+    """Appending a doc (or replacing one through update_documents) after
+    soft deletes keeps the soft set soft: a retention-aware expunge
+    afterwards keeps exactly the soft docs the retention query matches,
+    as a from-scratch build over the survivors plus those docs shows."""
+    soft = _soft_set(docs)
+    victims = _ids(soft)
+    builder = IndexBuilder(ENGLISH_ANALYZER, grid=128, with_positions=True)
+    new = spark.createDataFrame(
+        [(base.stats["max_doc"] + 1, "fresh merge spark table row")],
+        "doc_id long, text string")
+    idx = soft_delete_docs(spark, base, soft)
+    if op == "append":
+        idx = append(spark, idx, new, builder)
+        hard_ids = set()
+    else:
+        hard_ids = {docs.filter("doc_id % 7 = 4").first()["doc_id"]}
+        idx = update_documents(spark, idx, new, sorted(hard_ids), builder)
+    assert _ids(idx.soft_deletes) == victims
+    assert _ids(idx.hard_deletes) == hard_ids
+
+    retention = TermQuery("merge")
+    merged = expunge_deletes(spark, idx, retention=retention)
+    match = _ids(Searcher(spark, base).match_docs(retention))
+    retained = victims & match
+    dropped = (victims - match) | hard_ids
+    assert retained and victims - match, "fixture must exercise both paths"
+
+    survivors = docs.unionByName(new).join(
+        spark.createDataFrame([(int(d),) for d in sorted(dropped)],
+                              "doc_id long"), "doc_id", "left_anti")
+    rebuilt = builder.build(spark, survivors)
+    assert merged.stats["doc_count"] == rebuilt.stats["doc_count"]
+    assert (Searcher(spark, merged).count(MatchAllQuery())
+            == Searcher(spark, rebuilt).count(MatchAllQuery()) - len(retained))
