@@ -60,9 +60,13 @@ def _bit_width(max_value: int) -> int:
 # --- vbyte -----------------------------------------------------------------
 
 def vbyte_encode(values: np.ndarray) -> bytes:
-    """Standard VByte: 7 data bits per byte, high bit = continuation."""
+    """Standard VByte: 7 data bits per byte, high bit = continuation.
+    Values must be non-negative (a negative one would never terminate)."""
+    vals = np.asarray(values, dtype=np.int64)
+    if len(vals) and vals.min() < 0:
+        raise ValueError("VByte encodes non-negative ints only")
     out = bytearray()
-    for v in np.asarray(values, dtype=np.int64):
+    for v in vals:
         v = int(v)
         while True:
             b = v & 0x7F

@@ -42,6 +42,13 @@ docIDs are globally dense and deterministic: the caller supplies them
 (documents.parquet ships doc_id; the synthetic pages corpus derives them
 from the url sort order) — never monotonically_increasing_id.
 
+Reader side: :func:`decode_blocks` is the one decoder of this layout —
+every search-side reader (the query kernel, highlighting, payloads,
+BM25F, the term automaton, ``postings_rows``) and the compaction unpack
+turn block rows into postings through it; CheckIndex alone decodes
+block by block (:func:`decode_postings_block`), so a corrupt block is
+reported rather than aborting the check.
+
 Fields: every text column is a field; a Term is (field, text) exactly as
 in the reference (`index/Term.java:69`). Norms, dictionary stats and
 BM25 collection statistics (docCount, sumTotalTermFreq) are per-field
@@ -93,22 +100,6 @@ def _fallback_re():
         exc = "".join(re.escape(c) for c in _multi_char_exceptions())
         _FALLBACK_RE = re.compile("[一-鿿㐀-䶿぀-ヿ" + exc + "]")
     return _FALLBACK_RE
-
-
-def _vbyte_positions(pos) -> bytes:
-    """Delta + VByte of an ascending position list (codec.vbyte format).
-    Retained for the per-doc fallback path and tests; the vectorized
-    inverter uses codec.vbyte_encode_batch."""
-    out = bytearray()
-    prev = 0
-    for p in pos:
-        d = p - prev
-        prev = p
-        while d > 0x7F:
-            out.append((d & 0x7F) | 0x80)
-            d >>= 7
-        out.append(d)
-    return bytes(out)
 
 
 def _payload_values(terms, positions, payload):
@@ -370,7 +361,7 @@ def _invert_exact(doc_ids, arr, analyzer: StandardAnalyzer, with_pos: bool,
             rows_freq.append(len(ps))
             rows_norm.append(nbyte)
             if with_pos:
-                rows_pos.append(_vbyte_positions(ps))
+                rows_pos.append(codec.vbyte_encode(np.diff(ps, prepend=0)))
             if with_off:
                 inter = []
                 prev = 0
@@ -378,16 +369,12 @@ def _invert_exact(doc_ids, arr, analyzer: StandardAnalyzer, with_pos: bool,
                     inter.append(st - prev)
                     inter.append(en - st)
                     prev = st
-                rows_off.append(_vbyte_values(inter))
+                rows_off.append(codec.vbyte_encode(inter))
             if payload is not None:
-                if delimited:
-                    rows_pay.append(_vbyte_values(
-                        [int(v) for v in doc_pay[term]]))
-                else:
-                    vals = _payload_values(
-                        np.asarray([term] * len(ps), dtype=object),
-                        np.asarray(ps, dtype=np.int64), payload)
-                    rows_pay.append(_vbyte_values([int(v) for v in vals]))
+                vals = (doc_pay[term] if delimited else _payload_values(
+                    np.asarray([term] * len(ps), dtype=object),
+                    np.asarray(ps, dtype=np.int64), payload))
+                rows_pay.append(codec.vbyte_encode(vals))
     if not rows_doc:
         return None
     out = {
@@ -403,17 +390,6 @@ def _invert_exact(doc_ids, arr, analyzer: StandardAnalyzer, with_pos: bool,
     if payload is not None:
         out["pay_blob"] = rows_pay
     return out
-
-
-def _vbyte_values(vals) -> bytes:
-    """Plain VByte of a list of non-negative ints (no delta applied)."""
-    out = bytearray()
-    for d in vals:
-        while d > 0x7F:
-            out.append((d & 0x7F) | 0x80)
-            d >>= 7
-        out.append(d)
-    return bytes(out)
 
 
 @dataclass
@@ -952,53 +928,51 @@ def decode_postings_block(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return docs, freqs, norms
 
 
-def decode_positions_blob(pos_blob: bytes, freqs: np.ndarray) -> list[np.ndarray]:
-    """Per-doc absolute positions from a block's packed positions blob."""
-    total = int(np.sum(freqs))
-    flat = codec.vbyte_decode(bytes(pos_blob), total)
-    outs, off = [], 0
-    for f in np.asarray(freqs, dtype=np.int64):
-        outs.append(np.cumsum(flat[off:off + f]))
-        off += f
-    return outs
+# the blob column of each occurrence channel decode_blocks can read
+_CHANNEL_BLOBS = {"pos": "pos_blob", "off": "off_blob", "pay": "pay_blob"}
 
 
-def decode_offsets_flat(off_blob: bytes, freqs: np.ndarray):
-    """(starts, ends) flat arrays for a block's packed offsets blob —
-    interleaved [Δstart, length] per occurrence, Δstart delta-from-zero
-    per doc stream (vectorized segmented cumsum, like positions)."""
-    f = np.asarray(freqs, dtype=np.int64)
-    total = int(f.sum())
-    flat = codec.vbyte_decode(bytes(off_blob), 2 * total)
-    if total == 0:
-        return flat, flat
-    ds, ln = flat[0::2], flat[1::2]
-    csum = np.cumsum(ds)
-    starts0 = np.zeros(len(f), dtype=np.int64)
-    np.cumsum(f[:-1], out=starts0[1:])
-    base = np.repeat(csum[starts0 - 1] * (starts0 > 0), f)
-    starts = csum - base
-    return starts, starts + ln
+def decode_blocks(rows, channels=()) -> dict:
+    """The one postings reader (Lucene84PostingsReader's PostingsEnum;
+    ``channels`` are its POSITIONS/OFFSETS/PAYLOADS flags): block rows →
+    concatenated per-posting arrays, in row order.
+
+    ``rows`` is a list of block-row mappings (``pdf.to_dict("records")``).
+    → dict with ``doc``, ``freq``, ``norm`` (norm byte) and ``row`` (the
+    index of each posting's source row, to label postings with its
+    field/term), plus flat per-occurrence arrays (``freq`` entries per
+    posting, in posting order) per requested channel: "pos" → ``pos``
+    (absolute positions), "off" → ``start``/``end`` (char offsets),
+    "pay" → ``pay`` (payloads, stored undeltaed). A channel blob is the
+    concatenation of its postings' VByte streams, so each channel
+    decodes in one pass over all rows."""
+    parts = [decode_postings_block(r) for r in rows]
+    if parts:
+        doc, freq, norm = (np.concatenate(x) for x in zip(*parts))
+    else:
+        doc = freq = norm = np.zeros(0, dtype=np.int64)
+    counts = np.fromiter((len(p[0]) for p in parts), dtype=np.int64,
+                         count=len(parts))
+    out = {"doc": doc, "freq": freq, "norm": norm,
+           "row": np.repeat(np.arange(len(rows)), counts)}
+    total = int(freq.sum())
+    for ch in channels:
+        blob = b"".join(r[_CHANNEL_BLOBS[ch]] for r in rows)
+        if ch == "off":
+            # interleaved [Δstart, length]; Δstart restarts per posting
+            flat = codec.vbyte_decode(blob, 2 * total)
+            out["start"] = _run_cumsum(flat[0::2], freq)
+            out["end"] = out["start"] + flat[1::2]
+        elif ch == "pos":
+            out["pos"] = _run_cumsum(codec.vbyte_decode(blob, total), freq)
+        else:
+            out["pay"] = codec.vbyte_decode(blob, total)
+    return out
 
 
-def decode_positions_flat(pos_blob: bytes, freqs: np.ndarray) -> np.ndarray:
-    """All positions of a block as one flat array (per-doc streams are
-    delta-from-zero; vectorized segmented cumsum, no per-doc loop)."""
-    f = np.asarray(freqs, dtype=np.int64)
-    total = int(f.sum())
-    flat = codec.vbyte_decode(bytes(pos_blob), total)
-    if total == 0:
-        return flat
-    csum = np.cumsum(flat)
-    starts = np.zeros(len(f), dtype=np.int64)
-    np.cumsum(f[:-1], out=starts[1:])
-    # subtract the running total at each doc boundary to restart the cumsum
-    base = np.repeat(csum[starts - 1] * (starts > 0), f)
-    return csum - base
-
-
-def decode_payloads_flat(pay_blob: bytes, freqs: np.ndarray) -> np.ndarray:
-    """All payloads of a block as one flat array, position-parallel —
-    plain VByte values, no delta (payloads are not monotone)."""
-    total = int(np.asarray(freqs, dtype=np.int64).sum())
-    return codec.vbyte_decode(bytes(pay_blob), total)
+def _run_cumsum(deltas: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Cumsum of ``deltas`` restarted at every run (run i holds lens[i]
+    values): per-posting delta streams → absolute values, one pass."""
+    csum = np.cumsum(deltas)
+    starts = np.cumsum(lens) - lens
+    return csum - np.repeat(np.r_[0, csum][starts], lens)

@@ -177,7 +177,13 @@ def save(idx: InvertedIndex, path: str, builder: IndexBuilder,
     tables = [("postings", idx.postings), ("terms", idx.terms),
               ("norms", idx.norms)]
     if idx.deletes is not None:
+        # the effective set (what every reader masks); with soft deletes
+        # the split is saved beside it, so load restores it exactly
         tables.append(("deletes", idx.deletes))
+        if idx.soft_deletes is not None:
+            tables.append(("soft_deletes", idx.soft_deletes))
+            if idx.hard_deletes is not None:
+                tables.append(("hard_deletes", idx.hard_deletes))
     for name, df in tables:
         t = time.perf_counter()
         df.write.mode("overwrite").parquet(f"{path}/{name}")
@@ -203,6 +209,8 @@ def save(idx: InvertedIndex, path: str, builder: IndexBuilder,
         "stages": stage_rows,
         "partitions": [r.asDict() for r in per_part],
         "has_deletes": idx.deletes is not None,
+        **({"soft_delete_field": idx.soft_delete_field}
+           if idx.soft_deletes is not None else {}),
         "timings": timings or {},
         "save_sec": round(time.perf_counter() - t0, 3),
     }
@@ -254,9 +262,18 @@ def load(spark: SparkSession, path: str,
         **kwargs)
     if not manifest.get("has_deletes"):
         return idx
-    # the saved set is the effective one; it reloads as hard deletes
     from .deletes import with_tombstones
-    return with_tombstones(idx, spark.read.parquet(f"{path}/deletes"), None)
+    stages = manifest.get("stages", {})
+    if "soft_deletes" not in stages:
+        # no soft deletes (or a generation saved before the split was):
+        # the effective set reloads as hard deletes
+        return with_tombstones(idx, spark.read.parquet(f"{path}/deletes"),
+                               None)
+    hard = (spark.read.parquet(f"{path}/hard_deletes")
+            if "hard_deletes" in stages else None)
+    return with_tombstones(idx, hard,
+                           spark.read.parquet(f"{path}/soft_deletes"),
+                           soft_delete_field=manifest["soft_delete_field"])
 
 
 def latest_generation(path: str,

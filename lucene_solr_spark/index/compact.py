@@ -31,69 +31,55 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .builder import (InvertedIndex, RAW_SCHEMA, decode_postings_block,
+from .builder import (InvertedIndex, RAW_SCHEMA, decode_blocks,
                       pack_postings, _shuffle_n)
 
 
-def _split_pos_blob(pos_blob: bytes, freqs: np.ndarray) -> list[bytes]:
-    """Slice a block's packed positions back into per-doc VByte streams
-    (each doc's stream is self-delimiting: freq[i] VByte values)."""
-    raw = np.frombuffer(bytes(pos_blob), dtype=np.uint8)
-    ends = np.flatnonzero((raw & 0x80) == 0)        # last byte of each value
-    cum = np.cumsum(np.asarray(freqs, dtype=np.int64))
-    # byte offset AFTER each doc's stream = end of its last value + 1
-    stops = ends[cum - 1] + 1
+def _split_streams(blobs, counts: np.ndarray) -> list[bytes]:
+    """Concatenate a channel's block blobs and cut the result back into
+    per-posting VByte streams (posting i's stream holds counts[i]
+    self-delimiting values)."""
+    b = b"".join(blobs)
+    ends = np.flatnonzero((np.frombuffer(b, dtype=np.uint8) & 0x80) == 0)
+    # byte offset AFTER each posting's stream = end of its last value + 1
+    stops = ends[np.cumsum(counts) - 1] + 1
     starts = np.concatenate(([0], stops[:-1]))
-    b = bytes(pos_blob)
     return [b[s:e] for s, e in zip(starts, stops)]
 
 
 def _unpack_blocks(batches, with_pos: bool, with_off: bool = False,
                    with_pay: bool = False):
-    """postings block rows → raw posting rows (the pack inverse)."""
+    """postings block rows → raw posting rows (the pack inverse). Reads
+    every block, tombstoned docs included: it lays blocks out, it does
+    not search."""
     for pdf in batches:
-        out_doc, out_field, out_term = [], [], []
-        out_freq, out_norm, out_pos, out_off = [], [], [], []
-        out_pay = []
-        for row in pdf.itertuples(index=False):
-            r = row._asdict()
-            docs, freqs, norms = decode_postings_block(r)
-            n = len(docs)
-            out_doc.append(docs)
-            out_field.extend([r["field"]] * n)
-            out_term.extend([r["term"]] * n)
-            out_freq.append(freqs)
-            out_norm.append(norms)
-            if with_pos:
-                out_pos.extend(_split_pos_blob(r["pos_blob"], freqs))
-            else:
-                out_pos.extend([None] * n)
-            if with_off:
-                # each doc's offsets stream holds 2*freq VByte values
-                out_off.extend(_split_pos_blob(r["off_blob"], 2 * freqs))
-            else:
-                out_off.extend([None] * n)
-            if with_pay:
-                out_pay.extend(_split_pos_blob(r["pay_blob"], freqs))
-            else:
-                out_pay.extend([None] * n)
-        if not out_doc:
+        if len(pdf) == 0:
             continue
+        p = decode_blocks(pdf.to_dict("records"))
+        n, freq = len(p["doc"]), p["freq"]
         yield pd.DataFrame({
-            "doc_id": np.concatenate(out_doc).astype("int64"),
-            "field": pd.Series(out_field, dtype="object"),
-            "term": pd.Series(out_term, dtype="object"),
-            "freq": np.concatenate(out_freq).astype("int32"),
-            "norm": np.concatenate(out_norm).astype("int32"),
-            "pos_blob": pd.Series(out_pos, dtype="object"),
-            "off_blob": pd.Series(out_off, dtype="object"),
-            "pay_blob": pd.Series(out_pay, dtype="object"),
+            "doc_id": p["doc"],
+            "field": pdf["field"].to_numpy()[p["row"]],
+            "term": pdf["term"].to_numpy()[p["row"]],
+            "freq": freq.astype("int32"),
+            "norm": p["norm"].astype("int32"),
+            "pos_blob": pd.Series(
+                _split_streams(pdf["pos_blob"], freq) if with_pos
+                else [None] * n, dtype="object"),
+            # each posting's offsets stream holds 2*freq VByte values
+            "off_blob": pd.Series(
+                _split_streams(pdf["off_blob"], 2 * freq) if with_off
+                else [None] * n, dtype="object"),
+            "pay_blob": pd.Series(
+                _split_streams(pdf["pay_blob"], freq) if with_pay
+                else [None] * n, dtype="object"),
         })
 
 
 def unpack_postings(idx: InvertedIndex) -> DataFrame:
     """The postings table back to raw posting rows (RAW_SCHEMA) —
-    narrow, one decode per block; the input of every repack."""
+    narrow, one ``decode_blocks`` pass per batch; the input of every
+    repack."""
     flags = idx.flags
     return idx.postings.mapInPandas(lambda it: _unpack_blocks(it, *flags),
                                     schema=RAW_SCHEMA)

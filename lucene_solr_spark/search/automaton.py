@@ -30,9 +30,10 @@ dense-table NFA over numpy-decoded position streams):
   already uses.
 
 Spark shape / 100-TB posture: like the clause kernel, ONE pushed
-(field, term)-filtered postings scan (bucket-major layout keeps each
-doc's blocks in one partition), the NFA runs inside mapInPandas over
-decoded position streams, and only (doc_id, freq, norm) rows leave the
+(field, term)-filtered postings scan (the searcher's block scan,
+`Searcher._postings`: bucket-major layout keeps each doc's blocks in
+one partition; `decode_blocks` positions, tombstoned docs dropped),
+the NFA runs per partition over the decoded position streams, and only (doc_id, freq, norm) rows leave the
 executor — no shuffle in, one narrow aggregation-free stream out;
 scoring is a codegen projection.
 """
@@ -46,9 +47,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..index.builder import decode_positions_flat, decode_postings_block
 from ..functions.smallfloat import LENGTH_TABLE
-from .executor import _key_filter
 
 
 class TermAutomaton:
@@ -273,28 +272,19 @@ def term_automaton_scores(searcher, q: TermAutomaton) -> DataFrame:
         for k in live)
     k1, b = float(searcher.k1), float(searcher.b)
     tid_of = {t: q._term_to_id[t] for t in q.terms}
-    blocks = (searcher.index.postings.filter(_key_filter(live))
-              .select("term", "block_id", "doc_count", "doc_blob",
-                      "freq_blob", "norm_blob", "pos_blob"))
     qb = searcher.spark.sparkContext.broadcast(q)
 
-    def kernel(batches):
+    def kernel(parts):
         auto = qb.value
-        rows = [pdf for pdf in batches if len(pdf)]
-        if not rows:
-            return
         all_doc, all_tid, all_pos, all_norm = [], [], [], []
-        for pdf in rows:
-            for i in range(len(pdf)):
-                row = {c: pdf[c].iloc[i] for c in pdf.columns}
-                docs, freqs, norms = decode_postings_block(row)
-                flat_pos = decode_positions_flat(row["pos_blob"], freqs)
-                all_doc.append(np.repeat(docs, freqs))
-                all_tid.append(np.full(int(freqs.sum()),
-                                       tid_of[row["term"]],
-                                       dtype=np.int64))
-                all_pos.append(flat_pos)
-                all_norm.append(np.repeat(norms, freqs))
+        for pdf, p in parts:
+            tids = pdf["term"].map(tid_of).to_numpy(dtype=np.int64)
+            all_doc.append(np.repeat(p["doc"], p["freq"]))
+            all_tid.append(np.repeat(tids[p["row"]], p["freq"]))
+            all_pos.append(p["pos"])
+            all_norm.append(np.repeat(p["norm"], p["freq"]))
+        if not all_doc:
+            return
         doc = np.concatenate(all_doc)
         tid = np.concatenate(all_tid)
         pos = np.concatenate(all_pos)
@@ -317,13 +307,14 @@ def term_automaton_scores(searcher, q: TermAutomaton) -> DataFrame:
                                 np.array(out_n, dtype=np.int64)]
                             .astype(np.float64)})
 
-    hits = blocks.mapInPandas(kernel, "doc_id long, freq double, dl double")
-    scored = hits.select(
+    hits = searcher._postings(live, kernel,
+                              "doc_id long, freq double, dl double",
+                              channels=("pos",))
+    return hits.select(
         "doc_id",
         (F.lit(idf_sum) * F.col("freq")
          / (F.col("freq") + F.lit(k1) * (1.0 - b + b * F.col("dl") / avgdl))
          ).alias("score"))
-    return searcher.index.drop_deleted(scored)
 
 
 def term_automaton_topk(searcher, q: TermAutomaton, k: int = 10) -> DataFrame:

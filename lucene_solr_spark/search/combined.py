@@ -17,11 +17,12 @@ BM25FQuery.java:58` (later renamed CombinedFieldQuery) +
 - final score = BM25(freq, combined norm) with the pseudo stats.
 
 Spark shape / 100-TB posture: stats resolve driver-side from the
-dictionary (two bounded probes); per-doc freqs decode from the pushed
-(field, term)-filtered postings scan in mapInPandas (same narrow scan
-as the kernel, no shuffle in); the weighted-freq aggregation and the
-norms join are the only wide steps, both on doc_id; the length
-quantization chain runs as codegen CASE expressions. f64 — scores are
+dictionary (two bounded probes); per-doc freqs come from the searcher's
+one block scan (`Searcher._postings`: pushed (field, term) predicate,
+`decode_blocks`, tombstoned docs dropped — the kernel's narrow scan, no
+shuffle in); the weighted-freq aggregation and the norms join are the
+only wide steps, both on doc_id; the length quantization chain runs as
+codegen CASE expressions. f64 — scores are
 the reference formula evaluated in double (the engine's oracle mode).
 
 Divergence (documented): docs that lack a field entirely contribute
@@ -35,9 +36,6 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import DataFrame, functions as F
-
-from ..index.builder import decode_postings_block
-from .executor import _key_filter
 
 # SmallFloat.intToByte4 ∘ byte4ToInt as one codegen CASE — identical to
 # the oracle prelude's dlq expression
@@ -77,27 +75,15 @@ def combined_field_scores(searcher, terms: list[str],
     idf = math.log(1.0 + (doc_count - pseudo_df + 0.5) / (pseudo_df + 0.5))
     k1, b = searcher.k1, searcher.b
 
-    live = [k for k in keys if k in st]
-    blocks = (searcher.index.postings.filter(_key_filter(live))
-              .select("field", "block_id", "doc_count", "doc_blob",
-                      "freq_blob", "norm_blob"))
-
-    def extract(batches):
-        import numpy as np
+    def extract(parts):
         import pandas as pd
-        for pdf in batches:
-            ds, fs_ = [], []
-            for i in range(len(pdf)):
-                row = {c: pdf[c].iloc[i] for c in pdf.columns}
-                docs, freqs, _ = decode_postings_block(row)
-                w = field_weights[row["field"]]
-                ds.append(docs)
-                fs_.append(freqs.astype(np.float64) * w)
-            if ds:
-                yield pd.DataFrame({"doc_id": np.concatenate(ds),
-                                    "wfreq": np.concatenate(fs_)})
+        for pdf, p in parts:
+            w = pdf["field"].map(field_weights).to_numpy(dtype=float)
+            yield pd.DataFrame({"doc_id": p["doc"],
+                                "wfreq": p["freq"] * w[p["row"]]})
 
-    wfreq = (blocks.mapInPandas(extract, "doc_id long, wfreq double")
+    wfreq = (searcher._postings([k for k in keys if k in st], extract,
+                                "doc_id long, wfreq double")
              .groupBy("doc_id").agg(F.sum("wfreq").alias("freq")))
 
     # combined norm: Σ w_f × LENGTH_TABLE[norm_f], rounded, re-quantized
@@ -115,14 +101,13 @@ def combined_field_scores(searcher, terms: list[str],
                 .withColumn("clen", F.expr(
                     _dlq("floor(wsum + 0.5d)")).cast("double")))
 
-    scored = (wfreq.join(combined, "doc_id", "left")
-              .na.fill({"clen": 0.0})
-              .select("doc_id", (F.lit(idf) * F.col("freq")
-                                 / (F.col("freq")
-                                    + F.lit(k1) * (1.0 - b + b *
-                                                   F.col("clen") / avgdl)))
-                      .alias("score")))
-    return searcher.index.drop_deleted(scored)
+    return (wfreq.join(combined, "doc_id", "left")
+            .na.fill({"clen": 0.0})
+            .select("doc_id", (F.lit(idf) * F.col("freq")
+                               / (F.col("freq")
+                                  + F.lit(k1) * (1.0 - b + b *
+                                                 F.col("clen") / avgdl)))
+                    .alias("score")))
 
 
 def combined_field_topk(searcher, terms: list[str],

@@ -14,7 +14,9 @@ Plan shape (the Spark restatement of `search/IndexSearcher.java:513,
            (bucket-major, whole grid cells per partition — Solr's shard
            model, QueryComponent.java:810), so the query plan is
            SHUFFLE-FREE: filter is narrow and every bucket's blocks are
-           already contiguous.
+           already contiguous. It is the one scan of every search-side
+           reader (`Searcher._blocks`; the non-kernel readers decode
+           through `Searcher._postings`, which drops tombstones).
   kernel   per partition, buckets in sequence: decode → vectorized
            TAAT scatter-add with block-max pruning (the WANDScorer /
            BlockMaxConjunctionScorer / BooleanScorer roles in one numpy
@@ -81,8 +83,7 @@ from pyspark.sql import functions as F
 
 from ..functions import bm25
 from ..functions.smallfloat import LENGTH_TABLE
-from ..index.builder import (InvertedIndex, decode_positions_flat,
-                             decode_postings_block)
+from ..index.builder import _CHANNEL_BLOBS, InvertedIndex, decode_blocks
 from .ast import (DEFAULT_FIELD, MULTI_TERM_NODES, SPAN_NODES, BooleanQuery,
                   BoostQuery, Clause, DisjunctionMaxQuery,
                   FieldMaskingSpanQuery, FuzzyQuery,
@@ -405,14 +406,24 @@ class Searcher:
         live = [key for key in all_keys if key in st]
         return spec, live, root is None
 
-    def _blocks(self, live) -> DataFrame:
-        """The postings blocks of the live keys (pushed-down predicate),
-        minus the columns the kernel never reads, plus tombstones."""
+    def _blocks(self, keys, channels=(), buckets=None) -> DataFrame:
+        """THE block scan of every search-side reader: the blocks of
+        ``keys`` (pushed-down (field, term) predicate, plus a bucket IN
+        predicate when ``buckets`` is given), minus the blob columns of
+        channels not requested (``decode_blocks`` names), plus the
+        tombstone carrier. The driver array rides the spec or the
+        reader's closure; a distributed set joins its per-cell
+        ``del_offsets`` on ``bucket`` (liveDocs-file analog) — unique
+        on the table side, so per-partition row order is preserved and
+        every bucket group sees its own offsets."""
         blocks = self.index.postings.filter(
-            _key_filter(list(dict.fromkeys(live))))
-        if not self.index.with_positions:
-            blocks = blocks.drop("pos_blob")
-        return self._with_del_col(blocks.drop("off_blob", "pay_blob"))
+            _key_filter(list(dict.fromkeys(keys))))
+        if buckets is not None:
+            blocks = blocks.filter(F.col("bucket").isin(list(buckets)))
+        blocks = blocks.drop(*(_CHANNEL_BLOBS[c] for c in _CHANNEL_BLOBS
+                               if c not in channels))
+        dtab = self.index.del_table
+        return blocks if dtab is None else blocks.join(dtab, "bucket", "left")
 
     def _kernel(self, specs, live) -> DataFrame:
         """ONE term-filtered scan over the union of the specs' live keys;
@@ -424,16 +435,23 @@ class Searcher:
         # No shuffle: the index layout is bucket-major (whole grid cells per
         # partition, sorted by bucket/field/term/block), so the narrow filter
         # keeps every bucket's blocks contiguous within its partition.
-        return self._blocks(live).mapInPandas(kernel, schema=MULTI_SCHEMA)
+        channels = ("pos",) if self.index.with_positions else ()
+        return self._blocks(live, channels).mapInPandas(
+            kernel, schema=MULTI_SCHEMA)
 
-    def _with_del_col(self, blocks):
-        """Attach the per-cell tombstone column when the index carries a
-        distributed delete table (liveDocs-file analog): a left join on
-        ``bucket`` — unique on the table side, so per-partition row
-        order is preserved and every bucket group sees its own
-        ``del_offsets``. Bounded sets keep the in-spec array (no join)."""
-        dtab = self.index.del_table
-        return blocks if dtab is None else blocks.join(dtab, "bucket", "left")
+    def _postings(self, keys, fn, schema, channels=(), buckets=None):
+        """The live postings of ``keys`` as a DataFrame of ``schema``:
+        ``fn`` maps an iterator of (batch, postings) pairs — each
+        non-empty Arrow batch of the :meth:`_blocks` scan with its
+        ``decode_blocks`` output, tombstoned postings dropped — to
+        pandas frames. Every reader outside the kernel gets liveDocs
+        by construction."""
+        deleted, grid = self.index.deleted_array, int(self.stats["grid"])
+
+        def run(batches):
+            yield from fn(_live_postings(batches, channels, deleted, grid))
+
+        return self._blocks(keys, channels, buckets).mapInPandas(run, schema)
 
     # ------------------------------------------------------------------
     # public API
@@ -1460,6 +1478,53 @@ def _push_heap(heap, k, scores, docs, threshold):
     return threshold
 
 
+# decode_blocks arrays with one entry per posting (the rest: per occurrence)
+_POSTING_COLS = ("doc", "freq", "norm", "row")
+
+
+def _live_postings(batches, channels, deleted, grid: int):
+    """(batch, postings) per Arrow batch of a `Searcher._blocks` scan:
+    `decode_blocks` over the batch's rows, minus the postings (and their
+    occurrences) of tombstoned docs from whichever carrier rides along —
+    the driver array ``deleted`` or the joined ``del_offsets`` column.
+    Batches with no live posting are skipped."""
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        p = decode_blocks(pdf.to_dict("records"), channels)
+        dead = deleted
+        if "del_offsets" in pdf.columns:
+            b, first = np.unique(pdf["bucket"].to_numpy(), return_index=True)
+            cells = [np.asarray(o, dtype=np.int64) + int(c) * grid
+                     for c, o in zip(b, pdf["del_offsets"].to_numpy()[first])
+                     if o is not None and not isinstance(o, float)]
+            dead = np.concatenate(cells) if cells else None
+        if dead is not None and len(dead):
+            live = ~np.isin(p["doc"], dead)
+            if not live.all():
+                occ = np.repeat(live, p["freq"])
+                p = {c: v[live if c in _POSTING_COLS else occ]
+                     for c, v in p.items()}
+        if len(p["doc"]):
+            yield pdf, p
+
+
+def _by_doc(p: dict) -> dict:
+    """``decode_blocks`` output in stable doc order: one key's blocks are
+    doc-ordered except at generation seams (incremental appends), where
+    one permutation reorders every posting and occurrence channel."""
+    order = np.argsort(p["doc"], kind="stable")
+    if (order[1:] > order[:-1]).all():
+        return p
+    freq = p["freq"]
+    src = np.cumsum(freq) - freq                # each posting's first occ
+    f_o = freq[order]
+    occ = (np.repeat(src[order] - (np.cumsum(f_o) - f_o), f_o)
+           + np.arange(int(f_o.sum())))
+    return {c: v[order if c in _POSTING_COLS else occ]
+            for c, v in p.items()}
+
+
 class _BucketData:
     """Lazy per-bucket decode cache: each (field, term) key decodes at
     most once per bucket regardless of how many leaves reference it.
@@ -1485,19 +1550,10 @@ class _BucketData:
             out = self.dec[key] = self.decp[key][:3]
             return out
         rows = self.by_key.get(key)
-        if rows is None:
-            self.dec[key] = None
-            return None
-        docs_l, freqs_l, norms_l = [], [], []
-        for r in rows:
-            d, f, n = decode_postings_block(r)
-            docs_l.append(d)
-            freqs_l.append(f)
-            norms_l.append(n)
-        docs = np.concatenate(docs_l)
-        order = np.argsort(docs, kind="stable")
-        out = (docs[order], np.concatenate(freqs_l)[order],
-               np.concatenate(norms_l)[order])
+        out = None
+        if rows is not None:
+            p = _by_doc(decode_blocks(rows))
+            out = p["doc"], p["freq"], p["norm"]
         self.dec[key] = out
         return out
 
@@ -1508,36 +1564,11 @@ class _BucketData:
         if key in self.decp:
             return self.decp[key]
         rows = self.by_key.get(key)
-        if rows is None:
-            self.decp[key] = None
-            return None
-        docs_l, freqs_l, norms_l, pos_l = [], [], [], []
-        for r in rows:
-            d, f, n = decode_postings_block(r)
-            docs_l.append(d)
-            freqs_l.append(f)
-            norms_l.append(n)
-            pos_l.append(decode_positions_flat(r["pos_blob"], f))
-        # blocks of one (key, bucket) run are doc-ordered already, but
-        # generation seams (incremental appends) may interleave: sort.
-        docs = np.concatenate(docs_l)
-        freqs = np.concatenate(freqs_l)
-        norms = np.concatenate(norms_l)
-        order = np.argsort(docs, kind="stable")
-        if not np.array_equal(order, np.arange(len(docs))):
-            # reorder the flat position stream per block-doc
-            lens = freqs
-            starts = np.zeros(len(lens) + 1, dtype=np.int64)
-            np.cumsum(lens, out=starts[1:])
-            flat = np.concatenate(pos_l) if pos_l else np.zeros(0, np.int64)
-            pieces = [flat[starts[i]:starts[i + 1]] for i in order]
-            flat = (np.concatenate(pieces) if pieces
-                    else np.zeros(0, np.int64))
-            docs, freqs, norms = docs[order], freqs[order], norms[order]
-        else:
-            flat = np.concatenate(pos_l) if pos_l else np.zeros(0, np.int64)
-        flat_doc = np.repeat(docs - self.off, freqs)
-        out = (docs, freqs, norms, flat_doc, flat)
+        out = None
+        if rows is not None:
+            p = _by_doc(decode_blocks(rows, ("pos",)))
+            out = (p["doc"], p["freq"], p["norm"],
+                   np.repeat(p["doc"] - self.off, p["freq"]), p["pos"])
         self.decp[key] = out
         return out
 
@@ -1954,10 +1985,9 @@ def _eval_term(c, data: _BucketData, spec, dtype, skip=False,
         if len(keep) == 0:
             return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=dtype)
         if len(keep) < len(rows):
-            d, f, n = (np.concatenate(x) for x in zip(
-                *(decode_postings_block(rows[i]) for i in keep)))
-            return d - data.off, _score_freqs(f, n, w, field, spec, dtype,
-                                              cp=c.get("cp64"))
+            p = decode_blocks([rows[i] for i in keep])
+            return p["doc"] - data.off, _score_freqs(
+                p["freq"], p["norm"], w, field, spec, dtype, cp=c.get("cp64"))
     d = data.decode(key)
     if d is None:
         return None

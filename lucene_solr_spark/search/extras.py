@@ -19,7 +19,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.smallfloat import LENGTH_TABLE
-from ..index.builder import decode_positions_blob, decode_postings_block
 from .ast import DEFAULT_FIELD
 
 POSTINGS_ROWS_SCHEMA = "term string, doc_id long, freq long, norm int"
@@ -31,46 +30,31 @@ def postings_rows(searcher, terms: list[str],
                   field: str = DEFAULT_FIELD) -> DataFrame:
     """Decoded postings for a term set: (term, doc_id, freq, norm
     [, positions]) — the public 'postings reader' API (PostingsEnum /
-    ImpactsEnum analog). A narrow mapInPandas over the term-filtered
-    block scan, shuffle-free."""
-    cols = ["term", "block_id", "doc_count",
-            "doc_blob", "freq_blob", "norm_blob"]
-    if with_positions:
-        if not searcher.index.with_positions:
-            raise ValueError("index built without positions")
-        cols.append("pos_blob")
-    blocks = (searcher.index.postings
-              .filter((F.col("field") == field)
-                      & F.col("term").isin(list(terms)))
-              .select(*cols))
+    ImpactsEnum analog). A view over the searcher's one block scan
+    (`Searcher._postings`: pushed (field, term) predicate,
+    `decode_blocks`), narrow and shuffle-free; tombstoned docs are
+    masked (liveDocs), as in every search-side reader."""
+    if with_positions and not searcher.index.with_positions:
+        raise ValueError("index built without positions")
 
-    def dec(batches):
-        for pdf in batches:
-            ts, ds, fs, ns, ps = [], [], [], [], []
-            for row in pdf.itertuples(index=False):
-                r = row._asdict()
-                d, f, n = decode_postings_block(r)
-                ts.extend([r["term"]] * len(d))
-                ds.append(d)
-                fs.append(f)
-                ns.append(n)
-                if with_positions:
-                    ps.extend([p.astype("int32").tolist() for p in
-                               decode_positions_blob(r["pos_blob"], f)])
-            if not ds:
-                continue
+    def dec(parts):
+        for pdf, p in parts:
             out = {
-                "term": pd.Series(ts, dtype="object"),
-                "doc_id": np.concatenate(ds).astype("int64"),
-                "freq": np.concatenate(fs).astype("int64"),
-                "norm": np.concatenate(ns).astype("int32"),
+                "term": pdf["term"].to_numpy()[p["row"]],
+                "doc_id": p["doc"],
+                "freq": p["freq"],
+                "norm": p["norm"].astype("int32"),
             }
             if with_positions:
-                out["positions"] = pd.Series(ps, dtype="object")
+                out["positions"] = pd.Series(
+                    np.split(p["pos"].astype("int32"),
+                             np.cumsum(p["freq"])[:-1]), dtype="object")
             yield pd.DataFrame(out)
 
-    schema = POSTINGS_POS_SCHEMA if with_positions else POSTINGS_ROWS_SCHEMA
-    return blocks.mapInPandas(dec, schema=schema)
+    return searcher._postings(
+        [(field, t) for t in terms], dec,
+        POSTINGS_POS_SCHEMA if with_positions else POSTINGS_ROWS_SCHEMA,
+        channels=("pos",) if with_positions else ())
 
 
 def _bm25_f64_col(freq_col, norm_col, df_val: int, searcher,
@@ -496,40 +480,39 @@ def term_vectors_positions(searcher, docs, doc_ids, analyzer=None,
     written at index time; here the row store IS that structure — the
     requested docs are fetched with a PUSHED doc_id IN (…) predicate
     (k docs read, not the corpus) and re-inverted through the real
-    indexing chain (`IndexBuilder.invert`, the same code path that
-    built the index), then positions are decoded executor-side. The
+    indexing chain (`IndexBuilder.invert` and `pack_postings`, the same
+    code path that built the index), then positions are decoded
+    executor-side by `decode_blocks`. The
     corpus df per term comes from the dictionary (broadcast of the
     ≤ |vocab of k docs| term rows joined against the sorted terms
     table's pushed term-IN predicate).
 
     → (doc_id, term, freq, df, positions) with positions a
     comma-joined string (deterministic, oracle-comparable)."""
-    import pandas as pd
-
-    from ..index.builder import IndexBuilder, decode_positions_blob
+    from ..index.builder import IndexBuilder, decode_blocks, pack_postings
 
     ids = [int(d) for d in doc_ids]
     sub = docs.filter(F.col("doc_id").isin(ids)).select("doc_id", field)
     b = IndexBuilder(analyzer or searcher.index.analyzer,
                      with_positions=with_positions)
-    raw = b.invert(sub, fields=(field,))
+    blocks = pack_postings(b.invert(sub, fields=(field,)),
+                           int(searcher.stats["grid"]),
+                           (with_positions, False, False))
+    channels = ("pos",) if with_positions else ()
 
     def _decode(batches):
         for pdf in batches:
-            pos = []
-            for blob, fr in zip(pdf["pos_blob"], pdf["freq"]):
-                if blob is None:
-                    pos.append("")
-                    continue
-                arr = decode_positions_blob(bytes(blob),
-                                            [int(fr)])[0]
-                pos.append(",".join(str(int(p)) for p in arr))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "term": pdf["term"],
-                                "freq": pdf["freq"].astype("int64"),
-                                "positions": pos})
+            if len(pdf) == 0:
+                continue
+            p = decode_blocks(pdf.to_dict("records"), channels)
+            pos = ([",".join(map(str, a.tolist())) for a in
+                    np.split(p["pos"], np.cumsum(p["freq"])[:-1])]
+                   if with_positions else [""] * len(p["doc"]))
+            yield pd.DataFrame({"doc_id": p["doc"],
+                                "term": pdf["term"].to_numpy()[p["row"]],
+                                "freq": p["freq"], "positions": pos})
 
-    tv = raw.mapInPandas(
+    tv = blocks.mapInPandas(
         _decode,
         schema="doc_id long, term string, freq long, positions string")
     dic = (searcher.index.terms

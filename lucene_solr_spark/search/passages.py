@@ -16,12 +16,13 @@ with the PassageScorer formulas (k1=1.2, b=0.75, pivot=87 defaults):
 and the top-N passages are returned sorted by offset with matches
 wrapped in tags.
 
-Spark shape: match spans come from the SAME bucket-pruned distributed
-scan the offsets highlighter uses (pushed (field, term) + bucket IN
-predicate; extraction in mapInPandas; only (doc_id, term, start, end)
-rows reach the driver) — per-doc passage assembly is driver-side over
-the k requested hit docs only, like the reference's per-hit highlight
-loop. Sentence breaking: deterministic [.!?]+whitespace boundaries,
+Spark shape: match spans come from the searcher's one block scan
+(`Searcher._postings`: pushed (field, term) + bucket IN predicate,
+offsets decoded by `decode_blocks`, tombstoned docs dropped), and only
+(doc_id, term, start, end) rows reach the driver; the offsets
+highlighter reads the same rows. Per-doc passage assembly is
+driver-side over the k requested hit docs only, like the reference's
+per-hit highlight loop. Sentence breaking: deterministic [.!?]+whitespace boundaries,
 with a token-aligned length-goal fallback for unpunctuated content
 (LengthGoalBreakIterator analog).
 """
@@ -30,8 +31,6 @@ from __future__ import annotations
 
 import math
 import re
-
-from pyspark.sql import functions as F
 
 from .ast import DEFAULT_FIELD
 
@@ -42,53 +41,32 @@ def matched_spans(searcher, terms: list[str], doc_ids,
                   field: str = DEFAULT_FIELD):
     """(doc_id, term, start, end) rows for the given terms restricted to
     the given docs — the distributed offsets scan, term-labeled."""
-    from ..index.builder import decode_offsets_flat, decode_postings_block
-    from .executor import _key_filter
-
     if not searcher.index.with_offsets:
         raise ValueError("matched_spans requires "
                          "IndexBuilder(with_offsets=True)")
+    schema = "doc_id long, term string, start long, end long"
     wanted = sorted({int(d) for d in doc_ids})
     if not wanted:
-        return searcher.spark.createDataFrame(
-            [], "doc_id long, term string, start long, end long")
+        return searcher.spark.createDataFrame([], schema)
     grid = int(searcher.index.stats["grid"])
-    buckets = sorted({d // grid for d in wanted})
-    keys = [(field, t) for t in terms]
-    blocks = (searcher.index.postings
-              .filter(_key_filter(keys))
-              .filter(F.col("bucket").isin(buckets))
-              .select("term", "block_id", "doc_count", "doc_blob",
-                      "freq_blob", "norm_blob", "off_blob"))
 
-    def extract(batches):
+    def extract(parts):
         import numpy as np
         import pandas as pd
         want = np.asarray(wanted, dtype=np.int64)
-        for pdf in batches:
-            ts, ds, ss, es = [], [], [], []
-            for i in range(len(pdf)):
-                row = {c: pdf[c].iloc[i] for c in pdf.columns}
-                docs, freqs, _ = decode_postings_block(row)
-                if not np.isin(docs, want).any():
-                    continue
-                starts, ends = decode_offsets_flat(row["off_blob"], freqs)
-                flat_doc = np.repeat(docs, freqs)
-                m = np.isin(flat_doc, want)
-                n = int(m.sum())
-                ts.extend([row["term"]] * n)
-                ds.append(flat_doc[m])
-                ss.append(starts[m])
-                es.append(ends[m])
-            if ds:
+        for pdf, p in parts:
+            occ = np.repeat(np.arange(len(p["doc"])), p["freq"])
+            doc = p["doc"][occ]
+            m = np.isin(doc, want)
+            if m.any():
                 yield pd.DataFrame({
-                    "doc_id": np.concatenate(ds),
-                    "term": pd.Series(ts, dtype="object"),
-                    "start": np.concatenate(ss),
-                    "end": np.concatenate(es)})
+                    "doc_id": doc[m],
+                    "term": pdf["term"].to_numpy()[p["row"][occ[m]]],
+                    "start": p["start"][m], "end": p["end"][m]})
 
-    return blocks.mapInPandas(
-        extract, "doc_id long, term string, start long, end long")
+    return searcher._postings([(field, t) for t in terms], extract, schema,
+                              channels=("off",),
+                              buckets=sorted({d // grid for d in wanted}))
 
 
 def _break_passages(text: str, max_chars: int) -> list[tuple[int, int]]:

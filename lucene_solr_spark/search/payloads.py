@@ -8,9 +8,10 @@ The common production shape — and the one implemented here — is the
 single-term span (SpanTermQuery wrapper), e.g. ranking by
 model-assigned term-importance payloads.
 
-Spark shape: the payload aggregation runs executor-side in a
-mapInPandas over the term's (field, term)-filtered blocks (pushed key
-predicate, bucket-major layout — same scan the kernel does), with a
+Spark shape: the payload aggregation runs executor-side over the
+searcher's one block scan (`Searcher._postings`: pushed (field, term)
+predicate, bucket-major layout, payloads decoded by `decode_blocks`,
+tombstoned docs dropped — the scan the kernel does), with a
 vectorized segmented reduce (np.*.reduceat) per doc; the driver sees
 only (doc_id, payload_score) rows. includeSpanScore multiplies by the
 BM25 score from the normal kernel via a doc_id join.
@@ -21,9 +22,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
-from ..index.builder import decode_payloads_flat, decode_postings_block
 from .ast import DEFAULT_FIELD, TermQuery
-from .executor import _key_filter
 
 FUNCS = ("sum", "max", "min", "avg")
 
@@ -43,46 +42,26 @@ def payload_scores(searcher, term: str, field: str = DEFAULT_FIELD,
     if not searcher.index.with_payloads:
         raise ValueError(
             "payload_scores requires IndexBuilder(payload=...)")
-    blocks = (searcher.index.postings
-              .filter(_key_filter([(field, term)]))
-              .select("block_id", "doc_count", "doc_blob", "freq_blob",
-                      "norm_blob", "pay_blob"))
+    reduce = {"sum": np.add, "max": np.maximum, "min": np.minimum,
+              "avg": np.add}[func].reduceat
 
-    def extract(batches):
+    def extract(parts):
         import pandas as pd
-        for pdf in batches:
-            out_d, out_s = [], []
-            for i in range(len(pdf)):
-                row = {c: pdf[c].iloc[i] for c in pdf.columns}
-                docs, freqs, _ = decode_postings_block(row)
-                raw = decode_payloads_flat(row["pay_blob"], freqs)
-                if decoder == "float_bits":
-                    pays = (np.asarray(raw, dtype=np.uint64)
-                            .astype(np.uint32).view(np.float32)
-                            .astype(np.float64))
-                else:
-                    pays = np.asarray(raw).astype(np.float64)
-                starts = np.zeros(len(freqs), dtype=np.int64)
-                np.cumsum(np.asarray(freqs, dtype=np.int64)[:-1],
-                          out=starts[1:])
-                if func == "sum":
-                    s = np.add.reduceat(pays, starts)
-                elif func == "max":
-                    s = np.maximum.reduceat(pays, starts)
-                elif func == "min":
-                    s = np.minimum.reduceat(pays, starts)
-                else:   # avg
-                    s = (np.add.reduceat(pays, starts)
-                         / np.asarray(freqs, dtype=np.float64))
-                out_d.append(docs)
-                out_s.append(s)
-            if out_d:
-                yield pd.DataFrame({
-                    "doc_id": np.concatenate(out_d),
-                    "payload_score": np.concatenate(out_s)})
+        for _, p in parts:
+            raw = p["pay"]
+            if decoder == "float_bits":
+                pays = (np.asarray(raw, dtype=np.uint64).astype(np.uint32)
+                        .view(np.float32).astype(np.float64))
+            else:
+                pays = raw.astype(np.float64)
+            s = reduce(pays, np.cumsum(p["freq"]) - p["freq"])
+            if func == "avg":
+                s = s / p["freq"]
+            yield pd.DataFrame({"doc_id": p["doc"], "payload_score": s})
 
-    return blocks.mapInPandas(extract,
-                              "doc_id long, payload_score double")
+    return searcher._postings([(field, term)], extract,
+                              "doc_id long, payload_score double",
+                              channels=("pay",))
 
 
 def payload_score_topk(searcher, term: str, k: int = 10,
@@ -107,37 +86,21 @@ def payload_score_topk(searcher, term: str, k: int = 10,
 def _term_positions_with_payloads(searcher, term: str, field: str,
                                   required: int | None) -> DataFrame:
     """(doc_id, pos) occurrences of ``term`` whose payload equals
-    ``required`` (all occurrences when required is None). Pushed
-    (field, term) key predicate; decode + filter run executor-side in
-    mapInPandas — only the surviving (doc_id, pos) pairs leave the
-    scan, so a selective payload check prunes before any join."""
-    blocks = (searcher.index.postings
-              .filter(_key_filter([(field, term)]))
-              .select("block_id", "doc_count", "doc_blob", "freq_blob",
-                      "norm_blob", "pos_blob", "pay_blob"))
-    from ..index.builder import decode_positions_blob
-
-    def extract(batches):
+    ``required`` (all occurrences when required is None), tombstoned
+    docs excluded. Pushed (field, term) key predicate; decode + filter
+    run executor-side — only the surviving (doc_id, pos) pairs leave
+    the scan, so a selective payload check prunes before any join."""
+    def extract(parts):
         import pandas as pd
-        for pdf in batches:
-            out_d, out_p = [], []
-            for i in range(len(pdf)):
-                row = {c: pdf[c].iloc[i] for c in pdf.columns}
-                docs, freqs, _ = decode_postings_block(row)
-                poss = decode_positions_blob(row["pos_blob"], freqs)
-                pays = decode_payloads_flat(row["pay_blob"], freqs)
-                off = 0
-                for d, f, p in zip(docs, freqs, poss):
-                    pay = pays[off:off + f]
-                    off += f
-                    keep = (p if required is None
-                            else p[pay == required])
-                    out_d.extend([int(d)] * len(keep))
-                    out_p.extend(int(x) for x in keep)
-            yield pd.DataFrame({"doc_id": pd.Series(out_d, dtype="int64"),
-                                "pos": pd.Series(out_p, dtype="int64")})
+        for _, p in parts:
+            doc = np.repeat(p["doc"], p["freq"])
+            keep = (slice(None) if required is None
+                    else p["pay"] == required)
+            yield pd.DataFrame({"doc_id": doc[keep], "pos": p["pos"][keep]})
 
-    return blocks.mapInPandas(extract, "doc_id long, pos long")
+    return searcher._postings([(field, term)], extract,
+                              "doc_id long, pos long",
+                              channels=("pos", "pay"))
 
 
 def span_payload_check(searcher, terms: list[str],

@@ -43,6 +43,14 @@ def get_spark(app="lucene_solr_spark", cores: int | None = None,
     elif SparkSession.getActiveSession() is None:
         builder = (builder.master(f"local[{cores}]")
                    .config("spark.driver.memory", mem))
+    # Python workers import the package from its parent directory, so a
+    # driver launched from any cwd works without exporting PYTHONPATH
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    inherited = os.environ.get("PYTHONPATH", "")
+    builder = builder.config(
+        "spark.executorEnv.PYTHONPATH",
+        os.pathsep.join([root] + [p for p in inherited.split(os.pathsep)
+                                  if p and p != root]))
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark

@@ -90,3 +90,38 @@ def test_sigma_context_insensitive():
     assert simple_lowercase("ΑΣ") == "ασ"
     assert simple_lowercase("ΣΟΦΙΑΣ") == "σοφιασ"
     assert "Σ" in _multi_char_exceptions()
+
+
+def test_invert_batch_path_equals_per_doc_path():
+    """``invert_field_arrays`` on a batch mixing CJK rows (per-doc path)
+    and plain rows (vectorized path) equals ``_invert_exact`` over every
+    row — freqs, norms and the position, offset and payload blobs."""
+    import numpy as np
+    from lucene_solr_spark.index.builder import (_fallback_re,
+                                                 _invert_exact,
+                                                 invert_field_arrays)
+    texts = pd.Series([
+        "The quick brown fox jumps over the lazy dog; the fox ran.",
+        "東京タワー is tall, 東京 is big",
+        "Spark SQL and Spark streaming: spark's tables.",
+        "数据 data analysis 数据 data",
+        "",
+        None,
+        "Ünïcödé text wïth àccents and more text"])
+    ids = np.arange(10, 10 + len(texts), dtype=np.int64)
+    fb = [bool(_fallback_re().search(t or "")) for t in texts]
+    assert any(fb) and not all(fb), "both invert paths must run"
+
+    def rows(out):
+        cols = ("freq", "norm", "pos_blob", "off_blob", "pay_blob")
+        got = {(int(d), t): tuple(out[c][i] for c in cols)
+               for i, (d, t) in enumerate(zip(out["doc_id"], out["term"]))}
+        assert len(got) == len(out["doc_id"])
+        return got
+
+    batch = invert_field_arrays(ids, texts, ENGLISH_ANALYZER, True,
+                                with_off=True, payload="position")
+    exact = _invert_exact(ids, texts.fillna("").to_numpy(),
+                          ENGLISH_ANALYZER, True, with_off=True,
+                          payload="position")
+    assert rows(batch) == rows(exact)

@@ -184,3 +184,60 @@ def test_auto_switch_above_max_driver_deletes(spark, docs, base,
     keep = before[~before["doc_id"].isin(victims)].head(15)
     assert after["doc_id"].tolist() == keep["doc_id"].tolist()
     assert after["score"].tolist() == keep["score"].tolist()
+
+
+_LIVE_TEXTS = ["alpha beta gamma alpha", "alpha beta delta",
+               "beta alpha alpha epsilon", "alpha gamma beta",
+               "gamma alpha beta beta", "alpha delta beta alpha",
+               "zeta eta", "alpha alpha beta"]
+
+
+@pytest.fixture(scope="module")
+def live_base(spark):
+    from lucene_solr_spark.analysis.analyzer import StandardAnalyzer
+    docs = spark.createDataFrame(list(enumerate(_LIVE_TEXTS)),
+                                 "doc_id long, text string")
+    return IndexBuilder(StandardAnalyzer(), grid=4, with_positions=True,
+                        payload="position").build(spark, docs).cache()
+
+
+def _reader_rows(s):
+    """Every search-side reader outside the kernel → sorted rows."""
+    from lucene_solr_spark.search.extras import (blended_term_score_all,
+                                                 postings_rows,
+                                                 proximity_score_all,
+                                                 synonym_score_all)
+    from lucene_solr_spark.search.payloads import (payload_score_topk,
+                                                   payload_scores,
+                                                   span_payload_check)
+    frames = {
+        "postings_rows": postings_rows(s, ["alpha", "beta"],
+                                       with_positions=True),
+        "synonym": synonym_score_all(s, ["alpha", "gamma"]),
+        "blended": blended_term_score_all(s, ["alpha", "gamma"]),
+        "proximity": proximity_score_all(s, "alpha", "beta", window=2),
+        "payload_scores": payload_scores(s, "alpha", func="max"),
+        "payload_topk": payload_score_topk(s, "alpha", k=100),
+        "span_payload": span_payload_check(s, ["alpha", "beta"],
+                                           [None, None]),
+    }
+    return {name: sorted(tuple(r) for r in df.collect())
+            for name, df in frames.items()}
+
+
+@pytest.mark.parametrize("distributed", [False, True])
+def test_every_reader_masks_tombstones(spark, live_base, distributed):
+    """liveDocs by construction: each reader returns exactly its doc set
+    on the undeleted index minus the deleted docs, and the survivors'
+    rows (scores included — deletes do not change stats) unchanged."""
+    victims = {1, 3}
+    before = _reader_rows(Searcher(spark, live_base))
+    idx = delete_docs(spark, live_base, sorted(victims),
+                      distributed=distributed)
+    assert (idx.del_table is not None) == distributed
+    after = _reader_rows(Searcher(spark, idx))
+    for name, rows in before.items():
+        doc = 1 if name == "postings_rows" else 0     # doc_id column
+        assert {r[doc] for r in rows} & victims, name  # victims matched
+        assert after[name] == [r for r in rows if r[doc] not in victims], \
+            name

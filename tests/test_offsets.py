@@ -9,9 +9,7 @@ import pytest
 
 from lucene_solr_spark.analysis.analyzer import (ENGLISH_ANALYZER,
                                                  StandardAnalyzer)
-from lucene_solr_spark.index.builder import (IndexBuilder,
-                                             decode_offsets_flat,
-                                             decode_postings_block)
+from lucene_solr_spark.index.builder import IndexBuilder, decode_blocks
 from lucene_solr_spark.search import Searcher
 from lucene_solr_spark.search.ast import TermQuery
 from lucene_solr_spark.search.suggest import highlight, highlight_by_offsets
@@ -35,12 +33,12 @@ def built(spark):
 def _index_offsets(idx, texts):
     """{(doc, term): [(start, end)]} decoded from the postings."""
     got: dict = {}
-    for r in idx.postings.collect():
-        docs, freqs, _ = decode_postings_block(r)
-        starts, ends = decode_offsets_flat(r["off_blob"], freqs)
-        flat_doc = np.repeat(docs, freqs)
-        for d, s, e in zip(flat_doc, starts, ends):
-            got.setdefault((int(d), r["term"]), []).append((int(s), int(e)))
+    rows = idx.postings.collect()
+    p = decode_blocks(rows, ("off",))
+    flat_doc = np.repeat(p["doc"], p["freq"])
+    flat_row = np.repeat(p["row"], p["freq"])
+    for d, i, s, e in zip(flat_doc, flat_row, p["start"], p["end"]):
+        got.setdefault((int(d), rows[i]["term"]), []).append((int(s), int(e)))
     return got
 
 

@@ -187,3 +187,29 @@ def test_soft_split_survives_append_and_update(spark, docs, base, op):
     assert merged.stats["doc_count"] == rebuilt.stats["doc_count"]
     assert (Searcher(spark, merged).count(MatchAllQuery())
             == Searcher(spark, rebuilt).count(MatchAllQuery()) - len(retained))
+
+
+def test_soft_split_survives_save_and_load(spark, docs, base, tmp_path):
+    """``catalog.save`` + ``catalog.load`` restore hard, soft and the
+    soft-deletes field exactly — a doc both hard- and soft-deleted
+    included — so a retention-aware expunge after a reload keeps what
+    the in-memory one keeps."""
+    from lucene_solr_spark.index import catalog
+    soft = _soft_set(docs)
+    both = min(_ids(soft))
+    hard = {both, docs.filter("doc_id % 7 = 4").first()["doc_id"]}
+    idx = delete_docs(spark, soft_delete_docs(spark, base, soft), hard)
+    builder = IndexBuilder(ENGLISH_ANALYZER, grid=128, with_positions=True)
+    path = str(tmp_path / "gen")
+    catalog.save(idx, path, builder, docs)
+    loaded = catalog.load(spark, path)
+    assert _ids(loaded.soft_deletes) == _ids(soft)
+    assert _ids(loaded.hard_deletes) == hard
+    assert _ids(loaded.deletes) == _ids(idx.deletes)
+    assert loaded.soft_delete_field == idx.soft_delete_field
+
+    retention = TermQuery("merge")
+    want = expunge_deletes(spark, idx, retention=retention)
+    got = expunge_deletes(spark, loaded, retention=retention)
+    assert got.stats["doc_count"] == want.stats["doc_count"]
+    assert _ids(got.soft_deletes) == _ids(want.soft_deletes)
