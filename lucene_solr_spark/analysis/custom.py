@@ -25,11 +25,12 @@ named components instead of a fixed class.  Components:
     source position — the NGram/SynonymFilter posInc-0 convention).
 
 Indexing: ``IndexBuilder`` consults ``batch_vectorizable`` — False
-here routes every row through the per-doc reference path
-(`index/builder.py` ``_invert_exact``), which only needs
-``term_positions``.  The numpy batch fast path stays reserved for the
+here routes every row through the per-doc inversion front
+(`index/builder.py` ``_tokens_per_doc``), which only needs
+``term_positions``; its token stream is encoded by the same back end
+as the vectorized front's. That numpy front stays reserved for the
 StandardAnalyzer family whose chain it restates; an arbitrary Python
-chain on the batch path would silently diverge instead.
+chain on it would silently diverge instead.
 
 Offsets: char filters rewrite the text, so character offsets into the
 ORIGINAL text are no longer derivable (the reference solves this with

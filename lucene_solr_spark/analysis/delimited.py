@@ -13,7 +13,8 @@ Spark shape: payload text only makes sense under a whitespace-style
 tokenizer (the standard chain would split "apple|5" at the bar), so
 this is a dedicated analyzer — WhitespaceTokenizer → DelimitedPayload
 → LowerCase — that the index builder routes through its per-doc
-reference path (``batch_vectorizable = False``). Payload values ride
+inversion front (``batch_vectorizable = False``), whose token stream
+carries the payloads to the one raw-row encoder. Payload values ride
 the index's existing per-occurrence VByte payload channel
 (`index/builder.py` ``pay_blob``); the engine's channel stores
 non-negative ints, so the float encoder stores the IEEE-754 bit

@@ -15,8 +15,8 @@ IS the text: this module provides
   delegate to that script's chain; Latin text goes to the default
   (e.g. English) chain. Duck-type-compatible with StandardAnalyzer's
   per-doc surface, so ``IndexBuilder(ScriptRoutingAnalyzer())`` just
-  works (``batch_vectorizable=False`` → per-doc reference path — the
-  same routing the CJK fallback already takes).
+  works (``batch_vectorizable=False`` → the per-doc inversion front,
+  the same routing the CJK fallback rows take).
 
 Mixed-script documents route by majority letter count; the per-script
 chains only see whole documents, matching how the reference's

@@ -86,11 +86,14 @@ def vbyte_encode_batch(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     encoding of ``values[i]`` — byte-identical to :func:`vbyte_encode`
     value-by-value (7 LSB-first data bits per byte, high bit =
     continuation). Callers slice contiguous runs out of ``buf`` to get
-    per-run streams without any per-value Python.
+    per-run streams without any per-value Python. Values must be
+    non-negative, as for :func:`vbyte_encode`.
     """
     v = np.asarray(values, dtype=np.int64)
     if len(v) == 0:
         return np.zeros(0, dtype=np.uint8), np.zeros(1, dtype=np.int64)
+    if v.min() < 0:
+        raise ValueError("VByte encodes non-negative ints only")
     nb = np.ones(len(v), dtype=np.int64)
     thresh = np.int64(1 << 7)
     while True:

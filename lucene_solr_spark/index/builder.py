@@ -8,13 +8,18 @@ shuffle end to end:
   stage 0 (THE wide shuffle)     docs repartitionByRange(grid cell) —
                                  whole cells per partition; moves the
                                  corpus text once, before any Python
-  stage 1 (narrow)               docs --mapInPandas--> (doc_id, field,
-                                 term, freq, norm[, pos_blob])
-                                 — the per-doc term hash (TermsHashPerField
-                                 .add), VECTORIZED: pandas/numpy batch
-                                 tokenize→lower→stop→group, no per-token
-                                 Python (north-rule "no per-row Python");
-                                 output inherits the cell partitioning
+  stage 1 (narrow)               docs --mapInPandas--> RAW_SCHEMA rows
+                                 (doc_id, field, term, freq, norm[, pos/
+                                 off/pay blobs]) — the per-doc term hash
+                                 (TermsHashPerField.add). Two fronts emit
+                                 one flat token stream: the VECTORIZED
+                                 front (numpy batch tokenize→lower→stop,
+                                 no per-token Python) and the per-doc
+                                 front (the analyzer's own term_positions,
+                                 for fallback rows and custom chains);
+                                 ONE back end sorts it into (doc, term)
+                                 runs and VByte-encodes every channel.
+                                 Output inherits the cell partitioning
   stage 2 (partial-agg shuffle)  groupBy(field, term) → df/ttf +
                                  singleton pulsing — the per-field term
                                  dictionary (BlockTreeTermsWriter; Terms
@@ -41,6 +46,10 @@ cross-partition leakage.
 docIDs are globally dense and deterministic: the caller supplies them
 (documents.parquet ships doc_id; the synthetic pages corpus derives them
 from the url sort order) — never monotonically_increasing_id.
+
+Writer side: :func:`_encode_stream` is the one encoder of raw rows and
+:func:`pack_partition` the one block writer; both Python stages coalesce
+their input through :func:`_rebatch`, so no session conf is touched.
 
 Reader side: :func:`decode_blocks` is the one decoder of this layout —
 every search-side reader (the query kernel, highlighting, payloads,
@@ -104,15 +113,11 @@ def _fallback_re():
 
 def _payload_values(terms, positions, payload):
     """Per-occurrence integer payloads (`Lucene84PostingsWriter.java`
-    addPosition's payload channel; the values a DelimitedPayloadToken-
-    Filter / model-score pipeline would attach). Built-in vectorized
-    sources: "position" (1-based token position) and "term_len";
-    a callable (term, position) -> int is the general path."""
-    if payload == "delimited":
-        raise ValueError(
-            "payload='delimited' values come from the analyzer's "
-            "term_positions_payloads (DelimitedPayloadAnalyzer), not "
-            "a post-analysis source — the batch path must not be hit")
+    addPosition's payload channel; the values a model-score pipeline
+    would attach). Built-in vectorized sources: "position" (1-based
+    token position) and "term_len"; a callable (term, position) -> int
+    is the general path. "delimited" values come from the analyzer, so
+    the per-doc front carries them in its token stream instead."""
     if payload == "position":
         return positions + 1
     if payload == "term_len":
@@ -128,27 +133,27 @@ def _payload_values(terms, positions, payload):
 def invert_field_arrays(doc_ids: np.ndarray, texts: pd.Series,
                         analyzer: StandardAnalyzer, with_pos: bool,
                         with_off: bool = False, payload=None):
-    """Vectorized single-field inversion of one Arrow batch.
+    """Single-field inversion of one Arrow batch.
 
     → None, or dict of parallel arrays (doc_id, term, freq, norm
-    [, pos_blob]) — one entry per (doc, term) pair, byte-identical to
-    running ``analyzer.term_positions`` per doc (differential-tested in
-    tests/test_analyzer.py).
+    [, pos_blob][, off_blob][, pay_blob]) — one entry per (doc, term)
+    pair, the rows of ``RAW_SCHEMA``.
 
-    Hot-path shape: whole-document lowercase FIRST (one C-level
-    str.lower per doc — legal because simple-lowercase is 1:1 and
-    class-preserving on every codepoint outside the fallback set, so
-    tokenize∘lower ≡ lower∘tokenize there), one C regex findall per
-    doc, C-level map(len) / set-membership over the flat token stream,
-    then factorize + lexsort + run detection in numpy. Rows containing
-    exotic scripts or exceptional-lowercase codepoints route wholly
-    through the per-doc reference path (`analyzer.term_positions`).
+    Two fronts turn rows into one flat token stream (batch row, term,
+    position[, start, end][, payload]); :func:`_encode_stream`, the one
+    back end, turns the joined stream into rows. Rows matching
+    :func:`_fallback_re` (mixed CJK scripts, exceptional lowercase)
+    take the per-doc front (the analyzer's own ``term_positions``), the
+    rest the vectorized front; with ``payload="delimited"`` or an
+    analyzer whose ``batch_vectorizable`` is False every row takes the
+    per-doc front. The output equals :func:`_invert_exact` over every
+    row (differential-tested in tests/test_analyzer.py).
     """
     arr = texts.fillna("").to_numpy()
-    if payload == "delimited":
+    delimited = payload == "delimited"
+    if delimited:
         # DelimitedPayloadTokenFilter ingestion: per-occurrence values
-        # live in the analyzed token text itself, so every row takes
-        # the per-doc path with the analyzer's payload stream
+        # live in the analyzed token text itself (analysis/delimited.py)
         if not hasattr(analyzer, "term_positions_payloads"):
             raise ValueError(
                 "payload='delimited' requires an analyzer exposing "
@@ -157,38 +162,28 @@ def invert_field_arrays(doc_ids: np.ndarray, texts: pd.Series,
             raise ValueError(
                 "delimited payloads rewrite token text — character "
                 "offsets into the original are not derivable")
-        return _invert_exact(doc_ids, arr, analyzer, with_pos,
-                             with_off, payload)
-    if not getattr(analyzer, "batch_vectorizable", True):
-        # CustomAnalyzer chains are arbitrary Python — the numpy batch
-        # path restates only the StandardAnalyzer family, so every row
-        # takes the per-doc reference path (analysis/custom.py)
-        return _invert_exact(doc_ids, arr, analyzer, with_pos,
-                             with_off, payload)
-    rx = _fallback_re()
-    fb = np.fromiter((rx.search(t) is not None for t in arr),
-                     dtype=bool, count=len(arr))
-    parts = []
-    if not fb.all():
-        parts.append(_invert_vec(doc_ids[~fb], arr[~fb], analyzer, with_pos,
-                                 with_off, payload))
-    if fb.any():
-        parts.append(_invert_exact(doc_ids[fb], arr[fb], analyzer, with_pos,
-                                   with_off, payload))
-    parts = [p for p in parts if p is not None]
-    if not parts:
-        return None
-    if len(parts) == 1:
-        return parts[0]
-    out = {k: np.concatenate([p[k] for p in parts])
-           for k in ("doc_id", "term", "freq", "norm")}
-    if with_pos:
-        out["pos_blob"] = parts[0]["pos_blob"] + parts[1]["pos_blob"]
-    if with_off:
-        out["off_blob"] = parts[0]["off_blob"] + parts[1]["off_blob"]
-    if payload is not None:
-        out["pay_blob"] = parts[0]["pay_blob"] + parts[1]["pay_blob"]
-    return out
+    if delimited or not getattr(analyzer, "batch_vectorizable", True):
+        # CustomAnalyzer chains are arbitrary Python — the vectorized
+        # front restates only the StandardAnalyzer family
+        per_doc = np.ones(len(arr), dtype=bool)
+    else:
+        rx = _fallback_re()
+        per_doc = np.fromiter((rx.search(t) is not None for t in arr),
+                              dtype=bool, count=len(arr))
+    streams = (_tokens_vec(np.flatnonzero(~per_doc), arr[~per_doc],
+                           analyzer, with_off),
+               _tokens_per_doc(np.flatnonzero(per_doc), arr[per_doc],
+                               analyzer, with_off, delimited))
+    return _encode_stream(doc_ids, streams, with_pos, with_off, payload)
+
+
+def _invert_exact(doc_ids, arr, analyzer: StandardAnalyzer, with_pos: bool,
+                  with_off: bool = False, payload=None):
+    """The all-rows per-doc reference: every row through the per-doc
+    front, then the one back end."""
+    stream = _tokens_per_doc(np.arange(len(arr)), arr, analyzer, with_off,
+                             payload == "delimited")
+    return _encode_stream(doc_ids, (stream,), with_pos, with_off, payload)
 
 
 def _vocab_map(uniq, analyzer: StandardAnalyzer):
@@ -223,38 +218,32 @@ def _vocab_map(uniq, analyzer: StandardAnalyzer):
     return keep, mapped
 
 
-def _invert_vec(doc_ids, arr, analyzer: StandardAnalyzer, with_pos: bool,
-                with_off: bool = False, payload=None):
-    """Batch inversion of fallback-free rows (the web-text fast path).
-    Offsets mode swaps findall for finditer (same C regex engine) to
-    carry each token's (start, end) — fallback-free rows lowercase 1:1,
-    so offsets on the lowered text index the original exactly."""
+def _tokens_vec(rows, arr, analyzer: StandardAnalyzer, with_off: bool):
+    """Vectorized front for fallback-free rows (the web-text fast path):
+    → token stream dict (row, term, pos[, start, end]) or None.
+
+    Whole-document lowercase FIRST (one C-level str.lower per doc —
+    legal because simple-lowercase is 1:1 and class-preserving on every
+    codepoint outside the fallback set, so tokenize∘lower ≡
+    lower∘tokenize there), one C regex findall per doc, C-level
+    map(len) / set-membership over the flat token stream, the filter
+    chain once per distinct term. Offsets mode swaps findall for
+    finditer (same C regex engine) to carry each token's (start, end):
+    offsets on the lowered text index the original exactly."""
     if len(arr) == 0:
         return None
-    flat_s = flat_e = None
     if with_off:
         spans = [[(m.group(0), m.start(), m.end())
                   for m in _TOKEN_RE.finditer(t.lower())] for t in arr]
         lists = [[x[0] for x in sp] for sp in spans]
-        counts = np.fromiter(map(len, lists), dtype=np.int64,
-                             count=len(lists))
-        total = int(counts.sum())
-        if total == 0:
-            return None
-        flat = [x[0] for sp in spans for x in sp]
-        flat_s = np.fromiter((x[1] for sp in spans for x in sp),
-                             dtype=np.int64, count=total)
-        flat_e = np.fromiter((x[2] for sp in spans for x in sp),
-                             dtype=np.int64, count=total)
     else:
         findall = _TOKEN_RE.findall
         lists = [findall(t.lower()) for t in arr]
-        counts = np.fromiter(map(len, lists), dtype=np.int64,
-                             count=len(lists))
-        total = int(counts.sum())
-        if total == 0:
-            return None
-        flat = list(chain.from_iterable(lists))
+    counts = np.fromiter(map(len, lists), dtype=np.int64, count=len(lists))
+    total = int(counts.sum())
+    if total == 0:
+        return None
+    flat = list(chain.from_iterable(lists))
     local = np.repeat(np.arange(len(arr), dtype=np.int64), counts)
     cum0 = np.zeros(len(arr), dtype=np.int64)
     np.cumsum(counts[:-1], out=cum0[1:])
@@ -278,117 +267,111 @@ def _invert_vec(doc_ids, arr, analyzer: StandardAnalyzer, with_pos: bool,
                                 dtype=bool, count=total)
     if not keep.any():
         return None
-    did_k = local[keep]
-    term_k = flat[keep]
-    pos_k = pos[keep]
+    out = {"row": rows[local[keep]], "term": flat[keep], "pos": pos[keep]}
     if with_off:
-        s_k, e_k = flat_s[keep], flat_e[keep]
-    if payload is not None:
-        pay_k = _payload_values(term_k, pos_k, payload)
+        for k, i in (("start", 1), ("end", 2)):
+            out[k] = np.fromiter((x[i] for sp in spans for x in sp),
+                                 dtype=np.int64, count=total)[keep]
+    return out
 
-    dl = np.bincount(did_k, minlength=len(arr))
+
+def _tokens_per_doc(rows, arr, analyzer: StandardAnalyzer, with_off: bool,
+                    delimited: bool):
+    """Per-doc front: the analyzer's own per-document surface
+    (``term_occurrences`` with offsets, ``term_positions_payloads`` for
+    delimited payloads, else ``term_positions``) → token stream dict
+    (row, term, pos[, start, end][, pay]) or None. Each (doc, term)
+    run keeps the analyzer's occurrence order."""
+    row, term, pos, start, end, pay = [], [], [], [], [], []
+    for r, text in zip(rows.tolist(), arr):
+        text = text or ""
+        if with_off:
+            occ = analyzer.term_occurrences(text)
+            tp = {t: [o[0] for o in v] for t, v in occ.items()}
+            for v in occ.values():
+                start += [o[1] for o in v]
+                end += [o[2] for o in v]
+        elif delimited:
+            tp, doc_pay = analyzer.term_positions_payloads(text)
+            for t in tp:
+                pay += doc_pay[t]
+        else:
+            tp = analyzer.term_positions(text)
+        for t, ps in tp.items():
+            row += [r] * len(ps)
+            term += [t] * len(ps)
+            pos += ps
+    if not row:
+        return None
+    out = {"row": np.asarray(row, dtype=np.int64),
+           "term": np.asarray(term, dtype=object),
+           "pos": np.asarray(pos, dtype=np.int64)}
+    if with_off:
+        out["start"] = np.asarray(start, dtype=np.int64)
+        out["end"] = np.asarray(end, dtype=np.int64)
+    if delimited:
+        out["pay"] = np.asarray(pay, dtype=np.int64)
+    return out
+
+
+def _encode_stream(doc_ids, streams, with_pos: bool, with_off: bool,
+                   payload):
+    """The one back end of inversion (FreqProxTermsWriter's per-doc
+    flush): joined token streams → RAW rows. Norm bytes from one
+    bincount of tokens per row, payloads from :func:`_payload_values`
+    (or the stream's own, for "delimited"), one stable (row, term) sort
+    into runs, and each channel VByte-encoded in one
+    ``codec.vbyte_encode_batch`` pass sliced per run: positions and
+    offset starts Δ-coded within their run (first value absolute),
+    offsets interleaved [Δstart, length], payloads undeltaed."""
+    streams = [s for s in streams if s is not None]
+    if not streams:
+        return None
+    tok = (streams[0] if len(streams) == 1 else
+           {k: np.concatenate([s[k] for s in streams]) for k in streams[0]})
+    row, pos = tok["row"], tok["pos"]
+    dl = np.bincount(row, minlength=len(doc_ids))
     nb = _NORM_LUT[np.minimum(dl, len(_NORM_LUT) - 1)].astype(np.int64)
     big = dl >= len(_NORM_LUT)
     if big.any():
         nb[big] = int_to_byte4(dl[big])
 
-    codes, uniq = pd.factorize(term_k)
-    order = np.lexsort((codes, did_k))   # stable: positions stay ascending
-    d_s, c_s, p_s = did_k[order], codes[order], pos_k[order]
-    change = np.r_[True, (d_s[1:] != d_s[:-1]) | (c_s[1:] != c_s[:-1])]
+    codes, uniq = pd.factorize(tok["term"])
+    order = np.lexsort((codes, row))   # stable: runs keep stream order
+    r_s, c_s = row[order], codes[order]
+    change = np.r_[True, (r_s[1:] != r_s[:-1]) | (c_s[1:] != c_s[:-1])]
     run_starts = np.flatnonzero(change)
-    run_ends = np.r_[run_starts[1:], len(d_s)]
+    run_ends = np.r_[run_starts[1:], len(r_s)]
     out = {
-        "doc_id": np.asarray(doc_ids)[d_s[run_starts]],
+        "doc_id": np.asarray(doc_ids)[r_s[run_starts]],
         "term": np.asarray(uniq, dtype=object)[c_s[run_starts]],
         "freq": (run_ends - run_starts).astype(np.int32),
-        "norm": nb[d_s[run_starts]].astype(np.int32),
+        "norm": nb[r_s[run_starts]].astype(np.int32),
     }
+
+    def run_delta(v):
+        d = v.copy()
+        d[1:] = v[1:] - v[:-1]
+        d[run_starts] = v[run_starts]
+        return d
+
+    def run_blobs(values, width=1):
+        buf, off = codec.vbyte_encode_batch(values)
+        return [buf[off[width * s]:off[width * e]].tobytes()
+                for s, e in zip(run_starts, run_ends)]
+
     if with_pos:
-        delta = p_s.copy()
-        delta[1:] = p_s[1:] - p_s[:-1]
-        delta[run_starts] = p_s[run_starts]
-        buf, off = codec.vbyte_encode_batch(delta)
-        out["pos_blob"] = [buf[off[s]:off[e]].tobytes()
-                           for s, e in zip(run_starts, run_ends)]
+        out["pos_blob"] = run_blobs(run_delta(pos[order]))
     if with_off:
-        # interleaved [Δstart, length] per occurrence; Δstart resets per
-        # (doc, term) run (first value absolute), mirroring pos streams
-        s_s, e_s = s_k[order], e_k[order]
-        ds = s_s.copy()
-        ds[1:] = s_s[1:] - s_s[:-1]
-        ds[run_starts] = s_s[run_starts]
+        s_s, e_s = tok["start"][order], tok["end"][order]
         inter = np.empty(2 * len(s_s), dtype=np.int64)
-        inter[0::2] = ds
+        inter[0::2] = run_delta(s_s)
         inter[1::2] = e_s - s_s
-        obuf, ooff = codec.vbyte_encode_batch(inter)
-        out["off_blob"] = [obuf[ooff[2 * s]:ooff[2 * e]].tobytes()
-                           for s, e in zip(run_starts, run_ends)]
+        out["off_blob"] = run_blobs(inter, 2)
     if payload is not None:
-        # payload channel parallel to positions: one VByte value per
-        # occurrence, NO delta (payloads are not monotone)
-        pay_s = pay_k[order]
-        pbuf, pyo = codec.vbyte_encode_batch(pay_s)
-        out["pay_blob"] = [pbuf[pyo[s]:pyo[e]].tobytes()
-                           for s, e in zip(run_starts, run_ends)]
-    return out
-
-
-def _invert_exact(doc_ids, arr, analyzer: StandardAnalyzer, with_pos: bool,
-                  with_off: bool = False, payload=None):
-    """Per-doc reference path for rows the batch path can't handle
-    (mixed CJK scripts / exceptional lowercase)."""
-    rows_doc, rows_term, rows_freq, rows_norm = [], [], [], []
-    rows_pos, rows_off, rows_pay = [], [], []
-    delimited = payload == "delimited"
-    for did, text in zip(np.asarray(doc_ids), arr):
-        doc_pay = None
-        if with_off:
-            occ = analyzer.term_occurrences(text or "")
-            tp = {t: [p for p, _, _ in v] for t, v in occ.items()}
-        elif delimited:
-            tp, doc_pay = analyzer.term_positions_payloads(text or "")
-        else:
-            tp = analyzer.term_positions(text or "")
-        if not tp:
-            continue
-        dl = sum(len(v) for v in tp.values())
-        nbyte = (int(_NORM_LUT[dl]) if dl < len(_NORM_LUT)
-                 else int(int_to_byte4(np.array([dl]))[0]))
-        for term, ps in tp.items():
-            rows_doc.append(did)
-            rows_term.append(term)
-            rows_freq.append(len(ps))
-            rows_norm.append(nbyte)
-            if with_pos:
-                rows_pos.append(codec.vbyte_encode(np.diff(ps, prepend=0)))
-            if with_off:
-                inter = []
-                prev = 0
-                for _, st, en in occ[term]:
-                    inter.append(st - prev)
-                    inter.append(en - st)
-                    prev = st
-                rows_off.append(codec.vbyte_encode(inter))
-            if payload is not None:
-                vals = (doc_pay[term] if delimited else _payload_values(
-                    np.asarray([term] * len(ps), dtype=object),
-                    np.asarray(ps, dtype=np.int64), payload))
-                rows_pay.append(codec.vbyte_encode(vals))
-    if not rows_doc:
-        return None
-    out = {
-        "doc_id": np.asarray(rows_doc, dtype=np.int64),
-        "term": np.asarray(rows_term, dtype=object),
-        "freq": np.asarray(rows_freq, dtype=np.int32),
-        "norm": np.asarray(rows_norm, dtype=np.int32),
-    }
-    if with_pos:
-        out["pos_blob"] = rows_pos
-    if with_off:
-        out["off_blob"] = rows_off
-    if payload is not None:
-        out["pay_blob"] = rows_pay
+        pay = (tok["pay"] if payload == "delimited"
+               else _payload_values(tok["term"], pos, payload))
+        out["pay_blob"] = run_blobs(pay[order])
     return out
 
 
@@ -537,7 +520,7 @@ class IndexBuilder:
         payload = self.payload
 
         def invert_batches(batches):
-            for pdf in batches:
+            for pdf in _rebatch(batches):
                 dids = pdf[doc_id_col].to_numpy()
                 frames = []
                 for fld in flds:
@@ -583,43 +566,8 @@ class IndexBuilder:
     def build(self, spark: SparkSession, docs: DataFrame,
               doc_id_col="doc_id", text_col: str | None = None,
               fields: tuple | None = None) -> InvertedIndex:
-        # Decouple invert parallelism from the input's file layout: a 1 GB
-        # corpus in ~30 MB files coalesces to <10 scan partitions under
-        # maxPartitionBytes, which would serialize the (Python-bound)
-        # analyzer stage. Round-robin repartition = the DWPT work-queue
-        # analog; index content is order-independent, so this is safe.
-        flds = self._resolve_fields(text_col, fields)
-        # Bigger Arrow batches for the build: the vectorized invert/pack
-        # kernels amortize per-batch fixed costs (regex setup, factorize,
-        # buffer concat) — 10k-row default batches are too fine-grained
-        # for posting-row streams. 50k docs ≈ 30 MB of web text per batch.
-        # The session value is RESTORED in the finally below (ADVICE r2:
-        # never leak config onto unrelated jobs); the invert stage — the
-        # expensive Python one — materializes inside this scope, so it
-        # gets the wide batches; the lazy pack stage runs under the
-        # caller's own setting.
-        prev_batch = None
-        try:
-            prev_batch = spark.conf.get(
-                "spark.sql.execution.arrow.maxRecordsPerBatch")
-            if int(prev_batch) < 50000:
-                spark.conf.set(
-                    "spark.sql.execution.arrow.maxRecordsPerBatch", "50000")
-            else:
-                prev_batch = None    # nothing changed, nothing to restore
-        except Exception:
-            prev_batch = None
-        try:
-            return self._build_inner(spark, docs, doc_id_col, flds)
-        finally:
-            if prev_batch is not None:
-                spark.conf.set(
-                    "spark.sql.execution.arrow.maxRecordsPerBatch",
-                    prev_batch)
-
-    def _build_inner(self, spark: SparkSession, docs: DataFrame,
-                     doc_id_col, flds) -> InvertedIndex:
         import time as _time
+        flds = self._resolve_fields(text_col, fields)
         timings = {}
         t0 = _time.perf_counter()
         n_inv = _shuffle_n(spark)
@@ -745,18 +693,18 @@ def pack_postings(raw: DataFrame, grid: int, flags: tuple,
             .mapInPandas(pack, schema=POSTINGS_SCHEMA))
 
 
-_PACK_MIN_ROWS = 50_000
+_MIN_BATCH_ROWS = 50_000
 
 
-def _rebatch(batches, min_rows: int = _PACK_MIN_ROWS):
+def _rebatch(batches, min_rows: int = _MIN_BATCH_ROWS):
     """Coalesce small Arrow batches to >= min_rows before processing.
 
-    The pack kernel's per-batch fixed costs (concat, numpy run
-    detection, buffer setup) want wide batches, but the stage is LAZY —
-    it may materialize after build() has restored the caller's
-    spark.sql.execution.arrow.maxRecordsPerBatch (often the 10k
-    default). Re-batching inside the iterator makes pack throughput
-    independent of the session's Arrow batch setting entirely."""
+    Both Python stages of the build, invert and pack, have per-batch
+    fixed costs (regex setup, factorize, concat, numpy run detection,
+    buffer setup) that want wide batches — 50k docs ≈ 30 MB of web
+    text. Re-batching inside the iterator makes both independent of the
+    session's Arrow batch setting, whenever the lazy stage runs, without
+    touching the session's conf."""
     hold, n = [], 0
     for pdf in batches:
         if len(pdf) == 0:
@@ -885,20 +833,10 @@ def _pack_frame(pdf: pd.DataFrame, grid: int, with_pos: bool,
             sf, sn = skyline(freqs[s:e], norms_u8[s:e])
             imp_f.append(sf.astype(np.int32).tolist())
             imp_n.append(sn.astype(np.int32).tolist())
-        if with_pos:
-            # bytes.join accepts any bytes-like element (bytes/bytearray/
-            # memoryview) — no per-element copy
-            pos_blobs.append(b"".join(poss[s:e]))
-        else:
-            pos_blobs.append(None)
-        if with_off:
-            off_blobs.append(b"".join(offs[s:e]))
-        else:
-            off_blobs.append(None)
-        if with_pay:
-            pay_blobs.append(b"".join(pays[s:e]))
-        else:
-            pay_blobs.append(None)
+        # a block's channel blob is its postings' per-run streams joined
+        pos_blobs.append(b"".join(poss[s:e]) if with_pos else None)
+        off_blobs.append(b"".join(offs[s:e]) if with_off else None)
+        pay_blobs.append(b"".join(pays[s:e]) if with_pay else None)
 
     return pd.DataFrame({
         "field": pd.Series(fields_arr[b_start], dtype="object"),

@@ -125,3 +125,67 @@ def test_invert_batch_path_equals_per_doc_path():
                           ENGLISH_ANALYZER, True, with_off=True,
                           payload="position")
     assert rows(batch) == rows(exact)
+
+
+MIXED_TEXTS = pd.Series([
+    "The quick brown fox jumps over the lazy dog; the fox ran.",
+    "東京タワー is tall, 東京 is big",
+    "Spark SQL and Spark streaming: spark's tables.",
+    "数据 data analysis 数据 data",
+    "",
+    None,
+    "ΣΟΦΙΑΣ and İstanbul: text, more text and text"])
+
+
+def test_raw_rows_decode_to_analyzer_occurrences():
+    """A check of the raw-row writer that does not use its encoder: every
+    row's position, offset and payload streams, decoded by hand, equal
+    ``term_occurrences`` of its doc; payload = position + 1 and norm =
+    ``int_to_byte4(dl)``."""
+    import numpy as np
+    from lucene_solr_spark.functions import codec
+    from lucene_solr_spark.functions.smallfloat import int_to_byte4
+    from lucene_solr_spark.index.builder import (_fallback_re,
+                                                 invert_field_arrays)
+    ids = np.arange(100, 100 + len(MIXED_TEXTS), dtype=np.int64)
+    fb = [bool(_fallback_re().search(t or "")) for t in MIXED_TEXTS]
+    assert any(fb) and not all(fb), "both inversion fronts must run"
+    want = {}
+    for d, text in zip(ids, MIXED_TEXTS):
+        occ = ENGLISH_ANALYZER.term_occurrences(text or "")
+        norm = int(int_to_byte4(sum(len(v) for v in occ.values())))
+        for term, v in occ.items():
+            want[(int(d), term)] = (v, norm)
+
+    out = invert_field_arrays(ids, MIXED_TEXTS, ENGLISH_ANALYZER, True,
+                              with_off=True, payload="position")
+    got = {}
+    for i, (d, term) in enumerate(zip(out["doc_id"], out["term"])):
+        f = int(out["freq"][i])
+        blobs = [out[c][i] for c in ("pos_blob", "off_blob", "pay_blob")]
+        # each stream holds exactly its values: one terminator byte each
+        assert [sum(b < 0x80 for b in x) for x in blobs] == [f, 2 * f, f]
+        pos = np.cumsum(codec.vbyte_decode(blobs[0], f))
+        off = codec.vbyte_decode(blobs[1], 2 * f)
+        start = np.cumsum(off[0::2])
+        end = start + off[1::2]
+        assert codec.vbyte_decode(blobs[2], f).tolist() == (pos + 1).tolist()
+        got[(int(d), term)] = (
+            list(zip(pos.tolist(), start.tolist(), end.tolist())),
+            int(out["norm"][i]))
+    assert got == want
+
+
+def test_negative_payload_raises_on_both_fronts():
+    """A negative callable payload cannot be VByte-stored: the one back
+    end raises for plain rows (vectorized front) and CJK rows (per-doc
+    front) alike."""
+    import numpy as np
+    import pytest
+    from lucene_solr_spark.index.builder import invert_field_arrays
+    for texts in (["plain english words here", "more plain text"],
+                  ["東京タワー", "数据 分析"]):
+        with pytest.raises(ValueError, match="non-negative"):
+            invert_field_arrays(np.arange(len(texts)), pd.Series(texts),
+                                ENGLISH_ANALYZER, True,
+                                payload=lambda t, p: -1)

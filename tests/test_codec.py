@@ -12,6 +12,7 @@ import pytest
 from lucene_solr_spark.functions.codec import (
     BLOCK_SIZE, decode_block, decode_block_payloads, encode_block_payloads,
     encode_for, encode_pfor, encode_vbyte_tail, vbyte_decode, vbyte_encode,
+    vbyte_encode_batch,
 )
 from lucene_solr_spark.functions.impacts import dominates, skyline
 
@@ -22,6 +23,16 @@ rng = np.random.default_rng(42)
 def test_vbyte_roundtrip():
     vals = np.array([0, 1, 127, 128, 129, 16383, 16384, 2**31 - 1, 2**40])
     assert np.array_equal(vbyte_decode(vbyte_encode(vals), len(vals)), vals)
+    buf, off = vbyte_encode_batch(vals)
+    assert buf.tobytes() == vbyte_encode(vals)
+    assert [buf[off[i]:off[i + 1]].tobytes() for i in range(len(vals))] == \
+        [vbyte_encode([v]) for v in vals]
+
+
+def test_vbyte_encode_batch_rejects_negative():
+    for enc in (vbyte_encode, vbyte_encode_batch):
+        with pytest.raises(ValueError, match="non-negative"):
+            enc(np.array([-5, 7]))
 
 
 @pytest.mark.parametrize("dist", ["all1", "zipf", "maxint", "mixed"])
@@ -86,3 +97,60 @@ def test_skyline_properties():
         # every skyline point is an actual point
         pts = set(zip(f.tolist(), (n & 0xFF).tolist()))
         assert all((a, b) in pts for a, b in zip(sf.tolist(), sn.tolist()))
+
+
+def test_pack_partition_blocks_match_reference():
+    """The block writer against its references: every block's doc and
+    freq blobs equal ``encode_block_payloads`` at the packer's base
+    (block_id - 1), its impacts equal ``skyline`` (the pure-Python sweep
+    for <= 8 postings included), and ``decode_blocks`` returns the input
+    postings and positions. Runs of 1..300 postings over two grid cells."""
+    import pandas as pd
+    from lucene_solr_spark.index.builder import decode_blocks, pack_partition
+    grid = 1000
+    runs = [(0, "a", 1), (0, "b", 8), (0, "c", 128), (0, "d", 300),
+            (1, "a", 2), (1, "b", 9), (1, "c", 127), (1, "e", 129)]
+    r = np.random.default_rng(7)
+    cols = {k: [] for k in ("doc_id", "term", "freq", "norm", "bucket")}
+    pos_lists = []
+    for cell, term, n in runs:
+        if (cell, term) == (0, "c"):     # constant block: Δ=1, freq=1
+            docs, freqs = np.arange(5, 5 + n), np.ones(n, dtype=np.int64)
+        else:
+            docs = np.sort(r.choice(grid, n, replace=False))
+            freqs = r.integers(1, 6, n)
+        cols["doc_id"] += (cell * grid + docs).tolist()
+        cols["freq"] += freqs.tolist()
+        cols["norm"] += r.integers(0, 12, n).tolist()
+        cols["term"] += [term] * n
+        cols["bucket"] += [cell] * n
+        pos_lists += [np.sort(r.choice(400, f, replace=False)) for f in freqs]
+    frame = pd.DataFrame(cols).assign(
+        field="text",
+        pos_blob=[vbyte_encode(np.diff(p, prepend=0)) for p in pos_lists],
+        off_blob=None, pay_blob=None)
+
+    blocks = pd.concat(list(pack_partition([frame], grid, True)),
+                       ignore_index=True)
+    want_sizes = [n2 for _, _, n in runs
+                  for n2 in [BLOCK_SIZE] * (n // BLOCK_SIZE)
+                  + ([n % BLOCK_SIZE] if n % BLOCK_SIZE else [])]
+    assert blocks["doc_count"].tolist() == want_sizes
+    start = 0
+    for row in blocks.itertuples():
+        sl = slice(start, start + row.doc_count)
+        docs = np.asarray(cols["doc_id"][sl])
+        freqs = np.asarray(cols["freq"][sl])
+        assert (row.block_id, row.last_doc) == (docs[0], docs[-1])
+        assert (row.doc_blob, row.freq_blob) == encode_block_payloads(
+            docs, freqs, row.block_id - 1)
+        sf, sn = skyline(freqs, np.asarray(cols["norm"][sl]))
+        assert (list(row.imp_freqs), list(row.imp_norms)) == \
+            (sf.tolist(), sn.tolist())
+        start += row.doc_count
+    assert start == len(frame)
+
+    got = decode_blocks(blocks.to_dict("records"), ("pos",))
+    for k, col in (("doc", "doc_id"), ("freq", "freq"), ("norm", "norm")):
+        np.testing.assert_array_equal(got[k], cols[col])
+    np.testing.assert_array_equal(got["pos"], np.concatenate(pos_lists))

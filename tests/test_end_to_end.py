@@ -189,3 +189,22 @@ def test_count_matches_oracle(searcher, corpus):
     _, oracle, _ = corpus
     t = _top_terms(oracle, 1)[0]
     assert searcher.count(TermQuery(t)) == oracle.df(t)
+
+
+def test_invert_rows_independent_of_arrow_batch_size(spark):
+    """The raw rows of ``IndexBuilder.invert`` do not depend on the
+    session's Arrow batch size: the invert stage coalesces its input
+    batches itself."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    builder = IndexBuilder(ENGLISH_ANALYZER, with_offsets=True,
+                           payload="position")
+    prev = spark.conf.get(key)
+    got = {}
+    try:
+        for n in (7, 10000):
+            spark.conf.set(key, str(n))
+            got[n] = sorted(tuple(r) for r in builder.invert(docs).collect())
+    finally:
+        spark.conf.set(key, prev)
+    assert got[7] and got[7] == got[10000]

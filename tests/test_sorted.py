@@ -132,29 +132,34 @@ def test_compound_sort_topk(spark, searcher, sdv2):
 
 
 def test_compound_cursor_pages_cover_everything(spark, searcher, sdv2):
-    matches = searcher.match_docs(TermQuery("merge"))
-    want = {r["doc_id"] for r in matches.collect()}
-    full = (spark.read.parquet(f"{SF_DIR}/documents.parquet")
-            .select("doc_id", "lang", "n_chars").collect())
-    rows = sorted((r["lang"], -r["n_chars"], r["doc_id"]) for r in full
-                  if r["doc_id"] in want)
-    exp_order = [(a, -bneg, d) for a, bneg, d in rows]
-    pages, after = [], None
-    while True:
-        page = (sdv2.topk(matches, 5, ascending=[True, False])
-                if after is None else
-                sdv2.topk_after(matches, 5, after,
-                                ascending=[True, False]))
-        got = [(r["lang"], r["n_chars"], r["doc_id"])
-               for r in page.collect()]
-        if not got:
-            break
-        pages.extend(got)
-        after = got[-1]
-        if len(got) < 5:
-            break
-    assert pages == exp_order
-    with pytest.raises(ValueError, match="after tuple"):
-        sdv2.topk_after(matches, 5, ("en", 1))
-    with pytest.raises(ValueError, match="directions"):
-        sdv2.topk(matches, 5, ascending=[True])
+    # the match set is computed once: every page reads the cached docs
+    # instead of re-running the query kernel
+    matches = searcher.match_docs(TermQuery("merge")).cache()
+    try:
+        want = {r["doc_id"] for r in matches.collect()}
+        full = (spark.read.parquet(f"{SF_DIR}/documents.parquet")
+                .select("doc_id", "lang", "n_chars").collect())
+        rows = sorted((r["lang"], -r["n_chars"], r["doc_id"]) for r in full
+                      if r["doc_id"] in want)
+        exp_order = [(a, -bneg, d) for a, bneg, d in rows]
+        pages, after = [], None
+        while True:
+            page = (sdv2.topk(matches, 5, ascending=[True, False])
+                    if after is None else
+                    sdv2.topk_after(matches, 5, after,
+                                    ascending=[True, False]))
+            got = [(r["lang"], r["n_chars"], r["doc_id"])
+                   for r in page.collect()]
+            if not got:
+                break
+            pages.extend(got)
+            after = got[-1]
+            if len(got) < 5:
+                break
+        assert pages == exp_order
+        with pytest.raises(ValueError, match="after tuple"):
+            sdv2.topk_after(matches, 5, ("en", 1))
+        with pytest.raises(ValueError, match="directions"):
+            sdv2.topk(matches, 5, ascending=[True])
+    finally:
+        matches.unpersist()
