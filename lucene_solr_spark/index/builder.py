@@ -436,8 +436,12 @@ class InvertedIndex:
 
     def release(self) -> None:
         """Unpersist every DataFrame this index pinned (builder's raw
-        postings + any cached tables) — for multi-build sessions."""
-        for df in (self.raw, self.postings, self.terms, self.norms):
+        postings, any cached tables, the persisted tombstone frames) —
+        for multi-build sessions. An index derived from this one shares
+        these frames and still reads correctly: it recomputes them from
+        lineage."""
+        for df in (self.raw, self.postings, self.terms, self.norms,
+                   self.deletes, self.del_table):
             if df is not None:
                 try:
                     df.unpersist()

@@ -188,6 +188,7 @@ def expunge_deletes(spark: SparkSession, idx: InvertedIndex,
             retained = retained.join(hard, "doc_id", "left_anti")
         retained = retained.persist()
         if retained.limit(1).count() == 0:
+            retained.unpersist()
             retained = None
         else:
             dels = _union(hard, soft.join(retained, "doc_id", "left_anti"))

@@ -607,9 +607,14 @@ def _rewrite_once(q):
             if c.occur in (Occur.MUST, Occur.FILTER):
                 return MatchNoQuery()
             continue  # SHOULD/MUST_NOT MatchNo drops out
-        if isinstance(sub, MatchAllQuery) and c.occur == Occur.FILTER:
-            continue  # FILTER ∧ MatchAll elimination (when others exist)
         clauses.append(Clause(c.occur, sub))
+    # FILTER ∧ MatchAll elimination, only while another MUST or FILTER
+    # clause remains (BooleanQuery.rewrite): alone it is the match set
+    def all_filter(c):
+        return c.occur == Occur.FILTER and isinstance(c.query, MatchAllQuery)
+    if any(c.occur in (Occur.MUST, Occur.FILTER) and not all_filter(c)
+           for c in clauses):
+        clauses = [c for c in clauses if not all_filter(c)]
 
     # dedup FILTER / MUST_NOT
     seen = set()

@@ -61,6 +61,12 @@ root. The kernel emits per-PARTITION top-k heaps flushed once at
 iterator exhaustion, so the driver merge reads at most
 partitions × k rows per query.
 
+What the key-filtered kernel cannot scan alone — a MatchAll root, an
+ungrounded root (pure negation), a FieldExistsQuery at any depth —
+takes the one other route, `Searcher._compose`: BooleanWeight's clause
+rule as one groupBy over clause doc sets, every scannable clause scored
+in one kernel job.
+
 Scoring modes:
   f32 — Lucene-exact float32 (BM25Similarity.java:222-235 order of ops)
   f64 — double precision on decoded lengths, for DuckDB-oracle parity
@@ -75,6 +81,7 @@ from __future__ import annotations
 
 import heapq
 import math
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -310,26 +317,15 @@ class Searcher:
     # plan: AST → tree plan (or a DataFrame composition)
     # ------------------------------------------------------------------
     def _plan(self, query):
-        """→ None, "ALL", {"tree"}, {"unbounded"} or {"exists"}."""
+        """→ None (matches nothing), {"tree": …} for a grounded tree the
+        kernel scans alone, or {"compose": query} for everything else —
+        a root MatchAll, an ungrounded root (pure negation) or a
+        FieldExistsQuery at any depth, composed by :meth:`_compose`."""
         query = rewrite(self.expand_multiterm(rewrite(query)))
-        ex = _split_exists(query)
-        if ex is not None:
-            return {"exists": ex}
-        plan = flatten_plan(query)
-        if isinstance(plan, dict) and not tree_grounded(plan["tree"]):
-            # the kernel scans only the plan's term blocks; an
-            # unanchored match set (pure negation at the root) needs
-            # the all-docs composition instead
-            ub = unbounded_parts(query)
-            if ub is None:
-                raise ValueError(
-                    "unbounded query: the match set is not anchored by "
-                    "any positive clause and is not a top-level "
-                    "pure-negation union — add a grounding clause "
-                    "(Solr's fix-up handles exactly the same top-level "
-                    "shapes)")
-            return {"unbounded": ub}
-        return plan
+        if isinstance(query, MatchNoQuery):
+            return None
+        plan = _scan_plan(query)
+        return {"compose": query} if plan is None else plan
 
     # ------------------------------------------------------------------
     def _stat_env(self, all_keys):
@@ -458,22 +454,14 @@ class Searcher:
     # ------------------------------------------------------------------
     def _dispatch(self, query, mode, k, prune, collect_all):
         """The one routing step shared by top_k, top_k_many and score_all:
-        → None (matches nothing), a (doc_id, score) DataFrame for the
-        compositions the kernel does not scan (MatchAll, unbounded,
-        exists), or (spec, live_keys) for the kernel."""
+        → None (matches nothing), the (doc_id, score) DataFrame of
+        :meth:`_compose` for a "compose" plan, or (spec, live_keys) for
+        the kernel."""
         plan = self._plan(query)
         if plan is None:
             return None
-        if plan == "ALL":
-            # MatchAllDocsQuery: every doc with at least one indexed term,
-            # constant score 1 (ConstantScore semantics); tombstoned docs
-            # excluded (liveDocs)
-            return (self._all_live_docs()
-                    .select("doc_id", F.lit(1.0).alias("score")))
-        if "unbounded" in plan:
-            return self._score_unbounded(plan["unbounded"])
-        if "exists" in plan:
-            return self._score_exists(plan["exists"])
+        if "compose" in plan:
+            return self._compose(plan["compose"])
         spec, live, dead = self._spec_for_plan(plan, mode, k, prune,
                                                collect_all)
         return None if dead else (spec, live)
@@ -529,138 +517,76 @@ class Searcher:
         return self.index.drop_deleted(
             self.index.norms.select("doc_id").distinct())
 
-    def _field_exists_docs(self, fld: str) -> DataFrame:
-        """doc_ids with ≥1 indexed token in ``fld`` — one row per
-        (field, doc) in the norms table, so no distinct needed."""
-        return self.index.norms.filter(F.col("field") == fld) \
-                               .select("doc_id")
+    def _compose(self, query) -> DataFrame:
+        """(doc_id, f64 score) of a "compose" plan: BooleanWeight's rule
+        (Boolean2ScorerSupplier.java:100-127) over clause doc sets.
 
-    def _score_exists(self, ex) -> DataFrame:
-        """FieldExistsQuery composition: semi-/anti-/left-join the
-        (per-field) norms doc-set onto the scored rest — no collect,
-        one join per exists clause; the joins broadcast or shuffle on
-        doc_id exactly like the tombstone path."""
-        rest = list(ex["rest"])
-        pos_must = [c for c in rest if c.occur in (Occur.MUST, Occur.FILTER)]
-        pos_should = [c for c in rest if c.occur is Occur.SHOULD]
-        negs = [c.query for c in rest if c.occur is Occur.MUST_NOT]
-        anchored = bool(ex["must"]) or bool(pos_must)
-        if ex["should"] and (ex["msm"] > 1
-                             or (anchored and ex["msm"] > 0)):
+        A MatchAll root is the live docs and a FieldExistsQuery root the
+        field's live norms rows, each scoring its boost (ConstantScore
+        semantics). A BooleanQuery root scores every clause the kernel
+        can scan alone in ONE kernel job (query_id → clause index) and
+        composes the others recursively; one groupBy on doc_id then
+        keeps a doc when every MUST/FILTER clause matched, at least msm
+        SHOULD clauses did (at least 1 when nothing is required) and no
+        MUST_NOT clause did. Score = boost × (the MUST scores, then the
+        SHOULD scores) summed in clause order, so the f64 sum is
+        deterministic."""
+        q, boost = _unboost(query)
+        if isinstance(q, MatchAllQuery):
+            return self._all_live_docs().select(
+                "doc_id", F.lit(boost).alias("score"))
+        if isinstance(q, FieldExistsQuery):
+            docs = self.index.drop_deleted(
+                self.index.norms.filter(F.col("field") == q.field)
+                .select("doc_id"))
+            return docs.select("doc_id", F.lit(boost).alias("score"))
+        if not isinstance(q, BooleanQuery):
             raise ValueError(
-                "SHOULD FieldExistsQuery under min_should_match needs "
-                "per-doc SHOULD tallies the kernel does not track — "
-                "rewrite with MUST/FILTER clauses instead")
-        const = sum(b for _, b in ex["must"])
-        if anchored:
-            if pos_must or (pos_should and ex["msm"] > 0):
-                # the kernel's own must/should/msm semantics apply to
-                # the residue; exists clauses then intersect/exclude
-                rest_q = rewrite(BoostQuery(
-                    BooleanQuery(tuple(rest), ex["msm"]), ex["boost"]))
-                df = self.score_all(rest_q, mode="f64")
-            else:
-                # must-exists is the only anchor: SHOULD residue is
-                # optional (BooleanWeight with a MUST present), scored
-                # via left join; MUST_NOT residue excludes the base
-                df = self._all_live_docs().select(
-                    "doc_id", F.lit(0.0).alias("score"))
-                if pos_should:
-                    rq = rewrite(BoostQuery(
-                        BooleanQuery(tuple(pos_should), 0), ex["boost"]))
-                    sdf = (self.score_all(rq, mode="f64")
-                           .withColumnRenamed("score", "_s"))
-                    df = (df.join(sdf, "doc_id", "left")
-                          .select("doc_id",
-                                  (F.col("score")
-                                   + F.coalesce(F.col("_s"), F.lit(0.0)))
-                                  .alias("score")))
-                for nq in negs:
-                    df = df.join(self.match_docs(nq), "doc_id", "left_anti")
-            for fld, _ in ex["must"]:
-                df = df.join(self._field_exists_docs(fld),
-                             "doc_id", "left_semi")
-        else:
-            # pure-SHOULD union (msm ≤ 1): ALL live docs carry the
-            # grounded-should scores and per-field exists flags; a doc
-            # matches when any part does (same frame as
-            # _score_unbounded, one join per part)
-            df = self._all_live_docs()
-            matched = F.lit(False)
-            score = F.lit(0.0)
-            if pos_should:
-                rq = rewrite(BoostQuery(
-                    BooleanQuery(tuple(pos_should), 0), ex["boost"]))
-                sdf = (self.score_all(rq, mode="f64")
-                       .withColumnRenamed("score", "_s"))
-                df = df.join(sdf, "doc_id", "left")
-                score = score + F.coalesce(F.col("_s"), F.lit(0.0))
-                matched = matched | F.col("_s").isNotNull()
-            for i, (fld, b) in enumerate(ex["should"]):
-                edf = (self._field_exists_docs(fld)
-                       .withColumn(f"_e{i}", F.lit(True)))
-                df = df.join(edf, "doc_id", "left")
-                hit = F.coalesce(F.col(f"_e{i}"), F.lit(False))
-                score = score + F.when(hit, F.lit(float(b))) \
-                                 .otherwise(F.lit(0.0))
-                matched = matched | hit
-            df = (df.filter(matched)
-                  .select("doc_id", score.alias("score")))
-            for nq in negs:
-                df = df.join(self.match_docs(nq), "doc_id", "left_anti")
-        # SHOULD exists alongside MUST anchors: optional constant add
-        if anchored:
-            for i, (fld, b) in enumerate(ex["should"]):
-                edf = (self._field_exists_docs(fld)
-                       .withColumn(f"_e{i}", F.lit(True)))
-                df = df.join(edf, "doc_id", "left")
-                df = df.select(
-                    "doc_id",
-                    (F.col("score") + F.when(F.col(f"_e{i}"), F.lit(float(b)))
-                     .otherwise(F.lit(0.0))).alias("score"))
-        for fld in ex["not"]:
-            df = df.join(self._field_exists_docs(fld), "doc_id", "left_anti")
-        if const:
-            df = df.select(
-                "doc_id", (F.col("score") + F.lit(float(const)))
-                .alias("score"))
-        return df
+                "unbounded query: the match set is not anchored by any "
+                "positive clause and is not a boolean composition — add "
+                "a grounding clause")
+        frames, specs, live, spec_clause = [], [], [], []
+        for i, cl in enumerate(q.clauses):
+            plan = _scan_plan(cl.query)
+            if plan is None:
+                frames.append(self._compose(cl.query)
+                              .select(F.lit(i).alias("clause"),
+                                      "doc_id", "score"))
+                continue
+            spec, keys, dead = self._spec_for_plan(plan, "f64", 0, False,
+                                                   collect_all=True)
+            if not dead:
+                specs.append(spec)
+                live.extend(keys)
+                spec_clause.append(i)
+        if specs:
+            clause = F.array(*map(F.lit, spec_clause))[F.col("query_id")]
+            frames.append(self._kernel(specs, live).select(
+                clause.alias("clause"), "doc_id", "score"))
+        df = reduce(DataFrame.unionByName, frames).groupBy("doc_id").agg(
+            *(F.max(F.when(F.col("clause") == i, F.col("score")))
+              .alias(f"c{i}") for i in range(len(q.clauses))))
 
-    def _score_unbounded(self, parts) -> DataFrame:
-        """Pure-negation composition (the shape the kernel cannot scan):
-        ALL live docs, minus each wrapper's excludes, plus grounded
-        SHOULD siblings — one anti-joinable left join per part over the
-        doc_id stream; no collect, scales as ordinary joins.
+        def cols(*occurs):
+            return [F.col(f"c{i}") for i, cl in enumerate(q.clauses)
+                    if cl.occur in occurs]
 
-        Lucene scoring carried exactly: a wrapper contributes its
-        MatchAll boost to every non-excluded doc; a grounded sibling
-        contributes its own score where it matches; a doc matches when
-        ANY part does (msm ≤ 1 — enforced by unbounded_parts)."""
-        from .ast import BooleanQuery, Clause, Occur
-        df = self._all_live_docs()
-        score = F.lit(0.0)
-        matched = F.lit(False)
-        for i, (excl, const) in enumerate(parts["wrappers"]):
-            if excl:
-                exq = (excl[0] if len(excl) == 1 else BooleanQuery(
-                    tuple(Clause(Occur.SHOULD, e) for e in excl)))
-                mdf = (self.match_docs(exq)
-                       .withColumn(f"_x{i}", F.lit(True)))
-                df = df.join(mdf, "doc_id", "left")
-                hit = F.coalesce(F.col(f"_x{i}"), F.lit(False))
-            else:
-                hit = F.lit(False)
-            score = score + F.when(~hit, F.lit(float(const))) \
-                             .otherwise(F.lit(0.0))
-            matched = matched | ~hit
-        for j, g in enumerate(parts["grounded"]):
-            sdf = (self.score_all(g, mode="f64")
-                   .withColumnRenamed("score", f"_s{j}"))
-            df = df.join(sdf, "doc_id", "left")
-            score = score + F.coalesce(F.col(f"_s{j}"), F.lit(0.0))
-            matched = matched | F.col(f"_s{j}").isNotNull()
-        return (df.filter(matched)
-                .select("doc_id", score.alias("score")))
+        required = cols(Occur.MUST, Occur.FILTER)
+        should = cols(Occur.SHOULD)
+        keep = F.lit(True)
+        for c in required:
+            keep &= c.isNotNull()
+        for c in cols(Occur.MUST_NOT):
+            keep &= c.isNull()
+        need = q.min_should_match if required else max(1, q.min_should_match)
+        if need:
+            hits = sum((c.isNotNull().cast("int") for c in should), F.lit(0))
+            keep &= hits >= need
+        score = sum(cols(Occur.MUST)
+                    + [F.coalesce(c, F.lit(0.0)) for c in should],
+                    F.lit(0.0))
+        return df.filter(keep).select(
+            "doc_id", (F.lit(boost) * score).alias("score"))
 
     def match_docs(self, query) -> DataFrame:
         """Just the matching doc_ids (FILTER semantics / ConstantScore)."""
@@ -698,113 +624,37 @@ def flatten_plan(query):
     return {"tree": build_tree(query)}
 
 
-def _split_exists(query):
-    """FieldExistsQuery composition → parts dict, or None when the
-    query has no exists clause.
-
-    Supported envelope (Solr's shapes — fq=field:*, `+field:* +scored`,
-    `field:* OR scored`, `field:* -scored`): standalone/boosted exists,
-    and exists as MUST / FILTER / SHOULD / MUST_NOT clauses of a
-    top-level BooleanQuery. A MUST or matching SHOULD exists clause
-    contributes its constant score (1 × boost) to the sum like
-    Lucene's BooleanWeight; FILTER contributes 0. Outside the
-    envelope (raises): SHOULD exists under min_should_match > 1 or
-    alongside MUST anchors with msm > 0 — per-doc SHOULD tallies
-    would need kernel support."""
+def _unboost(q):
+    """BoostQuery(…BoostQuery(x)) → (x, product of the boosts)."""
     boost = 1.0
-    q = query
     while isinstance(q, BoostQuery):
         boost *= q.boost
         q = q.query
+    return q, float(boost)
+
+
+def _has_exists(q) -> bool:
+    """True when a FieldExistsQuery sits anywhere under ``q`` (only
+    boolean, boost and dismax nodes can hold one)."""
     if isinstance(q, FieldExistsQuery):
-        return {"must": [(q.field, boost)], "not": [], "should": [],
-                "rest": (), "msm": 0, "boost": boost}
-    if not isinstance(q, BooleanQuery):
-        return None
-    must, not_, should, rest = [], [], [], []
-    for cl in q.clauses:
-        inner, bb = cl.query, 1.0
-        while isinstance(inner, BoostQuery):
-            bb *= inner.boost
-            inner = inner.query
-        if not isinstance(inner, FieldExistsQuery):
-            rest.append(cl)
-            continue
-        if cl.occur is Occur.MUST:
-            must.append((inner.field, boost * bb))
-        elif cl.occur is Occur.FILTER:
-            must.append((inner.field, 0.0))
-        elif cl.occur is Occur.MUST_NOT:
-            not_.append(inner.field)
-        else:
-            should.append((inner.field, boost * bb))
-    if not must and not not_ and not should:
-        return None
-    return {"must": must, "not": not_, "should": should,
-            "rest": tuple(rest), "msm": q.min_should_match,
-            "boost": boost}
+        return True
+    if isinstance(q, BoostQuery):
+        return _has_exists(q.query)
+    if isinstance(q, BooleanQuery):
+        return any(_has_exists(c.query) for c in q.clauses)
+    if isinstance(q, DisjunctionMaxQuery):
+        return any(_has_exists(d) for d in q.disjuncts)
+    return False
 
 
-def _wrapper_parts(q):
-    """Canonical pure-negation wrapper — BQ(MUST_NOT x…, SHOULD/MUST
-    MatchAll…) with no other positive clause (the shape
-    SimpleQueryParser emits for NOT, :439-444, and Solr's top-level
-    pure-negative fix-up) → (exclude ASTs, const score) or None."""
-    from .ast import BooleanQuery, BoostQuery, MatchAllQuery, Occur
-    if isinstance(q, MatchAllQuery):
-        return [], 1.0
-    if not isinstance(q, BooleanQuery):
+def _scan_plan(query):
+    """{"tree": …} when the key-filtered kernel can evaluate the
+    rewritten ``query`` alone — its tree is grounded (`tree_grounded`)
+    and holds no MatchAll root or FieldExistsQuery — else None."""
+    if isinstance(_unboost(query)[0], MatchAllQuery) or _has_exists(query):
         return None
-    const, n_all, excl = 0.0, 0, []
-    for cl in q.clauses:
-        inner, bb = cl.query, 1.0
-        while isinstance(inner, BoostQuery):
-            bb *= inner.boost
-            inner = inner.query
-        if isinstance(inner, MatchAllQuery) and cl.occur in (
-                Occur.MUST, Occur.SHOULD, Occur.FILTER):
-            n_all += 1
-            if cl.occur is not Occur.FILTER:
-                const += bb
-        elif cl.occur is Occur.MUST_NOT:
-            excl.append(cl.query)
-        else:
-            return None
-    if n_all == 0 or q.min_should_match > n_all:
-        return None
-    return excl, const
-
-
-def unbounded_parts(query):
-    """Decompose a top-level UNGROUNDED query the kernel cannot scan
-    into DataFrame-composable parts: {"wrappers": [(excludes, const)],
-    "grounded": [ASTs]} for (a) a single negation wrapper or (b) a
-    pure-SHOULD union (msm ≤ 1) mixing wrappers with ordinary grounded
-    children. Returns None for shapes outside this envelope."""
-    from .ast import BooleanQuery, Occur
-    w = _wrapper_parts(query)
-    if w is not None:
-        return {"wrappers": [w], "grounded": []}
-    if not isinstance(query, BooleanQuery) or query.min_should_match > 1:
-        return None
-    wrappers, grounded = [], []
-    for cl in query.clauses:
-        if cl.occur is not Occur.SHOULD:
-            return None
-        w = _wrapper_parts(cl.query)
-        if w is not None:
-            wrappers.append(w)
-            continue
-        try:
-            sub = flatten_plan(cl.query)
-        except ValueError:
-            return None
-        if isinstance(sub, dict) and not tree_grounded(sub["tree"]):
-            return None
-        grounded.append(cl.query)
-    if not wrappers:
-        return None
-    return {"wrappers": wrappers, "grounded": grounded}
+    plan = flatten_plan(query)
+    return plan if tree_grounded(plan["tree"]) else None
 
 
 def _span_op(q):
@@ -1033,10 +883,8 @@ def build_tree(query, boost: float = 1.0):
             # MatchAllDocsQuery scores its boost — ConstantScore
             # semantics). This is the SimpleQueryParser NOT-wrapper
             # shape: BQ(MUST_NOT x, SHOULD MatchAll).
-            inner, bb = cl.query, b
-            while isinstance(inner, BoostQuery):
-                bb *= inner.boost
-                inner = inner.query
+            inner, bb = _unboost(cl.query)
+            bb *= b
             if isinstance(inner, MatchAllQuery):
                 if cl.occur is Occur.MUST:
                     node["all_must"] += 1

@@ -100,13 +100,9 @@ def explain(searcher, query, doc_ids: list[int], mode: str = "f32") -> dict:
     plan = searcher._plan(query)
     if plan is None:
         return out
-    if plan == "ALL":
-        return {d: {"match": True, "value": 1.0,
-                    "details": [{"description": "MatchAllDocsQuery",
-                                 "value": 1.0}]} for d in doc_ids}
-    if "tree" not in plan:
-        # unbounded / exists compositions are DataFrame joins, not a
-        # tree: report the composed score as one summary detail
+    if "compose" in plan:
+        # a composition (MatchAll, pure negation, FieldExistsQuery) is a
+        # DataFrame fold, not a tree: report its score as one detail
         rows = (searcher.score_all(query, mode=mode)
                 .filter(F.col("doc_id").isin(doc_ids)).collect())
         for r in rows:

@@ -167,19 +167,12 @@ def search_after(searcher, query, after_score: float, after_doc: int,
 
 
 def boosted_sum_score_all(searcher, boosts: dict[str, float]) -> DataFrame:
-    """OR over BoostQuery-wrapped terms: score = Σ boost_t * bm25_t.
-    → (doc_id, score)."""
-    from .ast import TermQuery
-    parts = []
-    for t, b in boosts.items():
-        s = searcher.score_all(TermQuery(t), mode="f64")
-        parts.append(s.select("doc_id",
-                              (F.col("score") * F.lit(float(b)))
-                              .alias("score")))
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionByName(p)
-    return u.groupBy("doc_id").agg(F.sum("score").alias("score"))
+    """OR over BoostQuery-wrapped terms: score = Σ boost_t * bm25_t, in
+    one kernel job. → (doc_id, score)."""
+    from .ast import BooleanQuery, BoostQuery, Clause, Occur, TermQuery
+    return searcher.score_all(BooleanQuery(tuple(
+        Clause(Occur.SHOULD, BoostQuery(TermQuery(t), float(b)))
+        for t, b in boosts.items())), mode="f64")
 
 
 def proximity_score_all(searcher, term_a: str, term_b: str,

@@ -21,9 +21,9 @@ Spark-first restatement:
 - every surviving query is evaluated in ONE kernel pass over the batch
   index (`Searcher._kernel` with exhaustive specs — the same
   single-scan-many-queries shape as ``top_k_many``), so match cost is
-  O(batch × touched terms), not O(batch × queries); the compositions
-  the kernel does not scan (MatchAll, pure negation, FieldExistsQuery)
-  run as ``match_docs`` joins over the batch index;
+  O(batch × touched terms), not O(batch × queries); a "compose" plan
+  (MatchAll, pure negation, FieldExistsQuery: ``Searcher._compose``)
+  runs as its own ``match_docs`` over the batch index;
 - ``match_stream`` wires it to Structured Streaming via foreachBatch,
   appending (batch_id, query_id, doc_id) matches.
 
@@ -82,9 +82,9 @@ class Monitor:
                 plan = s._plan(ast)
                 if plan is None:
                     continue
-                if isinstance(plan, dict) and "tree" in plan:
+                if "tree" in plan:
                     trees[qid] = plan
-                else:       # MatchAll / unbounded / exists compositions
+                else:       # {"compose": …}
                     parts.append(s.match_docs(ast).select(
                         F.lit(qid).alias("query_id"), "doc_id"))
             # one dictionary probe for every key (it also fills the

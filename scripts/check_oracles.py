@@ -2,7 +2,9 @@
 
 Runs every __spark_entry__.queries() entry at sf0.01 (or $SF_DIR) and the
 matching oracle_sql() in DuckDB over the same parquet, then compares
-row count, column names, and order-insensitive values (columns sorted by
+column names, each column's dtype kind (integer, float, bool, string,
+datetime — a width-only difference such as int32 vs int64 prints a
+DTYPE note), row count, and order-insensitive values (columns sorted by
 name, rows sorted by all columns).
 
 Usage: python scripts/check_oracles.py [query_name ...]
@@ -23,6 +25,32 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
 TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()
+
+
+def dtype_kind(dtype) -> str:
+    """integer / float / bool / string / datetime (or the dtype's name)."""
+    api = pd.api.types
+    for kind, test in (("bool", api.is_bool_dtype),
+                       ("integer", api.is_integer_dtype),
+                       ("float", api.is_float_dtype),
+                       ("datetime", api.is_datetime64_any_dtype),
+                       ("string", api.is_object_dtype),
+                       ("string", api.is_string_dtype)):
+        if test(dtype):
+            return kind
+    return str(dtype)
+
+
+def dtype_diffs(got: pd.DataFrame, exp: pd.DataFrame) -> tuple[list, list]:
+    """→ (kind mismatches, width-only differences) per shared column, as
+    "col: got_dtype vs exp_dtype" strings."""
+    kinds, widths = [], []
+    for c in sorted(set(got.columns) & set(exp.columns)):
+        g, x = got[c].dtype, exp[c].dtype
+        if g != x:
+            out = kinds if dtype_kind(g) != dtype_kind(x) else widths
+            out.append(f"{c}: {g} vs {x}")
+    return kinds, widths
 
 
 def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -72,10 +100,15 @@ def main():
             failures.append(name)
             print(f"FAIL  {name}: duckdb error {ex}")
             continue
+        kinds, widths = dtype_diffs(got, exp)
+        if widths:
+            print(f"DTYPE {name}: {', '.join(widths)}")
         g, x = normalize(got), normalize(exp)
         status = "ok"
         if list(g.columns) != list(x.columns):
             status = f"SCHEMA got={list(g.columns)} exp={list(x.columns)}"
+        elif kinds:
+            status = f"DTYPE KIND {', '.join(kinds)}"
         elif len(g) != len(x):
             status = f"ROWS got={len(g)} exp={len(x)}"
         else:

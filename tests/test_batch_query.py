@@ -47,15 +47,15 @@ def test_batch_f64_mode(searcher):
         assert got["doc_id"].tolist() == want["doc_id"].tolist(), s
 
 
-# one member per route of the dispatch top_k, top_k_many and score_all
-# share: match-all, unbounded (the NOT-wrapper), exists, nothing (an
-# unknown term) and the kernel
+# members of both routes of the dispatch top_k, top_k_many and score_all
+# share: the composition (match-all, the NOT-wrapper, exists) and the
+# kernel tree (an unknown term, which matches nothing, and a term)
 PATH_QUERIES = {
-    "match_all": (MatchAllQuery(), "ALL"),
+    "match_all": (MatchAllQuery(), "compose"),
     "not_wrapper": (BooleanQuery((
         Clause(Occur.MUST_NOT, TermQuery("spark")),
-        Clause(Occur.SHOULD, MatchAllQuery()))), "unbounded"),
-    "exists": (FieldExistsQuery("text"), "exists"),
+        Clause(Occur.SHOULD, MatchAllQuery()))), "compose"),
+    "exists": (FieldExistsQuery("text"), "compose"),
     "unknown_term": (TermQuery("zzzqqq"), "tree"),
     "kernel": (TermQuery("merge"), "tree"),
 }

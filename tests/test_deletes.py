@@ -241,3 +241,15 @@ def test_every_reader_masks_tombstones(spark, live_base, distributed):
         assert {r[doc] for r in rows} & victims, name  # victims matched
         assert after[name] == [r for r in rows if r[doc] not in victims], \
             name
+
+
+def test_release_unpins_tombstone_table(spark, live_base):
+    """release() drops the persisted per-cell tombstone table too; the
+    released index and the one it was derived from still read (their
+    frames recompute from lineage)."""
+    idx = delete_docs(spark, live_base, [1, 2, 3], distributed=True)
+    assert idx.del_table.is_cached
+    idx.release()
+    assert not idx.del_table.is_cached
+    assert Searcher(spark, idx).count(TermQuery("alpha")) == 4
+    assert Searcher(spark, live_base).count(TermQuery("alpha")) == 7

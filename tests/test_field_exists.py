@@ -157,13 +157,42 @@ def test_must_exists_optional_should(corpus):
     assert dict(got.items()) == pytest.approx(exp)
 
 
-def test_should_exists_msm_raises(corpus):
-    _, _, s = corpus
+def _scores(s, q) -> dict:
+    return {int(r["doc_id"]): r["score"] for r in s.score_all(q).collect()}
+
+
+def test_should_exists_msm(corpus):
+    """min_should_match counts an exists clause like any SHOULD clause
+    (BooleanWeight): msm=2 over `merge` and `tag:*` keeps the tagged
+    merge docs, scored merge + 1."""
+    docs, _, s = corpus
+    tagged = _tagged_ids(docs)
     q = BooleanQuery((Clause(Occur.SHOULD, TermQuery("merge")),
                       Clause(Occur.SHOULD, FieldExistsQuery("tag"))),
                      min_should_match=2)
-    with pytest.raises(ValueError, match="min_should_match"):
-        s.score_all(q)
+    exp = {d: v + 1.0 for d, v in _scores(s, TermQuery("merge")).items()
+           if d in tagged}
+    assert exp and _scores(s, q) == pytest.approx(exp)
+
+
+def test_nested_exists(corpus):
+    """`+merge +(dup OR tag:*)` — an exists clause below the root: the
+    MUST group adds dup's score and the exists constant where each
+    matches, and bounds the match set."""
+    docs, _, s = corpus
+    tagged = _tagged_ids(docs)
+    merge = _scores(s, TermQuery("merge"))
+    dup = _scores(s, TermQuery("dup"))
+    group = {d: dup.get(d, 0.0) + (1.0 if d in tagged else 0.0)
+             for d in set(dup) | tagged}
+    q = BooleanQuery((
+        Clause(Occur.MUST, TermQuery("merge")),
+        Clause(Occur.MUST, BooleanQuery((
+            Clause(Occur.SHOULD, TermQuery("dup")),
+            Clause(Occur.SHOULD, FieldExistsQuery("tag")))))))
+    exp = {d: v + group[d] for d, v in merge.items() if d in group}
+    assert set(exp) & set(dup) and set(exp) - set(dup)
+    assert _scores(s, q) == pytest.approx(exp)
 
 
 def test_exists_respects_deletes(spark, corpus):
