@@ -17,11 +17,24 @@ Plan shape (the Spark restatement of `search/IndexSearcher.java:513,
            already contiguous. It is the one scan of every search-side
            reader (`Searcher._blocks`; the non-kernel readers decode
            through `Searcher._postings`, which drops tombstones).
-  kernel   per partition, buckets in sequence: decode → vectorized
+  kernel   per slice, buckets in sequence: decode → vectorized
            TAAT scatter-add with block-max pruning (the WANDScorer /
            BlockMaxConjunctionScorer / BooleanScorer roles in one numpy
-           kernel) → per-bucket top-k with a partition-carried threshold
-  reduce   driver merges tiny per-bucket top-k frames with the reference
+           kernel) → per-bucket top-k with a slice-carried threshold.
+           The slice is picked as IndexSearcher does
+           (IndexSearcher.java:307-359: one slice runs on the calling
+           thread): a top_k_many call whose specs decode at most
+           LOCAL_SCAN_POSTINGS postings (Σ df over each spec's live
+           keys) collects the scan in one JVM-only Arrow job and runs
+           the kernel on the driver, the whole scan one slice; above
+           it, and always for score_all and _compose, each partition is
+           a slice of one mapInPandas job. Measured on a 4-core host over the
+           serve-small index (82 block rows, 80 KB): the Arrow collect
+           takes 0.024 s and the in-process kernel 0.020 s, while a
+           mapInPandas job whose body does nothing takes 0.18 s on 1
+           partition and 0.24 s on 4 — Python task dispatch, not the
+           3 ms each worker spends inside the body.
+  reduce   driver merges tiny per-slice top-k frames with the reference
            tie-break: score desc, doc_id asc (HitQueue.java:76-81,
            TopDocs.merge TopDocs.java:34,70)
 
@@ -112,6 +125,12 @@ from .ast import (DEFAULT_FIELD, MULTI_TERM_NODES, SPAN_NODES, BooleanQuery,
 
 KERNEL_SCHEMA = "doc_id long, score double"
 MULTI_SCHEMA = "query_id int, doc_id long, score double"
+
+# top_k_many scores on the driver when its specs decode at most this many
+# postings (Σ df over each spec's live keys); above it, on the executors.
+# Bounds the driver-side collect; on a 4-core local[4] host the two sites
+# cross near 220k postings.
+LOCAL_SCAN_POSTINGS = 200_000
 
 # relative safety margin on float upper bounds (never over-prune)
 _UB_EPS = 1e-6
@@ -421,6 +440,15 @@ class Searcher:
         dtab = self.index.del_table
         return blocks if dtab is None else blocks.join(dtab, "bucket", "left")
 
+    def _collect_blocks(self, keys, buckets=None) -> pd.DataFrame:
+        """The :meth:`_blocks` scan with every channel the kernel reads,
+        collected to the driver through one Arrow ``toPandas`` and put
+        in the kernel's (bucket, field, term, block_id) order — the
+        input of an in-process kernel or explain run."""
+        channels = ("pos",) if self.index.with_positions else ()
+        return (self._blocks(keys, channels, buckets).toPandas()
+                .sort_values(["bucket", "field", "term", "block_id"]))
+
     def _kernel(self, specs, live) -> DataFrame:
         """ONE term-filtered scan over the union of the specs' live keys;
         every bucket is scored for every spec from the same Arrow
@@ -474,9 +502,22 @@ class Searcher:
         per-query heaps and thresholds. → list of pandas DataFrames
         (rank, doc_id, score), parallel to `queries`. The throughput
         mode for query logs (the benchmark harness shape,
-        ReadTask.java:54)."""
+        ReadTask.java:54).
+
+        Where the kernel runs follows the IndexSearcher slice rule
+        (IndexSearcher.java:307-359: one slice runs on the calling
+        thread): when the postings the specs decode — Σ df over each
+        spec's live keys, TermQuery's cost — are at most
+        ``LOCAL_SCAN_POSTINGS``, their blocks are collected in one
+        JVM-only Arrow job and scored in-process, one heap threshold
+        carried across every bucket; above it the kernel runs as one
+        executor job. k = 0 answers empty frames with no job."""
+        if k < 0:
+            raise ValueError(f"k must be >= 0, got {k}")
         if self.sim != "bm25":
             mode = "f64"      # non-BM25 similarities are f64-only
+        if k == 0:
+            return [_ranked(None, 0, mode) for _ in queries]
         hits = [None] * len(queries)
         specs, live, qids = [], [], []
         for qi, query in enumerate(queries):
@@ -489,7 +530,14 @@ class Searcher:
                 live.extend(r[1])
                 qids.append(qi)
         if specs:
-            pdf = self._kernel(specs, live).toPandas()
+            st = self.term_stats(live)      # cached by the spec build
+            if sum(st[key][0] for key in live) <= LOCAL_SCAN_POSTINGS:
+                frames = list(_bucket_kernel_multi(
+                    [self._collect_blocks(live)], specs))
+                pdf = (pd.concat(frames, ignore_index=True) if frames else
+                       pd.DataFrame(columns=["query_id", "doc_id", "score"]))
+            else:
+                pdf = self._kernel(specs, live).toPandas()
             for local_qi, qi in enumerate(qids):
                 hits[qi] = pdf[pdf["query_id"] == local_qi]
         return [_ranked(h, k, mode) for h in hits]
@@ -601,7 +649,9 @@ def _ranked(hits, k: int, mode: str) -> pd.DataFrame:
     """Merged hits → the top-k frame (rank, doc_id, score) under the
     reference tie-break: score desc, doc_id asc (HitQueue.java:76-81)."""
     if hits is None or len(hits) == 0:
-        return pd.DataFrame({"rank": [], "doc_id": [], "score": []})
+        return pd.DataFrame({
+            "rank": np.zeros(0, np.int64), "doc_id": np.zeros(0, np.int64),
+            "score": np.zeros(0, np.float32 if mode == "f32" else np.float64)})
     pdf = (hits.sort_values(["score", "doc_id"], ascending=[False, True],
                             kind="mergesort")
            .head(k).reset_index(drop=True))
@@ -1269,9 +1319,11 @@ def _bucket_kernel_multi(batches, specs):
     """Iterate bucket-sorted block rows; score each bucket once per spec,
     every spec with its own heap and pruning threshold.
 
-    Thresholds are carried across buckets within the partition (the
-    per-slice MaxScoreAccumulator analog — they don't cross partitions,
-    which only costs pruning efficiency, never correctness).
+    Thresholds are carried across buckets within the slice — a
+    partition of the executor job, or every bucket when the driver runs
+    the kernel (the per-slice MaxScoreAccumulator analog; they don't
+    cross slices, which only costs pruning efficiency, never
+    correctness).
     """
     buf = None
     states = [{"threshold": -np.inf, "heap": []} for _ in specs]

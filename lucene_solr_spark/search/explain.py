@@ -116,10 +116,7 @@ def explain(searcher, query, doc_ids: list[int], mode: str = "f32") -> dict:
     if dead:
         return out
     grid = spec["grid"]
-    buckets = sorted({d // grid for d in doc_ids})
-    channels = ("pos",) if searcher.index.with_positions else ()
-    pdf = (searcher._blocks(live, channels, buckets).toPandas()
-           .sort_values(["bucket", "field", "term", "block_id"]))
+    pdf = searcher._collect_blocks(live, sorted({d // grid for d in doc_ids}))
     dtype = np.float32 if mode == "f32" else np.float64
     for bucket, grp in pdf.groupby("bucket"):
         off = int(bucket) * grid

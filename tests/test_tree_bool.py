@@ -25,7 +25,7 @@ from lucene_solr_spark.search.ast import (BooleanQuery, BoostQuery, Clause,
                                           DisjunctionMaxQuery, Occur,
                                           PhraseQuery, TermQuery, rewrite)
 from lucene_solr_spark.search.executor import (_bucket_kernel_multi,
-                                               _key_filter, flatten_plan)
+                                               flatten_plan)
 
 from conftest import SF_DIR
 
@@ -192,9 +192,7 @@ def test_partition_emission_bounded(searcher, corpus):
     plan = searcher._plan(q)
     spec, live, dead = searcher._spec_for_plan(plan, "f32", k=K, prune=True)
     assert not dead
-    pdf = (searcher.index.postings.filter(_key_filter(live))
-           .toPandas().sort_values(["bucket", "field", "term", "block_id"])
-           .reset_index(drop=True))
+    pdf = searcher._collect_blocks(live)
     # the query matches far more docs than k across many buckets
     assert pdf["bucket"].nunique() > 1
     out = list(_bucket_kernel_multi([pdf], [spec]))
